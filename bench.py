@@ -47,11 +47,11 @@ HEADLINE = [
 ]
 
 # Second tier (round 9, r8 verdict item 3): the 20 most expensive
-# NON-headline keys by the tools/time_all.py sweep at sf0.01, timed
+# NON-headline keys by a one-off full-surface timing sweep at sf0.01, timed
 # best-of-1 with no warmup lap — a coarse per-round regression tripwire
 # over the wide surface (the headline tier stays the precise
 # best-of-3 signal). The list is PINNED so wide_total is comparable
-# across rounds; re-derive it with time_all.py only when the surface
+# across rounds; re-derive it with a fresh sweep only when the surface
 # changes materially, and note the re-pin in BASELINE.md.
 WIDE = [
     "graph_hits",               # unrolled mutual-reinforcement rounds

@@ -22,7 +22,6 @@ ingest capacity, not the cluster's core count).
 from __future__ import annotations
 
 import argparse
-import functools
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
@@ -134,29 +133,23 @@ def _hdu_arg(raw: str) -> int | str:
 
 
 def load_frame(spark: SparkSession, args: argparse.Namespace) -> DataFrame:
-    """Union all matched FITS inputs into one DataFrame (schema from the
-    first file's header — declared, never inferred)."""
+    """All FITS inputs as one DataFrame, from one reader call. The reader
+    plans on the driver from file headers alone: it expands the globs,
+    takes the schema from the first file's header (declared, never
+    inferred) and checks every file against it by column name, type and
+    byte size, so a bad input fails here, before any sink writes."""
     from .sources.fits import read_fits, read_fits_ascii, read_fits_image
 
-    hdu = _hdu_arg(args.hdu)
     if getattr(args, "image", False):
-        base = read_fits_image
+        reader = read_fits_image
     elif getattr(args, "ascii", False):
-        base = read_fits_ascii
+        reader = read_fits_ascii
     else:
-        base = read_fits
-    # --verify-checksum composes with every reader (all three accept the
-    # flag; checksums cover BINTABLE, TABLE and IMAGE HDUs alike)
+        reader = read_fits
+    # --verify-checksum composes with every reader (checksums cover
+    # BINTABLE, TABLE and IMAGE HDUs alike)
     verify = bool(getattr(args, "verify_checksum", False))
-    # functools.partial keeps the reader signature single-sourced: any future
-    # reader kwarg flows through instead of being dropped by a shim, and the
-    # hdu default stays defined in one place (the reader itself)
-    reader = functools.partial(base, verify_checksum=verify)
-
-    df = reader(spark, args.inputs[0], hdu=hdu)
-    for path in args.inputs[1:]:
-        df = df.unionByName(reader(spark, path, hdu=hdu, schema=df.schema))
-    return df
+    return reader(spark, args.inputs, hdu=_hdu_arg(args.hdu), verify_checksum=verify)
 
 
 def emit_ddl(schema, args: argparse.Namespace, out) -> None:

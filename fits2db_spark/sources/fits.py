@@ -1,17 +1,22 @@
-"""FITS BINTABLE ingest — the reference's core capability (SURVEY.md §1.1,
-§2.A fits_ingest), built Spark-first.
+"""FITS ingest — the reference's core capability (SURVEY.md §1.1, §2.A
+fits_ingest), built Spark-first on a pure-numpy FITS parser (FITS is a
+public fixed-format standard: 2880-byte header/data blocks, 80-char header
+cards, big-endian fixed-width binary table rows).
 
-A pure-numpy FITS parser (FITS is a public fixed-format standard: 2880-byte
-header/data blocks, 80-char header cards, big-endian fixed-width binary table
-rows — no external FITS library needed or available here), wrapped in a
-``binaryFile`` scan + ``mapInArrow`` decode so N FITS files decode in
-parallel across executors:
+Every reader goes through one read core:
 
-    files (glob) -> spark.read.format("binaryFile") -> mapInArrow(decode)
-          -> DataFrame with the schema DECLARED by the FITS header
+* one HDU walk (:func:`_walk_hdus`) over a block reader that serves bytes
+  in memory and files on disk alike, reading header blocks only;
+* one plan on the driver (:func:`plan_fits`): expand paths and globs, read
+  each file's header, declare the schema from the first header (never
+  inferred from data) and check every file against it — column names,
+  types and byte size — before any Spark job;
+* one decode to Arrow (:func:`to_batch`) that binds columns by name.
 
-Schema is never inferred from data — TTYPEn/TFORMn declare it (the
-reference's philosophy). Type map per SURVEY.md §1.2:
+Two transports carry it: ``binaryFile`` + ``mapInArrow`` (``read_fits*``
+and the CLI, one task per file) and the Python DataSource
+(``format("fits")``, row-range splits, pushdown, streaming).
+Type map per SURVEY.md §1.2:
 
     L -> boolean   X -> binary(bitfield)  B -> short (unsigned byte)
     I -> short     J -> int               K -> long
@@ -19,25 +24,22 @@ reference's philosophy). Type map per SURVEY.md §1.2:
     C -> struct<re:float,im:float>        M -> struct<re:double,im:double>
     rT (repeat>1) -> array<T>
 
-Variable-length array columns (``PT(max)`` 32-bit / ``QT(max)`` 64-bit
-descriptors into the heap) decode to ``ArrayType`` columns. Tile-compressed
-(fpack'd) BINTABLEs — ``ZTABLE = T`` with per-column RICE_1 / GZIP_1 /
-NOCOMPRESS streams — decode transparently via ``fits_compress`` (both the
-whole-file and the row-range paths; ranged reads touch only overlapped
-tiles).
-
-Scale note: one FITS file = one Arrow decode task; a 100 TB archive of FITS
-files parallelizes by file (the reference processes files serially on one
-node). Row decode is vectorized numpy (``np.frombuffer`` with a structured
-big-endian dtype), not per-row Python.
+Variable-length array columns (``PT(max)`` / ``QT(max)`` heap descriptors)
+decode to ``ArrayType`` columns. Tile-compressed (fpack'd) BINTABLEs —
+``ZTABLE = T`` — decode transparently via ``fits_compress``; ranged reads
+touch only overlapped tiles. Row decode is vectorized numpy
+(``np.frombuffer`` with a structured big-endian dtype), not per-row Python.
 """
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import io
 import math
 import os
 import re
+from typing import Callable, NamedTuple
 
 import numpy as np
 
@@ -118,43 +120,6 @@ def _card_value(raw: str) -> str:
     return "".join(out).rstrip()
 
 
-def _parse_header_blocks(next_block) -> dict:
-    """Parse one FITS header from a callable yielding 2880-byte blocks."""
-    cards: dict[str, str] = {}
-    while True:
-        block = next_block()
-        if len(block) < BLOCK:
-            raise FitsFormatError("truncated header block")
-        done = False
-        for i in range(0, BLOCK, CARD):
-            card = block[i : i + CARD].decode("ascii", errors="replace")
-            key = card[:8].strip()
-            if key == "END":
-                done = True
-                break
-            if not key or key in ("COMMENT", "HISTORY"):
-                continue
-            if card[8:10] != "= ":
-                continue
-            cards[key] = _card_value(card[10:])
-        if done:
-            return cards
-
-
-def _parse_header(buf: bytes, off: int) -> tuple[dict, int]:
-    """Parse one FITS header starting at ``off``; return (cards, next_off)."""
-    pos = off
-
-    def next_block() -> bytes:
-        nonlocal pos
-        block = buf[pos : pos + BLOCK]
-        pos += BLOCK
-        return block
-
-    cards = _parse_header_blocks(next_block)
-    return cards, pos
-
-
 def _header_int(cards: dict, key: str) -> int:
     try:
         return int(cards[key])
@@ -186,70 +151,116 @@ def _hdu_data_size(cards: dict) -> int:
     return (bitpix // 8) * gcount * (pcount + axes)
 
 
-def parse_bintable_header(data: bytes, hdu: int | str = 1) -> tuple[dict, list[dict], int]:
-    """Walk HDUs to the requested extension; return (cards, columns, data_off).
+class _Blocks(NamedTuple):
+    """Byte-range reads over one FITS file, in memory or on disk."""
 
-    ``hdu`` selects the extension by 1-based index (0 = primary is never a
-    BINTABLE) or by ``EXTNAME`` string (case-insensitive, per convention).
+    read: Callable[[int, int], bytes]
+    size: int
+
+
+@contextlib.contextmanager
+def _open_blocks(src):
+    """``src`` is a file's bytes or its path. A path is read by seeks, so a
+    caller that stops at the headers never reads a data area."""
+    if isinstance(src, (bytes, bytearray, memoryview)):
+        mem = memoryview(src)
+        yield _Blocks(lambda off, n: mem[off : off + n], len(mem))
+        return
+    with open(src, "rb") as f:
+
+        def read(off: int, n: int) -> bytes:
+            f.seek(off)
+            return f.read(n)
+
+        yield _Blocks(read, os.fstat(f.fileno()).st_size)
+
+
+class Hdu(NamedTuple):
+    """One header-data unit: its index (primary = 0), header cards, byte
+    offsets and unpadded data-area size."""
+
+    index: int
+    cards: dict
+    header_off: int
+    data_off: int
+    data_size: int
+
+    @property
+    def end(self) -> int:
+        """Offset of the next HDU: the data area padded to whole blocks."""
+        return self.data_off + math.ceil(self.data_size / BLOCK) * BLOCK
+
+
+def _parse_header(blocks: _Blocks, off: int) -> tuple[dict, int]:
+    """Parse the header starting at ``off``; return (cards, data offset)."""
+    cards: dict[str, str] = {}
+    while True:
+        block = bytes(blocks.read(off, BLOCK))
+        off += BLOCK
+        if len(block) < BLOCK:
+            raise FitsFormatError("truncated header block")
+        for i in range(0, BLOCK, CARD):
+            card = block[i : i + CARD].decode("ascii", errors="replace")
+            key = card[:8].strip()
+            if key == "END":
+                return cards, off
+            if key and key not in ("COMMENT", "HISTORY") and card[8:10] == "= ":
+                cards[key] = _card_value(card[10:])
+
+
+def _walk_hdus(blocks: _Blocks):
+    """Yield every HDU of a file in order, reading header blocks only; each
+    data area is skipped by :func:`_hdu_data_size`, never read. This is the
+    package's one HDU walk: selection, header probes, decode, the catalog
+    and the checksums all go through it."""
+    off, idx = 0, 0
+    while off < blocks.size:
+        cards, data_off = _parse_header(blocks, off)
+        hdu = Hdu(idx, cards, off, data_off, _hdu_data_size(cards))
+        yield hdu
+        off, idx = hdu.end, idx + 1
+
+
+def _find_hdu(blocks: _Blocks, hdu: int | str, kind: str) -> Hdu:
+    """Select an HDU of ``kind`` by index (1 = the first extension) or by
+    EXTNAME, compared stripped and case-insensitively for every kind."""
+    k = _KINDS[kind]
+    name = hdu.strip().upper() if isinstance(hdu, str) else None
+    for h in _walk_hdus(blocks):
+        if name is None and h.index == hdu:
+            if not k.matches(h):
+                raise FitsFormatError(
+                    f"HDU {hdu} is not a {k.label} (XTENSION={h.cards.get('XTENSION')!r})"
+                )
+            return h
+        if name is not None and k.matches(h) and h.cards.get("EXTNAME", "").strip().upper() == name:
+            return h
+    raise FitsFormatError(f"{k.label} HDU {hdu!r} not found")
+
+
+def _check_size(blocks: _Blocks, h: Hdu, where: str) -> None:
+    need = h.data_off + h.data_size
+    if blocks.size < need:
+        raise FitsFormatError(
+            f"{where}: truncated: the header declares {need} bytes, the file has {blocks.size}"
+        )
+
+
+def parse_bintable_header(src, hdu: int | str = 1) -> tuple[dict, list[dict], int]:
+    """Header-only probe of a BINTABLE given as bytes or a path; return
+    (cards, columns, data_off). ``hdu`` selects the extension by 1-based
+    index or EXTNAME.
 
     columns: [{name, tform, repeat, letter, spark_type, np_dtype,
                tnull, tscale, tzero}, ...]
     """
-    off = 0
-    cards: dict[str, str] = {}
-    found = False
-    idx = 0
-    while off < len(data):
-        cards, off = _parse_header(data, off)
-        if isinstance(hdu, str):
-            if (
-                idx > 0
-                and cards.get("XTENSION", "").startswith("BINTABLE")
-                and cards.get("EXTNAME", "").strip().upper() == hdu.strip().upper()
-            ):
-                found = True
-                break
-        elif idx == hdu:
-            found = True
-            break
-        off += math.ceil(_hdu_data_size(cards) / BLOCK) * BLOCK
-        idx += 1
-    if not found:
-        raise FitsFormatError(f"HDU {hdu!r} not found")
-    if not cards.get("XTENSION", "").startswith("BINTABLE"):
-        raise FitsFormatError(f"HDU {hdu} is not a BINTABLE (XTENSION={cards.get('XTENSION')!r})")
-    return cards, _parse_columns(cards), off
+    with _open_blocks(src) as b:
+        h = _find_hdu(b, hdu, "bintable")
+    return h.cards, _parse_columns(h.cards), h.data_off
 
 
-def parse_bintable_header_path(path: str, hdu: int | str = 1) -> tuple[dict, list[dict], int]:
-    """Header-only probe of a FITS file on disk: walk HDUs with seeks,
-    reading ONLY header blocks (never data) — O(headers) I/O however large
-    the file. This is what lets the data source plan row-range partitions
-    for a multi-GB BINTABLE without touching its payload."""
-    with open(path, "rb") as f:
-        off = 0
-        idx = 0
-        while True:
-            f.seek(off)
-            try:
-                cards = _parse_header_blocks(lambda: f.read(BLOCK))
-            except FitsFormatError:
-                raise FitsFormatError(f"HDU {hdu!r} not found") from None
-            hdr_end = f.tell()
-            if isinstance(hdu, str):
-                if (
-                    idx > 0
-                    and cards.get("XTENSION", "").startswith("BINTABLE")
-                    and cards.get("EXTNAME", "").strip().upper() == hdu.strip().upper()
-                ):
-                    break
-            elif idx == hdu:
-                break
-            off = hdr_end + math.ceil(_hdu_data_size(cards) / BLOCK) * BLOCK
-            idx += 1
-    if not cards.get("XTENSION", "").startswith("BINTABLE"):
-        raise FitsFormatError(f"HDU {hdu} is not a BINTABLE (XTENSION={cards.get('XTENSION')!r})")
-    return cards, _parse_columns(cards), hdr_end
+# the path form of the probe: :func:`parse_bintable_header` seeks on a path
+parse_bintable_header_path = parse_bintable_header
 
 
 def _parse_columns(cards: dict) -> list[dict]:
@@ -409,31 +420,14 @@ def format_tdisp(col, tdisp: str):
 _NP_TARGET = {ShortType: "i2", IntegerType: "i4", LongType: "i8"}
 
 
-def decode_bintable(data: bytes, hdu: int | str = 1):
-    """bytes -> (schema, list-of-column numpy/object arrays) for one file.
+def decode_bintable(src, hdu: int | str = 1):
+    """A BINTABLE given as bytes or a path -> (schema, column arrays).
 
     Column arrays are 1D for scalar columns, 2D (nrows x repeat) for
     repeat>1 columns, and ``np.ma.MaskedArray`` where a TNULLn sentinel
     declares nulls — :func:`to_arrow_columns` turns all three into Arrow
     arrays (list-typed for 2D, null-bearing for masked)."""
-    cards, cols, off = parse_bintable_header(data, hdu)
-    if cards.get("ZTABLE", "").strip() == "T":
-        from .fits_compress import decode_compressed_bintable
-
-        return decode_compressed_bintable(data, cards, cols, off)
-    nrows = _header_int(cards, "NAXIS2")
-    rowbytes = _header_int(cards, "NAXIS1")
-    dtype = np.dtype([(c["name"], c["np_dtype"]) for c in cols])
-    if dtype.itemsize != rowbytes:
-        raise FitsFormatError(
-            f"row width mismatch: dtype {dtype.itemsize} vs NAXIS1 {rowbytes}"
-        )
-    raw = np.frombuffer(data, dtype=dtype, count=nrows, offset=off)
-    # heap (variable-length array storage) starts THEAP bytes into the data
-    # area; default THEAP = the fixed-width row block
-    heap0 = off + int(cards.get("THEAP", rowbytes * nrows))
-    out = _decode_columns(cols, raw, memoryview(data)[heap0:])
-    return fits_spark_schema(cols), out
+    return _decode(src, hdu, "bintable")
 
 
 def decode_bintable_range(
@@ -442,34 +436,61 @@ def decode_bintable_range(
     """Decode ONLY rows [row_start, row_start+row_count) of a BINTABLE on
     disk — the partitioned-read primitive: fixed-width rows make the byte
     range exact (data_off + row_start*NAXIS1), so a 100 GB table splits into
-    independent seek+read chunks with no coordination. Variable-length (P/Q)
-    columns additionally read the heap region once per chunk (descriptor
-    offsets are heap-relative, so any row subset resolves against it)."""
-    cards, cols, off = parse_bintable_header_path(path, hdu)
+    independent seek+read chunks with no coordination."""
+    return _decode(path, hdu, "bintable", row_start, row_count)
+
+
+def _decode(src, hdu: int | str, kind: str, *rows):
+    """Select, size-check and decode one HDU of ``kind`` from bytes or a path."""
+    with _open_blocks(src) as b:
+        h = _find_hdu(b, hdu, kind)
+        name = src if isinstance(src, (str, os.PathLike)) else "FITS bytes"
+        _check_size(b, h, f"{name} HDU {h.index}")
+        return _KINDS[kind].decode(b, h, *rows)
+
+
+def _row_range(nrows: int, row_start: int, row_count: int | None) -> tuple[int, int]:
+    """Clamp a requested row range to a table: (first row, row count)."""
+    start = min(max(row_start, 0), nrows)
+    return start, nrows - start if row_count is None else max(0, min(row_count, nrows - start))
+
+
+def _decode_bintable_hdu(b: _Blocks, h: Hdu, row_start: int = 0, row_count: int | None = None):
+    """The one BINTABLE row-decode core, for whole tables and row ranges:
+    reads only the selected rows and, for variable-length (P/Q) columns,
+    the heap (descriptor offsets are heap-relative, so any row subset
+    resolves against it)."""
+    cards = h.cards
+    cols = _parse_columns(cards)
     if cards.get("ZTABLE", "").strip() == "T":
         from .fits_compress import decode_compressed_range
 
-        return decode_compressed_range(path, cards, cols, off, row_start, row_count)
+        return decode_compressed_range(b.read, cards, cols, h.data_off, row_start, row_count)
     nrows = _header_int(cards, "NAXIS2")
     rowbytes = _header_int(cards, "NAXIS1")
-    start = min(max(row_start, 0), nrows)
-    cnt = nrows - start if row_count is None else max(0, min(row_count, nrows - start))
+    start, cnt = _row_range(nrows, row_start, row_count)
     dtype = np.dtype([(c["name"], c["np_dtype"]) for c in cols])
     if dtype.itemsize != rowbytes:
         raise FitsFormatError(
             f"row width mismatch: dtype {dtype.itemsize} vs NAXIS1 {rowbytes}"
         )
-    heap_buf = b""
-    with open(path, "rb") as f:
-        f.seek(off + start * rowbytes)
-        raw = np.frombuffer(f.read(cnt * rowbytes), dtype=dtype, count=cnt)
-        if any(c["letter"] in ("P", "Q") for c in cols):
-            theap = int(cards.get("THEAP", rowbytes * nrows))
-            pcount = int(cards.get("PCOUNT", 0))
-            # heap spans [data_off+THEAP, data_off + NAXIS1*NAXIS2 + PCOUNT)
-            f.seek(off + theap)
-            heap_buf = f.read(rowbytes * nrows + pcount - theap)
-    return fits_spark_schema(cols), _decode_columns(cols, raw, heap_buf)
+    raw = np.frombuffer(b.read(h.data_off + start * rowbytes, cnt * rowbytes), dtype=dtype, count=cnt)
+    heap = b""
+    if any(c["letter"] in ("P", "Q") for c in cols):
+        # the heap spans [data_off + THEAP, data_off + NAXIS1*NAXIS2 + PCOUNT)
+        theap = int(cards.get("THEAP", rowbytes * nrows))
+        heap = b.read(h.data_off + theap, h.data_size - theap)
+    return fits_spark_schema(cols), _decode_columns(cols, raw, heap)
+
+
+def _bintable_schema(cards: dict) -> StructType:
+    """Declared schema of a BINTABLE header; a tile-compressed table
+    (ZTABLE = T) declares its original columns in ZFORMn."""
+    if cards.get("ZTABLE", "").strip() == "T":
+        from .fits_compress import _orig_columns
+
+        return fits_spark_schema(_orig_columns(cards))
+    return fits_spark_schema(_parse_columns(cards))
 
 
 def _decode_columns(cols: list[dict], raw: np.ndarray, heap_buf) -> list:
@@ -560,90 +581,178 @@ def to_arrow_columns(schema: StructType, out: list):
 
 
 # ---------------------------------------------------------------------------
-# Spark reader
+# The read plan (driver) and the decode to Arrow (executors)
 # ---------------------------------------------------------------------------
+
+def resolve_paths(path: str | None) -> list[str]:
+    """Expand one path — a file, a directory or a glob — on the driver into
+    the sorted FITS files it names. A directory's hidden (``.``/``_``)
+    files are skipped, as Spark's file sources skip them."""
+    if not path:
+        raise ValueError("a FITS read requires a path")
+    path = path.removeprefix("file:")
+    if os.path.isdir(path):
+        path = os.path.join(path, "[!_.]*")
+    return sorted(p for p in glob.glob(path) if os.path.isfile(p))
+
+
+def header_schema(path: str, hdu: int | str = 1, kind: str = "bintable") -> StructType:
+    """The schema one file's header declares, from its header blocks alone."""
+    with _open_blocks(path) as b:
+        return _KINDS[kind].schema(_find_hdu(b, hdu, kind).cards)
+
+
+class FitsPlan(NamedTuple):
+    """A checked FITS read: the declared schema and each file's selected HDU."""
+
+    schema: StructType
+    files: list[tuple[str, Hdu]]
+
+
+def plan_fits(
+    path: str | list[str],
+    hdu: int | str = 1,
+    kind: str = "bintable",
+    schema: StructType | None = None,
+) -> FitsPlan:
+    """The one plan of a FITS read, made on the driver before any Spark job.
+
+    Expands ``path`` (a file, directory or glob, or a list of them; each
+    must match a file), reads only the header blocks of every file, and
+    checks each against the declared schema — ``schema`` if given, else the
+    first file's header. Columns match by name; their types must be equal,
+    except that a given ``schema`` may widen integer and float columns. A
+    file that differs, or is shorter than its header declares, raises
+    :class:`FitsFormatError` naming the file, HDU and column."""
+    widen = schema is not None
+    files: dict[str, Hdu] = {}
+    for p in [path] if isinstance(path, str) else path:
+        matched = resolve_paths(p)
+        if not matched:
+            raise FileNotFoundError(f"no FITS files match {p!r}")
+        for f in matched:
+            with _open_blocks(f) as b:
+                try:
+                    h = _find_hdu(b, hdu, kind)
+                except FitsFormatError as e:
+                    raise FitsFormatError(f"{f}: {e}") from None
+                where = f"{f} HDU {h.index}"
+                _check_size(b, h, where)
+            got = _KINDS[kind].schema(h.cards)
+            schema = got if schema is None else _check_schema(where, got, schema, widen)
+            files[f] = h
+    return FitsPlan(schema, list(files.items()))
+
+
+# file column types a caller's schema may widen; to_batch casts the column
+_WIDENS = {"int": ("smallint",), "bigint": ("smallint", "int"), "double": ("float",)}
+
+
+def _check_schema(where: str, got: StructType, declared: StructType, widen: bool) -> StructType:
+    """Check a file's columns against the declared schema by name: the same
+    set, each of the declared type (or, with ``widen``, one it widens).
+    Returns the declared schema, nullable wherever the file's is."""
+    have = {f.name: f for f in got.fields}
+    missing = [n for n in declared.names if n not in have]
+    if missing:
+        raise FitsFormatError(f"{where}: column {missing[0]!r} is missing")
+    extra = [n for n in have if n not in declared.names]
+    if extra:
+        raise FitsFormatError(f"{where}: column {extra[0]!r} is not in the declared schema")
+    fields = []
+    for f in declared.fields:
+        g = have[f.name]
+        t, want = g.dataType.simpleString(), f.dataType.simpleString()
+        if g.dataType != f.dataType and not (widen and t in _WIDENS.get(want, ())):
+            raise FitsFormatError(f"{where}: column {f.name!r} is {t}, declared {want}")
+        fields.append(StructField(f.name, f.dataType, f.nullable or g.nullable, f.metadata))
+    return StructType(fields)
+
+
+def to_batch(schema: StructType, decoded, where: str):
+    """The one decode-to-Arrow step: a file's decoded (schema, columns) as
+    an Arrow batch of the declared ``schema``. Columns are bound by name,
+    never by position, and cast where the declared type widens the file's."""
+    import pyarrow as pa
+
+    file_schema, cols = decoded
+    arrays = dict(zip(file_schema.names, to_arrow_columns(file_schema, cols)))
+    wide = {"int": pa.int32(), "bigint": pa.int64(), "double": pa.float64()}
+    out = []
+    for f in schema.fields:
+        if f.name not in arrays:
+            raise FitsFormatError(f"{where}: column {f.name!r} is missing")
+        a = arrays[f.name]
+        target = wide.get(f.dataType.simpleString())
+        out.append(a.cast(target) if target is not None and a.type != target else a)
+    return pa.RecordBatch.from_arrays(out, names=schema.names)
+
 
 def read_fits(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     hdu: int | str = 1,
     schema: StructType | None = None,
     verify_checksum: bool = False,
 ) -> DataFrame:
-    """Read a FITS file / glob of files into a DataFrame.
+    """Read FITS BINTABLE(s) — a file, directory or glob, or a list of
+    them — into one DataFrame.
 
     ``hdu`` selects the BINTABLE extension by 1-based index or EXTNAME.
-    ``schema`` may be passed to skip the driver-side header probe; otherwise
-    the first file's header declares it (never inferred from row data).
-    ``verify_checksum=True`` validates the public CHECKSUM/DATASUM
-    convention on every HDU of every file, executor-side before decode,
-    and fails the job on the first corrupt HDU (files without the
-    keywords pass — unprotected is not corrupt).
+    :func:`plan_fits` reads every file's header on the driver and declares
+    the schema (``schema`` if given, else the first file's header; never
+    inferred from row data); columns bind by name. ``verify_checksum=True``
+    validates the public CHECKSUM/DATASUM convention on every HDU of every
+    file, executor-side before decode, and fails the job on the first
+    corrupt HDU (files without the keywords pass — unprotected is not
+    corrupt).
     """
-    return _read_fits_with(
-        spark, path, hdu, schema, _maybe_verifying(decode_bintable, verify_checksum)
-    )
-
-
-def _maybe_verifying(decoder, verify: bool):
-    """Wrap any (bytes, hdu) -> (schema, cols) decoder with executor-side
-    CHECKSUM/DATASUM validation — HDUs of every kind (BINTABLE, TABLE,
-    IMAGE) are covered because :func:`verify_checksums` walks the whole
-    file. Shared by all three readers so the flag composes identically."""
-    if not verify:
-        return decoder
-
-    def verifying(data: bytes, h: int | str = 1):
-        for r in verify_checksums(data):
-            if r["datasum_ok"] is False or r["checksum_ok"] is False:
-                raise FitsFormatError(
-                    f"FITS checksum mismatch in HDU {r['hdu']}"
-                    f" (extname={r['extname']!r})"
-                )
-        return decoder(data, h)
-
-    return verifying
+    return _read_fits_with(spark, path, hdu, schema, "bintable", verify_checksum)
 
 
 def read_fits_ascii(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     hdu: int | str = 1,
     schema: StructType | None = None,
     verify_checksum: bool = False,
 ) -> DataFrame:
-    """Read ASCII TABLE extension(s) into a DataFrame (same per-file
-    parallel decode as :func:`read_fits`, using :func:`decode_asciitable`;
-    ``verify_checksum`` behaves exactly as in :func:`read_fits`)."""
-    return _read_fits_with(
-        spark, path, hdu, schema, _maybe_verifying(decode_asciitable, verify_checksum)
-    )
+    """Read ASCII TABLE extension(s) into a DataFrame (same plan and
+    per-file parallel decode as :func:`read_fits`, using
+    :func:`decode_asciitable`)."""
+    return _read_fits_with(spark, path, hdu, schema, "ascii", verify_checksum)
 
 
-def _read_fits_with(spark, path, hdu, schema, decoder) -> DataFrame:
-    import pyarrow as pa
-
+def _read_fits_with(spark, path, hdu, schema, kind, verify) -> DataFrame:
+    """The ``binaryFile`` + ``mapInArrow`` transport: one decode task per
+    planned file."""
     from ..session import ensure_runtime_confs
 
+    plan = plan_fits(path, hdu, kind, schema)
+    schema = plan.schema
     ensure_runtime_confs(spark)  # ships this package to executor workers
-    files = spark.read.format("binaryFile").load(path)
-    if schema is None:
-        first = files.select("content").limit(1).collect()
-        if not first:
-            raise FitsFormatError(f"no files matched {path!r}")
-        s, _ = decoder(bytes(first[0][0]), hdu)
-        schema = s
-
-    names = [f.name for f in schema.fields]
 
     def decode_files(batches):
         for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            for payload in tbl.column("content"):
-                s, cols = decoder(payload.as_py(), hdu)
-                yield pa.RecordBatch.from_arrays(to_arrow_columns(s, cols), names=names)
+            for p, payload in zip(batch.column("path").to_pylist(), batch.column("content")):
+                data = payload.as_py()
+                if verify:
+                    _verify_or_raise(data, p)
+                yield to_batch(schema, _decode(data, hdu, kind), f"{p} HDU {hdu!r}")
 
-    return files.select("content").mapInArrow(decode_files, schema=schema)
+    files = spark.read.format("binaryFile").load([p for p, _ in plan.files])
+    return files.select("path", "content").mapInArrow(decode_files, schema)
+
+
+def _verify_or_raise(data: bytes, where: str) -> None:
+    """CHECKSUM/DATASUM validation of every HDU of a file — BINTABLE, TABLE
+    and IMAGE alike, so the flag composes identically with every reader."""
+    for r in verify_checksums(data):
+        if r["datasum_ok"] is False or r["checksum_ok"] is False:
+            raise FitsFormatError(
+                f"{where}: FITS checksum mismatch in HDU {r['hdu']}"
+                f" (extname={r['extname']!r})"
+            )
 
 
 # ---------------------------------------------------------------------------
@@ -895,39 +1004,14 @@ def _bintable_ext(
 _ASCII_TFORM_RE = re.compile(r"^([AIFED])(\d+)(?:\.(\d+))?$")
 
 
-def parse_asciitable_header(data: bytes, hdu: int | str = 1) -> tuple[dict, list[dict], int]:
-    """Walk HDUs to an ASCII TABLE extension; return (cards, columns, data_off).
+def _ascii_columns(cards: dict) -> list[dict]:
+    """Columns an ASCII TABLE header declares.
 
     ASCII tables (the older FITS table flavor, still common for small
     catalogs) store each row as NAXIS1 characters; TBCOLn gives the 1-based
     start column, TFORMn one of Aw / Iw / Fw.d / Ew.d / Dw.d. TNULLn is a
     literal string that marks a null field; TSCALn/TZEROn scale numerics
     exactly as in binary tables."""
-    off = 0
-    cards: dict[str, str] = {}
-    found = False
-    idx = 0
-    while off < len(data):
-        cards, off = _parse_header(data, off)
-        if isinstance(hdu, str):
-            if (
-                idx > 0
-                and cards.get("XTENSION", "").startswith("TABLE")
-                and cards.get("EXTNAME", "").strip().upper() == hdu.strip().upper()
-            ):
-                found = True
-                break
-        elif idx == hdu:
-            found = True
-            break
-        off += math.ceil(_hdu_data_size(cards) / BLOCK) * BLOCK
-        idx += 1
-    if not found:
-        raise FitsFormatError(f"HDU {hdu!r} not found")
-    if not cards.get("XTENSION", "").startswith("TABLE"):
-        raise FitsFormatError(
-            f"HDU {hdu} is not an ASCII TABLE (XTENSION={cards.get('XTENSION')!r})"
-        )
     tfields = _header_int(cards, "TFIELDS")
     cols = []
     for i in range(1, tfields + 1):
@@ -955,17 +1039,21 @@ def parse_asciitable_header(data: bytes, hdu: int | str = 1) -> tuple[dict, list
                 disp=cards.get(f"TDISP{i}", "").strip() or None,
             )
         )
-    return cards, cols, off
+    return cols
 
 
-def decode_asciitable(data: bytes, hdu: int | str = 1):
-    """bytes -> (schema, columns) for one ASCII TABLE HDU.
+def decode_asciitable(src, hdu: int | str = 1):
+    """One ASCII TABLE HDU, given as bytes or a path -> (schema, columns)."""
+    return _decode(src, hdu, "ascii")
 
-    Vectorized: a structured dtype with explicit field OFFSETS (TBCOLn-1)
+
+def _decode_ascii_hdu(b: _Blocks, h: Hdu):
+    """Vectorized: a structured dtype with explicit field OFFSETS (TBCOLn-1)
     slices every field of every row in one frombuffer — no per-row Python.
     Null fields (blank or == the TNULLn string) become masked entries;
     Fortran 'D' exponents are folded to 'E' before float conversion."""
-    cards, cols, off = parse_asciitable_header(data, hdu)
+    cards = h.cards
+    cols = _ascii_columns(cards)
     nrows = _header_int(cards, "NAXIS2")
     rowbytes = _header_int(cards, "NAXIS1")
     dtype = np.dtype(
@@ -976,7 +1064,7 @@ def decode_asciitable(data: bytes, hdu: int | str = 1):
             "itemsize": rowbytes,
         }
     )
-    raw = np.frombuffer(data, dtype=dtype, count=nrows, offset=off)
+    raw = np.frombuffer(b.read(h.data_off, nrows * rowbytes), dtype=dtype, count=nrows)
     out = []
     for c in cols:
         a = np.char.strip(raw[c["name"]])
@@ -1001,8 +1089,7 @@ def decode_asciitable(data: bytes, hdu: int | str = 1):
         if null_mask.any():
             v = np.ma.MaskedArray(v, mask=null_mask)
         out.append(v)
-    schema = fits_spark_schema(cols)
-    return schema, out
+    return fits_spark_schema(cols), out
 
 
 def write_fits_asciitable(
@@ -1136,15 +1223,11 @@ def add_checksums(blob: bytes) -> bytes:
     0xFFFFFFFF — asserted here, so a miswritten card can never leave
     this function."""
     out = bytearray()
-    off = 0
-    while off < len(blob):
-        cards, data_off = _parse_header(blob, off)
-        dsize = _hdu_data_size(cards)
-        padded = (dsize + BLOCK - 1) // BLOCK * BLOCK
-        data = blob[data_off : data_off + padded]
+    for h in _complete_hdus(blob):
+        data = blob[h.data_off : h.end]
         recs = [
             r
-            for r in _header_records(blob, off, data_off)
+            for r in _header_records(blob, h.header_off, h.data_off)
             if r[:8].rstrip() not in (b"DATASUM", b"CHECKSUM")
         ]
         recs.append(_card("DATASUM", str(_sum32(data))))
@@ -1159,7 +1242,6 @@ def add_checksums(blob: bytes) -> bytes:
         if _sum32(bytes(header) + data) != 0xFFFFFFFF:
             raise FitsFormatError("checksum encoding failed self-verification")
         out += bytes(header) + data
-        off = data_off + padded
     return bytes(out)
 
 
@@ -1179,23 +1261,15 @@ def verify_checksums(blob: bytes) -> list[dict]:
     needs no special case: CHECKSUM's whole-HDU sum covers those bytes
     and fails on its own.)"""
     results = []
-    off = 0
-    idx = 0
-    while off < len(blob):
-        cards, data_off = _parse_header(blob, off)
-        dsize = _hdu_data_size(cards)
-        padded = (dsize + BLOCK - 1) // BLOCK * BLOCK
-        if data_off + padded > len(blob):
-            raise FitsFormatError("truncated HDU data area")
-        data = blob[data_off : data_off + padded]
-        entry: dict = {"hdu": idx, "extname": cards.get("EXTNAME")}
+    for h in _complete_hdus(blob):
+        cards = h.cards
+        data = blob[h.data_off : h.end]
+        entry: dict = {"hdu": h.index, "extname": cards.get("EXTNAME")}
         entry["datasum_ok"] = (
             int(cards["DATASUM"]) == _sum32(data) if "DATASUM" in cards else None
         )
         if "CHECKSUM" in cards:
-            entry["checksum_ok"] = (
-                _sum32(blob[off : data_off + padded]) == 0xFFFFFFFF
-            )
+            entry["checksum_ok"] = _sum32(blob[h.header_off : h.end]) == 0xFFFFFFFF
         elif "DATASUM" in cards:
             # stamped files carry BOTH; a lone DATASUM means the CHECKSUM
             # card was destroyed — tamper evidence, not 'unprotected'
@@ -1203,9 +1277,16 @@ def verify_checksums(blob: bytes) -> list[dict]:
         else:
             entry["checksum_ok"] = None
         results.append(entry)
-        off = data_off + padded
-        idx += 1
     return results
+
+
+def _complete_hdus(blob: bytes) -> list[Hdu]:
+    """Every HDU of an in-memory file, each with its whole padded data area."""
+    with _open_blocks(blob) as b:
+        hdus = list(_walk_hdus(b))
+    if hdus and hdus[-1].end > len(blob):
+        raise FitsFormatError("truncated HDU data area")
+    return hdus
 
 
 def catalog_hdus(blob: bytes) -> list[dict]:
@@ -1216,28 +1297,20 @@ def catalog_hdus(blob: bytes) -> list[dict]:
     the manifest step a bulk loader runs before scheduling per-HDU ingest
     jobs: which extensions exist, under what names, and how big each is."""
     out = []
-    off = 0
-    idx = 0
-    while off < len(blob):
-        cards, data_off = _parse_header(blob, off)
-        dsize = _hdu_data_size(cards)
-        padded = (dsize + BLOCK - 1) // BLOCK * BLOCK
-        if data_off + padded > len(blob):
-            raise FitsFormatError("truncated HDU data area")
+    for h in _complete_hdus(blob):
+        cards = h.cards
         xt = str(cards.get("XTENSION", "PRIMARY")).strip()
         naxis = _header_int(cards, "NAXIS")
         out.append(
             {
-                "hdu": idx,
+                "hdu": h.index,
                 "extname": cards.get("EXTNAME"),
                 "xtension": xt,
                 "n_rows": _header_int(cards, "NAXIS2") if naxis >= 2 else 0,
                 "n_cols": int(cards["TFIELDS"]) if "TFIELDS" in cards else 0,
-                "data_bytes": dsize,
+                "data_bytes": h.data_size,
             }
         )
-        off = data_off + padded
-        idx += 1
     return out
 
 
@@ -1248,9 +1321,8 @@ def read_fits_catalog(spark: SparkSession, path: str) -> DataFrame:
     mapInArrow — header blocks only, no data decode, so the scan cost is
     O(files), not O(bytes); at archive scale this is the planning query
     that decides which HDUs are worth a full ingest pass."""
-    import os as _os
-
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from ..session import ensure_runtime_confs
 
@@ -1267,36 +1339,15 @@ def read_fits_catalog(spark: SparkSession, path: str) -> DataFrame:
             StructField("data_bytes", LongType()),
         ]
     )
+    arrow_schema = to_arrow_schema(schema)
 
     def walk(batches):
         for batch in batches:
-            tbl = pa.Table.from_batches([batch])
             rows: list[dict] = []
-            for pathv, payload in zip(tbl.column("path"), tbl.column("content")):
-                base = _os.path.basename(str(pathv.as_py()))
-                for e in catalog_hdus(payload.as_py()):
-                    rows.append(
-                        {
-                            "file": base,
-                            "hdu": e["hdu"],
-                            "extname": e["extname"],
-                            "xtension": e["xtension"],
-                            "n_rows": e["n_rows"],
-                            "n_cols": e["n_cols"],
-                            "data_bytes": e["data_bytes"],
-                        }
-                    )
-            yield pa.RecordBatch.from_pylist(rows, schema=pa.schema(
-                [
-                    pa.field("file", pa.string()),
-                    pa.field("hdu", pa.int32()),
-                    pa.field("extname", pa.string()),
-                    pa.field("xtension", pa.string()),
-                    pa.field("n_rows", pa.int64()),
-                    pa.field("n_cols", pa.int32()),
-                    pa.field("data_bytes", pa.int64()),
-                ]
-            ))
+            for pathv, payload in zip(batch.column("path").to_pylist(), batch.column("content")):
+                base = os.path.basename(pathv)
+                rows += [{"file": base, **e} for e in catalog_hdus(payload.as_py())]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     return files.select("path", "content").mapInArrow(walk, schema=schema)
 
@@ -1316,12 +1367,14 @@ def write_fits_image(
     out: io.IOBase | None = None,
     blank: int | None = None,
 ) -> bytes:
-    """Build a FITS file whose first extension is a 2-D IMAGE HDU. BITPIX
-    follows the array dtype; BSCALE/BZERO are written as given (the stored
-    integers are the RAW values — physical = BZERO + BSCALE * raw, applied
-    by the reader per the standard). ``blank`` emits the BLANK card — the
-    integer-image undefined-pixel sentinel (FITS 4.0 §4.4.2.5, integer
-    BITPIX only), the IMAGE-HDU analogue of a BINTABLE TNULLn."""
+    """Build a FITS file whose first extension is an IMAGE HDU: 2-D, or a
+    3-D spectral cube indexed [z, y, x] (C order matches the FITS
+    axis-1-fastest serialization). BITPIX follows the array dtype;
+    BSCALE/BZERO are written as given (the stored integers are the RAW
+    values — physical = BZERO + BSCALE * raw, applied by the reader per
+    the standard). ``blank`` emits the BLANK card — the integer-image
+    undefined-pixel sentinel (FITS 4.0 §4.4.2.5, integer BITPIX only), the
+    IMAGE-HDU analogue of a BINTABLE TNULLn."""
     if blank is not None and data.dtype.kind not in "iu":
         raise FitsFormatError("BLANK is only defined for integer BITPIX")
     inv = {v.lstrip(">"): k for k, v in _BITPIX_DTYPES.items()}
@@ -1329,13 +1382,11 @@ def write_fits_image(
     if key not in inv:
         raise FitsFormatError(f"unsupported image dtype {data.dtype}")
     bitpix = inv[key]
-    h, w = data.shape
     cards = [
         _card("XTENSION", "IMAGE"),
         _card("BITPIX", bitpix),
-        _card("NAXIS", 2),
-        _card("NAXIS1", w),
-        _card("NAXIS2", h),
+        _card("NAXIS", data.ndim),
+        *[_card(f"NAXIS{a}", n) for a, n in enumerate(reversed(data.shape), start=1)],
         _card("PCOUNT", 0),
         _card("GCOUNT", 1),
     ]
@@ -1356,59 +1407,59 @@ def write_fits_image(
     return blob
 
 
-def decode_image(data: bytes, hdu: int | str = 1):
-    """IMAGE HDU -> (schema, [x, y, val]) pixel table: one row per pixel,
+# a cube is a 3-D image: NAXIS1 = x, NAXIS2 = y, NAXIS3 = channel
+write_fits_cube = write_fits_image
+
+
+def decode_image(src, hdu: int | str = 1):
+    """2-D IMAGE HDU -> (schema, [x, y, val]) pixel table: one row per pixel,
     x = column (NAXIS1, the fastest axis), y = row, val = the PHYSICAL
     value BZERO + BSCALE * raw as double. The same (schema, columns)
     contract as :func:`decode_bintable`, so the parallel Spark read path
     is shared."""
-    off, idx = 0, 0
-    while True:
-        cards, data_off = _parse_header(data, off)
-        is_image = (idx == 0 and cards.get("SIMPLE") == "T") or cards.get(
-            "XTENSION", ""
-        ).strip() == "IMAGE"
-        match = (
-            is_image
-            and _header_int(cards, "NAXIS") == 2
-            and (
-                (isinstance(hdu, int) and idx == hdu)
-                or (isinstance(hdu, str) and cards.get("EXTNAME") == hdu)
-            )
-        )
-        if match:
-            break
-        dsize = _hdu_data_size(cards)
-        off = data_off + (dsize + BLOCK - 1) // BLOCK * BLOCK
-        idx += 1
-        if off >= len(data):
-            raise FitsFormatError(f"IMAGE HDU {hdu!r} not found")
-    w = _header_int(cards, "NAXIS1")
-    h = _header_int(cards, "NAXIS2")
+    return _decode(src, hdu, "image")
+
+
+def decode_cube(src, hdu: int | str = 1):
+    """3-D IMAGE HDU -> (x, y, z, val) voxel table: z is the channel
+    (NAXIS3); otherwise as :func:`decode_image`."""
+    return _decode(src, hdu, "cube")
+
+
+def _pixel_schema(cards: dict) -> StructType:
+    """One integer coordinate column per axis (x = NAXIS1, the fastest) and
+    the physical value; ``val`` is nullable only where BLANK declares an
+    undefined-pixel sentinel (integer BITPIX only)."""
+    naxis = _header_int(cards, "NAXIS")
+    blank = "BLANK" in cards and _header_int(cards, "BITPIX") > 0
+    return StructType(
+        [StructField(a, IntegerType(), False) for a in ("x", "y", "z")[:naxis]]
+        + [StructField("val", DoubleType(), blank)]
+    )
+
+
+def _decode_pixels(b: _Blocks, h: Hdu):
+    """IMAGE HDU of any supported NAXIS -> one row per pixel or voxel."""
+    cards = h.cards
+    shape = [_header_int(cards, f"NAXIS{a}") for a in range(1, _header_int(cards, "NAXIS") + 1)]
     bitpix = _header_int(cards, "BITPIX")
     try:
         dt = np.dtype(_BITPIX_DTYPES[bitpix])
     except KeyError as e:
         raise FitsFormatError(f"bad BITPIX {bitpix}") from e
-    bscale = float(cards.get("BSCALE", 1.0))
-    bzero = float(cards.get("BZERO", 0.0))
+    n = math.prod(shape)
+    raw = np.frombuffer(b.read(h.data_off, n * dt.itemsize), dtype=dt, count=n)
+    # axis a varies every prod(shape[:a]) values and repeats prod(shape[a+1:]) times
+    coords = [
+        np.tile(np.repeat(np.arange(size, dtype="i4"), math.prod(shape[:a])), math.prod(shape[a + 1 :]))
+        for a, size in enumerate(shape)
+    ]
+    val = float(cards.get("BZERO", 0.0)) + float(cards.get("BSCALE", 1.0)) * raw.astype("f8")
     # BLANK: undefined-pixel sentinel on RAW stored values (integer BITPIX
     # only, like a BINTABLE TNULLn) -> SQL NULL after scaling
-    blank = int(cards["BLANK"]) if "BLANK" in cards and bitpix > 0 else None
-    raw = np.frombuffer(data, dtype=dt, count=w * h, offset=data_off)
-    x = np.tile(np.arange(w, dtype="i4"), h)
-    y = np.repeat(np.arange(h, dtype="i4"), w)
-    val = bzero + bscale * raw.astype("f8")
-    if blank is not None:
-        val = np.ma.MaskedArray(val, mask=raw == blank)
-    schema = StructType(
-        [
-            StructField("x", IntegerType(), False),
-            StructField("y", IntegerType(), False),
-            StructField("val", DoubleType(), blank is not None),
-        ]
-    )
-    return schema, [x, y, val]
+    if "BLANK" in cards and bitpix > 0:
+        val = np.ma.MaskedArray(val, mask=raw == int(cards["BLANK"]))
+    return _pixel_schema(cards), [*coords, val]
 
 
 def read_fits_image(
@@ -1423,112 +1474,7 @@ def read_fits_image(
     :func:`read_fits` (and the same ``verify_checksum`` contract); the
     tabular view is what makes array data joinable (source catalogs x
     cutouts) in the same engine as everything else."""
-    return _read_fits_with(
-        spark, path, hdu, schema, _maybe_verifying(decode_image, verify_checksum)
-    )
-
-
-def write_fits_cube(
-    data: "np.ndarray",
-    bscale: float = 1.0,
-    bzero: float = 0.0,
-    extname: str | None = None,
-    out: io.IOBase | None = None,
-    blank: int | None = None,
-) -> bytes:
-    """Build a FITS file whose first extension is a 3-D IMAGE HDU (a
-    spectral cube: NAXIS1 = x, NAXIS2 = y, NAXIS3 = channel — the radio /
-    IFU data product). ``data`` is indexed [z, y, x] (C order matches the
-    FITS axis-1-fastest serialization); BSCALE/BZERO and the ``blank``
-    undefined-voxel sentinel as in :func:`write_fits_image`."""
-    if blank is not None and data.dtype.kind not in "iu":
-        raise FitsFormatError("BLANK is only defined for integer BITPIX")
-    inv = {v.lstrip(">"): k for k, v in _BITPIX_DTYPES.items()}
-    key = data.dtype.newbyteorder("=").str.lstrip("<>=|")
-    if key not in inv:
-        raise FitsFormatError(f"unsupported cube dtype {data.dtype}")
-    bitpix = inv[key]
-    nz, h, w = data.shape
-    cards = [
-        _card("XTENSION", "IMAGE"),
-        _card("BITPIX", bitpix),
-        _card("NAXIS", 3),
-        _card("NAXIS1", w),
-        _card("NAXIS2", h),
-        _card("NAXIS3", nz),
-        _card("PCOUNT", 0),
-        _card("GCOUNT", 1),
-    ]
-    if bscale != 1.0:
-        cards.append(_card("BSCALE", bscale))
-    if bzero != 0.0:
-        cards.append(_card("BZERO", bzero))
-    if extname is not None:
-        cards.append(_card("EXTNAME", extname))
-    if blank is not None:
-        cards.append(_card("BLANK", int(blank)))
-    cards.append(b"END".ljust(CARD))
-    hdr = _pad(b"".join(cards), b" ")
-    payload = data.astype(_BITPIX_DTYPES[bitpix]).tobytes()
-    blob = _primary_hdu() + hdr + _pad(payload)
-    if out is not None:
-        out.write(blob)
-    return blob
-
-
-def decode_cube(data: bytes, hdu: int | str = 1):
-    """3-D IMAGE HDU -> (x, y, z, val) voxel table: x is the fastest FITS
-    axis (NAXIS1), z the channel (NAXIS3); val is the PHYSICAL value
-    BZERO + BSCALE * raw as double. Same (schema, columns) contract as
-    :func:`decode_image`, so the parallel Spark read path is shared."""
-    off, idx = 0, 0
-    while True:
-        cards, data_off = _parse_header(data, off)
-        is_image = (idx == 0 and cards.get("SIMPLE") == "T") or cards.get(
-            "XTENSION", ""
-        ).strip() == "IMAGE"
-        match = (
-            is_image
-            and _header_int(cards, "NAXIS") == 3
-            and (
-                (isinstance(hdu, int) and idx == hdu)
-                or (isinstance(hdu, str) and cards.get("EXTNAME") == hdu)
-            )
-        )
-        if match:
-            break
-        dsize = _hdu_data_size(cards)
-        off = data_off + (dsize + BLOCK - 1) // BLOCK * BLOCK
-        idx += 1
-        if off >= len(data):
-            raise FitsFormatError(f"3-D IMAGE HDU {hdu!r} not found")
-    w = _header_int(cards, "NAXIS1")
-    h = _header_int(cards, "NAXIS2")
-    nz = _header_int(cards, "NAXIS3")
-    bitpix = _header_int(cards, "BITPIX")
-    try:
-        dt = np.dtype(_BITPIX_DTYPES[bitpix])
-    except KeyError as e:
-        raise FitsFormatError(f"bad BITPIX {bitpix}") from e
-    bscale = float(cards.get("BSCALE", 1.0))
-    bzero = float(cards.get("BZERO", 0.0))
-    blank = int(cards["BLANK"]) if "BLANK" in cards and bitpix > 0 else None
-    raw = np.frombuffer(data, dtype=dt, count=w * h * nz, offset=data_off)
-    x = np.tile(np.arange(w, dtype="i4"), h * nz)
-    y = np.tile(np.repeat(np.arange(h, dtype="i4"), w), nz)
-    z = np.repeat(np.arange(nz, dtype="i4"), w * h)
-    val = bzero + bscale * raw.astype("f8")
-    if blank is not None:
-        val = np.ma.MaskedArray(val, mask=raw == blank)
-    schema = StructType(
-        [
-            StructField("x", IntegerType(), False),
-            StructField("y", IntegerType(), False),
-            StructField("z", IntegerType(), False),
-            StructField("val", DoubleType(), blank is not None),
-        ]
-    )
-    return schema, [x, y, z, val]
+    return _read_fits_with(spark, path, hdu, schema, "image", verify_checksum)
 
 
 def read_fits_cube(
@@ -1541,6 +1487,39 @@ def read_fits_cube(
     """Read 3-D IMAGE extension(s) as a voxel table — one (x, y, z, val)
     row per voxel with BSCALE/BZERO applied; same per-file parallel decode
     contract as :func:`read_fits_image`."""
-    return _read_fits_with(
-        spark, path, hdu, schema, _maybe_verifying(decode_cube, verify_checksum)
-    )
+    return _read_fits_with(spark, path, hdu, schema, "cube", verify_checksum)
+
+
+# ---------------------------------------------------------------------------
+# HDU kinds: what each reader selects, declares and decodes
+# ---------------------------------------------------------------------------
+
+class _Kind(NamedTuple):
+    label: str
+    matches: Callable[[Hdu], bool]
+    schema: Callable[[dict], StructType]  # header cards -> declared schema
+    decode: Callable  # (blocks, hdu[, row_start, row_count]) -> (schema, columns)
+
+
+def _is_image(h: Hdu, naxis: int) -> bool:
+    primary = h.index == 0 and h.cards.get("SIMPLE") == "T"
+    image = primary or h.cards.get("XTENSION", "").strip() == "IMAGE"
+    return image and _header_int(h.cards, "NAXIS") == naxis
+
+
+_KINDS = {
+    "bintable": _Kind(
+        "BINTABLE",
+        lambda h: h.cards.get("XTENSION", "").startswith("BINTABLE"),
+        _bintable_schema,
+        _decode_bintable_hdu,
+    ),
+    "ascii": _Kind(
+        "ASCII TABLE",
+        lambda h: h.cards.get("XTENSION", "").startswith("TABLE"),
+        lambda cards: fits_spark_schema(_ascii_columns(cards)),
+        _decode_ascii_hdu,
+    ),
+    "image": _Kind("2-D IMAGE", lambda h: _is_image(h, 2), _pixel_schema, _decode_pixels),
+    "cube": _Kind("3-D IMAGE", lambda h: _is_image(h, 3), _pixel_schema, _decode_pixels),
+}

@@ -474,56 +474,32 @@ def decode_compressed_tiles(
     return raw, bytes(vheap)
 
 
-def decode_compressed_bintable(data: bytes, cards: dict, cols: list[dict], off: int):
-    """In-memory decode of a whole ZTABLE HDU -> (schema, column arrays),
-    the :func:`fits.decode_bintable` backend for compressed HDUs."""
-    from .fits import _decode_columns, _header_int, fits_spark_schema
-
-    ntiles = _header_int(cards, "NAXIS2")
-    rowbytes = _header_int(cards, "NAXIS1")
-    dtype = np.dtype([(c["name"], c["np_dtype"]) for c in cols])
-    descs = np.frombuffer(data, dtype=dtype, count=ntiles, offset=off)
-    heap0 = off + int(cards.get("THEAP", rowbytes * ntiles))
-    heap = memoryview(data)[heap0:]
-
-    def cell(t: int, ci: int) -> bytes:
-        cnt, o = (int(x) for x in descs[cols[ci]["name"]][t])
-        return bytes(heap[o : o + cnt])
-
-    raw, vheap = decode_compressed_tiles(cards, cell, range(ntiles))
-    ocols = _orig_columns(cards)
-    return fits_spark_schema(ocols), _decode_columns(ocols, raw, vheap)
-
-
 def decode_compressed_range(
-    path: str, cards: dict, cols: list[dict], off: int,
-    row_start: int, row_count: int | None,
+    read, cards: dict, cols: list[dict], off: int,
+    row_start: int = 0, row_count: int | None = None,
 ):
-    """Row-range decode touching ONLY the overlapped tiles: reads the tile
-    descriptors for those container rows, then seeks each compressed cell
-    directly — I/O is proportional to tiles hit, never table size (the
-    partitioned-read primitive for a 100 GB fpack'd table)."""
-    from .fits import _decode_columns, _header_int, fits_spark_schema
+    """Row-range decode of a ZTABLE HDU -> (schema, column arrays), the
+    compressed backend of the BINTABLE decode core. ``read(offset, n)``
+    returns file bytes; only the descriptors of the overlapped tiles and
+    their compressed cells are read, so I/O is proportional to tiles hit,
+    never table size (the partitioned-read primitive for a 100 GB fpack'd
+    table)."""
+    from .fits import _decode_columns, _header_int, _row_range, fits_spark_schema
 
     tile_len = _header_int(cards, "ZTILELEN")
-    znrows = _header_int(cards, "ZNAXIS2")
     ntiles = _header_int(cards, "NAXIS2")
     rowbytes = _header_int(cards, "NAXIS1")
-    start = min(max(row_start, 0), znrows)
-    cnt = znrows - start if row_count is None else max(0, min(row_count, znrows - start))
+    start, cnt = _row_range(_header_int(cards, "ZNAXIS2"), row_start, row_count)
     t0, t1 = (start // tile_len, math.ceil((start + cnt) / tile_len)) if cnt else (0, 0)
     dtype = np.dtype([(c["name"], c["np_dtype"]) for c in cols])
     heap_off = off + int(cards.get("THEAP", rowbytes * ntiles))
-    with open(path, "rb") as f:
-        f.seek(off + t0 * rowbytes)
-        descs = np.frombuffer(f.read((t1 - t0) * rowbytes), dtype=dtype, count=t1 - t0)
+    descs = np.frombuffer(read(off + t0 * rowbytes, (t1 - t0) * rowbytes), dtype=dtype, count=t1 - t0)
 
-        def cell(t: int, ci: int) -> bytes:
-            n, o = (int(x) for x in descs[cols[ci]["name"]][t - t0])
-            f.seek(heap_off + o)
-            return f.read(n)
+    def cell(t: int, ci: int) -> bytes:
+        n, o = (int(x) for x in descs[cols[ci]["name"]][t - t0])
+        return bytes(read(heap_off + o, n))
 
-        raw, vheap = decode_compressed_tiles(cards, cell, range(t0, t1))
+    raw, vheap = decode_compressed_tiles(cards, cell, range(t0, t1))
     lo = start - t0 * tile_len
     ocols = _orig_columns(cards)
     return fits_spark_schema(ocols), _decode_columns(ocols, raw[lo : lo + cnt], vheap)

@@ -1,20 +1,24 @@
-"""FITS as a first-class Spark data source: ``spark.read.format("fits")``
-(Spark 4 Python DataSource API — SURVEY.md §4 candidate 3).
-
-One InputPartition per FITS file -> per-file parallel decode, same pure-numpy
-parser as sources/fits.py, rows delivered as Arrow batches. Options:
+"""FITS as a Spark data source: ``spark.read.format("fits")`` and
+``spark.readStream.format("fits")`` (Spark 4 Python DataSource API).
 
     spark.read.format("fits").option("hdu", 1).load("/data/catalog/*.fits")
 
-Schema comes from the FIRST file's header (declared, never inferred from
-data); pass an explicit ``.schema(...)`` to skip the probe or to read
-heterogeneous-ordered files by name.
+This module is only the DataSource adapter; the read itself is
+``sources/fits.py``'s core, shared with ``read_fits``. ``schema()`` reads
+the first file's header blocks and nothing else. Planning runs
+``plan_fits`` on the driver: it expands the path, reads every file's header
+and checks each file's columns by name against the declared schema, so a
+missing, extra or retyped column or a truncated file fails before any task
+starts. Each task decodes its rows and binds them to the schema by name, so
+files that order their columns differently load correctly.
+
+Both transports stay: this one splits a large table into row ranges and
+supports filter pushdown and ``readStream``; the ``binaryFile`` +
+``mapInArrow`` transport behind ``read_fits`` and the CLI is faster at
+tile-sized files.
 """
 
 from __future__ import annotations
-
-import glob as _glob
-import os
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -31,8 +35,10 @@ from .fits import (
     _header_int,
     decode_bintable,
     decode_bintable_range,
-    parse_bintable_header_path,
-    to_arrow_columns,
+    header_schema,
+    plan_fits,
+    resolve_paths,
+    to_batch,
 )
 
 
@@ -47,7 +53,8 @@ class FitsBaseReader(DataSourceReader):
     """Plans one partition per ~chunk_mb of fixed-width rows PER FILE (not
     per file): a single multi-GB BINTABLE reads in parallel because rows are
     fixed width, so each task seeks straight to its byte range. Planning
-    cost is a header-only probe per file (O(header blocks) I/O, no data).
+    is :func:`plan_fits`: a header-only probe and schema check per file
+    (O(header blocks) I/O, no data).
 
     This base class deliberately does NOT implement pushFilters: Spark 4.1
     refuses to run a pushFilters-implementing reader unless
@@ -57,7 +64,7 @@ class FitsBaseReader(DataSourceReader):
     FitsDataSourceReader / FitsDataSource.reader)."""
 
     def __init__(self, options, schema):
-        self._paths = _resolve_paths(options.get("path"))
+        self._path = options.get("path")
         self._hdu = _hdu_option(options)
         self._schema = schema
         self._chunk_bytes = int(float(options.get("chunk_mb", 64)) * 1024 * 1024)
@@ -93,8 +100,8 @@ class FitsBaseReader(DataSourceReader):
 
     def partitions(self):
         parts = []
-        for p in self._paths:
-            cards, _, _ = parse_bintable_header_path(p, self._hdu)
+        for p, h in plan_fits(self._path, self._hdu, schema=self._schema).files:
+            cards = h.cards
             if cards.get("ZTABLE", "").strip() == "T":
                 # tile-compressed table: the container's NAXIS2 counts TILES,
                 # but decode_bintable_range addresses ORIGINAL rows — plan in
@@ -120,15 +127,10 @@ class FitsBaseReader(DataSourceReader):
         return parts
 
     def read(self, partition):
-        import pyarrow as pa
-
-        s, cols = decode_bintable_range(
+        decoded = decode_bintable_range(
             partition.path, self._hdu, partition.row_start, partition.row_count
         )
-        names = [f.name for f in self._schema.fields]
-        yield self._apply_pushed(
-            pa.RecordBatch.from_arrays(to_arrow_columns(s, cols), names=names)
-        )
+        yield self._apply_pushed(to_batch(self._schema, decoded, partition.path))
 
 
 class FitsDataSourceReader(FitsBaseReader):
@@ -181,11 +183,10 @@ class FitsDataSource(DataSource):
         return "fits"
 
     def schema(self):
-        paths = _resolve_paths(self.options.get("path"))
+        paths = resolve_paths(self.options.get("path"))
         if not paths:
-            raise FileNotFoundError(f"no FITS files at {self.options.get('path')!r}")
-        with open(paths[0], "rb") as f:
-            schema, _ = decode_bintable(f.read(), _hdu_option(self.options))
+            raise FileNotFoundError(f"no FITS files match {self.options.get('path')!r}")
+        schema = header_schema(paths[0], _hdu_option(self.options))
         # Strip TUNIT/TDISP column metadata at the DataSource boundary:
         # Spark 4.1's SimpleDataSourceStreamReader runner fails its Arrow
         # batch assertion whenever the declared schema carries ANY
@@ -217,15 +218,6 @@ def _hdu_option(options) -> int | str:
         return int(raw)
     except (TypeError, ValueError):
         return str(raw)
-
-
-def _resolve_paths(path: str | None) -> list[str]:
-    if not path:
-        raise ValueError("fits datasource requires a load path")
-    path = path.removeprefix("file:")
-    if os.path.isdir(path):
-        path = os.path.join(path, "*")
-    return sorted(p for p in _glob.glob(path) if os.path.isfile(p))
 
 
 def register(spark) -> None:
@@ -277,19 +269,14 @@ class FitsSimpleStreamReader(SimpleDataSourceStreamReader):
     def _rows_for(self, paths):
         # returns a LIST iterator: the simple-stream runner caches and
         # copy.copy()s the batch iterator (generators are not copyable)
-        import pyarrow as pa
-
-        names = [f.name for f in self._schema.fields]
         rows = []
         for p in sorted(paths):
-            with open(p, "rb") as f:
-                s, cols = decode_bintable(f.read(), self._hdu)
-            tbl = pa.Table.from_arrays(to_arrow_columns(s, cols), names=names)
-            rows.extend(tuple(rec[n] for n in names) for rec in tbl.to_pylist())
+            batch = to_batch(self._schema, decode_bintable(p, self._hdu), p)
+            rows.extend(tuple(rec.values()) for rec in batch.to_pylist())
         return iter(rows)
 
     def read(self, start: dict):
-        current = _resolve_paths(self._path)
+        current = resolve_paths(self._path)
         seen = set(start.get("seen", []))
         new = [p for p in current if p not in seen]
         end = {"seen": sorted(seen | set(new))}

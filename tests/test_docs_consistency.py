@@ -2,11 +2,13 @@
 registered keys, and README's headline counts must match the registry.
 Both code reviews this round caught manual count drift — this pins it."""
 
+import glob
+import os
 import re
 
 from fits2db_spark.registry import all_oracles, all_queries
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_coverage_md_lists_exactly_the_registered_keys():
@@ -27,6 +29,20 @@ def test_readme_counts_match_registry():
     assert (int(m.group(1)), int(m.group(2))) == (n_q, n_o), (
         f"README says {m.group(1)}/{m.group(2)}, registry has {n_q}/{n_o}"
     )
+
+
+def test_named_tool_scripts_exist():
+    """Every ``tools/*.py`` path that README, docs/ or bench.py names must
+    exist, so deleting a script cannot leave a dangling instruction."""
+    docs = [f"{REPO}/README.md", f"{REPO}/bench.py", *glob.glob(f"{REPO}/docs/*.md")]
+    named = {
+        (os.path.basename(doc), tool)
+        for doc in docs
+        for tool in re.findall(r"tools/[A-Za-z0-9_]+\.py", open(doc).read())
+    }
+    assert named, "no tool references found: the pattern or the paths drifted"
+    missing = sorted(n for n in named if not os.path.exists(f"{REPO}/{n[1]}"))
+    assert not missing, f"docs name missing tool scripts: {missing}"
 
 
 def test_rows_only_set_is_the_documented_six():

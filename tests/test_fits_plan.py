@@ -1,0 +1,193 @@
+"""The FITS read plan: one header-only plan on the driver, columns bound by
+name, every input checked before any Spark job or sink write, and one
+EXTNAME rule for every HDU kind."""
+
+import numpy as np
+import pytest
+from pyspark.sql.types import IntegerType, StructField, StructType
+
+from fits2db_spark.cli import build_parser, load_frame, run
+from fits2db_spark.sources.fits import (
+    FitsFormatError,
+    decode_image,
+    read_fits,
+    read_fits_cube,
+    read_fits_image,
+    write_fits_bintable,
+    write_fits_cube,
+    write_fits_image,
+)
+
+
+def _tile(path, columns):
+    path.write_bytes(write_fits_bintable(columns))
+    return str(path)
+
+
+def _good(path, ids):
+    return _tile(
+        path,
+        [
+            ("id", "K", ids),
+            ("ra", "D", [10.0 * i for i in ids]),
+            ("dec", "D", [1.0 * i for i in ids]),
+        ],
+    )
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` with its Spark jobs tagged ``group``; return the job ids."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_planning_starts_no_spark_job(spark, tmp_path):
+    a = _good(tmp_path / "a.fits", [1, 2])
+    b = _good(tmp_path / "b.fits", [3])
+    args = build_parser().parse_args([a, b, "--table", "t"])
+    frames = {}
+
+    def plan():
+        frames["cli"] = load_frame(spark, args)
+        frames["glob"] = read_fits(spark, str(tmp_path / "*.fits"))
+
+    assert _jobs_in_group(spark, "fits-plan", plan) == []
+    # control: the same group does record the jobs an action starts
+    assert _jobs_in_group(spark, "fits-plan-control", frames["glob"].count)
+    assert frames["cli"].count() == 3
+
+
+def test_datasource_schema_reads_headers_only(tmp_path):
+    from fits2db_spark.sources.fits_datasource import FitsDataSource
+
+    blob = write_fits_bintable(
+        [("id", "K", list(range(2000))), ("flux", "D", [0.5] * 2000)]
+    )
+    cut = tmp_path / "cut.fits"
+    cut.write_bytes(blob[: 2 * 2880 + 100])  # primary + header, data cut off
+    schema = FitsDataSource({"path": str(cut)}).schema()
+    assert [(f.name, f.dataType.simpleString()) for f in schema.fields] == [
+        ("id", "bigint"),
+        ("flux", "double"),
+    ]
+
+
+def test_every_reader_matches_extname_case_insensitively(spark, tmp_path):
+    img = np.arange(6, dtype="i2").reshape(2, 3)
+    (tmp_path / "img.fits").write_bytes(write_fits_image(img, extname="SCI"))
+    cube = np.arange(8, dtype="i2").reshape(2, 2, 2)
+    (tmp_path / "cube.fits").write_bytes(write_fits_cube(cube, extname="CUBE"))
+
+    assert list(decode_image(str(tmp_path / "img.fits"), " sci ")[1][2]) == list(range(6))
+    px = read_fits_image(spark, str(tmp_path / "img.fits"), hdu="sci")
+    assert px.count() == 6
+    vox = read_fits_cube(spark, str(tmp_path / "cube.fits"), hdu="cube")
+    assert sorted(r.val for r in vox.collect()) == [float(v) for v in range(8)]
+
+
+def test_mapinarrow_and_datasource_bind_columns_by_name(spark, tmp_path):
+    from fits2db_spark.sources.fits_datasource import register
+
+    _good(tmp_path / "a.fits", [1])
+    _tile(tmp_path / "b.fits", [("dec", "D", [3.0]), ("id", "K", [3]), ("ra", "D", [30.0])])
+    register(spark)
+    for df in (
+        read_fits(spark, str(tmp_path)),
+        spark.read.format("fits").load(str(tmp_path)),
+    ):
+        assert df.columns == ["id", "ra", "dec"]
+        assert sorted(tuple(r) for r in df.collect()) == [(1, 10.0, 1.0), (3, 30.0, 3.0)]
+
+
+def test_declared_schema_may_widen_and_reorder(spark, tmp_path):
+    from fits2db_spark.sources.fits_datasource import register
+
+    _tile(tmp_path / "w.fits", [("ID", "J", [1, 2]), ("V", "E", [0.5, 1.5])])
+    register(spark)
+    df = spark.read.format("fits").schema("V double, ID long").load(str(tmp_path / "w.fits"))
+    assert sorted(tuple(r) for r in df.collect()) == [(0.5, 1), (1.5, 2)]
+    # a caller-declared schema may widen, never narrow
+    narrow = StructType([StructField("ID", IntegerType()), StructField("V", IntegerType())])
+    with pytest.raises(FitsFormatError, match="'V' is float, declared int"):
+        read_fits(spark, str(tmp_path / "w.fits"), schema=narrow)
+
+
+def test_image_blank_in_a_later_file_makes_val_nullable(spark, tmp_path):
+    img = np.arange(4, dtype="i2").reshape(2, 2)
+    (tmp_path / "a.fits").write_bytes(write_fits_image(img))
+    (tmp_path / "b.fits").write_bytes(write_fits_image(img, blank=3))
+    df = read_fits_image(spark, str(tmp_path))
+    assert df.schema["val"].nullable
+    assert sorted(r.val for r in df.collect() if r.val is not None) == [0.0, 0.0, 1.0, 1.0, 2.0, 2.0, 3.0]
+
+
+# --- fault injection through `cli.run --mode append` into embedded Derby ---
+
+
+@pytest.fixture()
+def derby(tmp_path, spark):
+    """A Derby table ``t`` created from one good tile (2 rows)."""
+    url = f"jdbc:derby:{tmp_path}/db;create=true"
+
+    def load(inputs, mode="append"):
+        return run(
+            [*inputs, "--table", "t", "--jdbc-url", url, "--mode", mode,
+             "--num-partitions", "1"],
+            spark=spark,
+        )
+
+    def rows():
+        back = spark.read.format("jdbc").option("url", url).option("dbtable", "t").load()
+        return sorted(tuple(r) for r in back.collect())
+
+    load([_good(tmp_path / "seed.fits", [1, 2])], mode="create")
+    return load, rows
+
+
+def test_append_binds_reordered_columns_by_name(derby, tmp_path):
+    load, rows = derby
+    good = _good(tmp_path / "g.fits", [3])
+    swapped = _tile(tmp_path / "s.fits", [("dec", "D", [4.0]), ("ra", "D", [40.0]), ("id", "K", [4])])
+    assert load([good, swapped]) == 0
+    assert rows() == [(1, 10.0, 1.0), (2, 20.0, 2.0), (3, 30.0, 3.0), (4, 40.0, 4.0)]
+
+
+@pytest.mark.parametrize(
+    "bad_columns, message",
+    [
+        ([("id", "K", [9]), ("ra", "D", [90.0])], "column 'dec' is missing"),
+        (
+            [("id", "K", [9]), ("ra", "D", [90.0]), ("dec", "D", [9.0]), ("mag", "E", [1.0])],
+            "column 'mag' is not in the declared schema",
+        ),
+        ([("id", "K", [9]), ("ra", "D", [90.0]), ("dec", "E", [9.0])], "column 'dec' is float, declared double"),
+    ],
+    ids=["missing", "extra", "retyped"],
+)
+def test_append_rejects_mismatched_tile_before_writing(derby, tmp_path, bad_columns, message):
+    load, rows = derby
+    before = rows()
+    good = _good(tmp_path / "g.fits", [3])
+    bad = _tile(tmp_path / "bad.fits", bad_columns)
+    with pytest.raises(FitsFormatError, match=f"bad.fits HDU 1: {message}"):
+        load([good, bad])
+    assert rows() == before
+
+
+def test_append_rejects_truncated_tile_in_a_glob(derby, tmp_path):
+    load, rows = derby
+    before = rows()
+    tiles = tmp_path / "tiles"
+    tiles.mkdir()
+    for name, ids in (("t0", [3]), ("t1", list(range(10, 400))), ("t2", [5])):
+        _good(tiles / f"{name}.fits", ids)
+    blob = (tiles / "t1.fits").read_bytes()
+    (tiles / "t1.fits").write_bytes(blob[: len(blob) - 2880])
+    with pytest.raises(FitsFormatError, match="t1.fits HDU 1: truncated"):
+        load([str(tiles / "*.fits")])
+    assert rows() == before

@@ -67,21 +67,6 @@ def test_kcore_unroll_invariance(spark, monkeypatch):
     assert base == more
 
 
-def test_probe_keys_cold_flag_importable():
-    """tools/probe_keys.py is part of the round's measurement evidence —
-    keep it importable (syntax/name errors surface here, not mid-probe)."""
-    import importlib.util
-    import pathlib
-
-    p = pathlib.Path(__file__).resolve().parents[1] / "tools" / "probe_keys.py"
-    spec = importlib.util.spec_from_file_location("probe_keys", p)
-    mod = importlib.util.module_from_spec(spec)
-    assert spec and spec.loader
-    # import only (main() guarded); no Spark session is built
-    spec.loader.exec_module(mod)
-    assert hasattr(mod, "main")
-
-
 def test_bitparallel_lcs_equals_textbook_dp(spark):
     """text_rouge_l's Allison-Dix fold must agree with the classic DP
     (the oracle's formulation) on arbitrary token streams — LCS length
