@@ -116,10 +116,12 @@ def build_parser() -> argparse.ArgumentParser:
         choices=("create", "append", "overwrite", "truncate"),
         help="JDBC load mode",
     )
-    p.add_argument("--batchsize", type=int, default=10_000, help="rows per JDBC batch")
+    p.add_argument(
+        "--batchsize", type=_positive_int, default=10_000, help="rows per JDBC batch"
+    )
     p.add_argument(
         "--num-partitions",
-        type=int,
+        type=_positive_int,
         help="cap concurrent JDBC connections / CSV part files",
     )
     return p

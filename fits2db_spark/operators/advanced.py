@@ -9,21 +9,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import memo, release
 from ..tables import load
-
-
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Release the block-manager storage behind a ``localCheckpoint``-ed
-    DataFrame.  ``DataFrame.unpersist()`` only talks to the cache manager and
-    leaves checkpoint blocks alone (they belong to the internal RDD wrapped
-    by the ``LogicalRDD`` leaf), so iterative operators that cut lineage per
-    round would otherwise leak one block set per cut until the JVM
-    ContextCleaner happens to run.  The frame is unreadable afterwards —
-    only call on superseded intermediates."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # non-LogicalRDD plan or already cleaned — nothing to free
 
 
 @register(
@@ -888,7 +875,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges.unpersist()
     edges_w.unpersist()
     for interim in (deg, *cuts):
-        _free_local_checkpoint(interim)
+        release(interim)
     return result
 
 
@@ -991,28 +978,6 @@ deprioritize("join_skew_salted")
 # ---------------------------------------------------------------------------
 # Triangle counting on a co-occurrence graph
 # ---------------------------------------------------------------------------
-from ..tables import register_aux_cache  # noqa: E402
-
-_TRI_EDGE_CACHE: dict = register_aux_cache({})
-
-
-def clear_graph_memos() -> None:
-    """Unpersist AND forget every session-shared graph memo (_ps_pairs,
-    _lpa_sym_edges, _co_supply_counts, the thresholded edge lists).
-    ``_TRI_EDGE_CACHE.clear()`` alone is NOT a reset: the persisted
-    frames stay registered with Spark's cache manager, which keeps
-    substituting InMemoryTableScans into any logically-equal subtree
-    (changing other queries' physical plans) while nothing can release
-    the storage anymore. tables.clear_cache() does the same unpersist
-    via the aux-cache registry; this helper is the targeted variant."""
-    for df in _TRI_EDGE_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _TRI_EDGE_CACHE.clear()
-
-
 def _co_supply_pair_counts(spark, ps):
     """Shared-part count per supplier pair (u < v, double `c`) from a
     distinct (p, s) projection — the weighted co-supply edge list every
@@ -1053,8 +1018,7 @@ def _ps_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     §1.2). Each consumer's own projection (node-id offset, column order)
     is a bijection, so distinct-then-project yields the identical row
     multiset the former inline project-then-distinct did. Persisted (long
-    pairs, O(distinct part-supplier pairs)); freed by tables.clear_cache;
-    fresh single-key processes build it from parquet every run.
+    pairs, O(distinct part-supplier pairs)) as a session memo.
 
     Partitioned BY p at machine width before the distinct (r15, guide
     §2.4 "two operations keyed the same way can share one exchange"):
@@ -1068,25 +1032,21 @@ def _ps_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned build's 11.5/16.4/20.0 s, and the pair-aggregate
     plan drops both join-leg exchanges. The repartition+distinct is a
     row-multiset identity, so every consumer's results are unchanged."""
-    try:
-        key = ("ps_pairs", spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        key = ("ps_pairs", "", sf_dir)
-    ps = _TRI_EDGE_CACHE.get(key)
-    if ps is None:
+
+    def build():
         width = max(
             spark.sparkContext.defaultParallelism,
             int(spark.conf.get("spark.sql.shuffle.partitions", "8")),
         )
         li = load(spark, sf_dir, "lineitem")
-        ps = (
+        return (
             li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
             .repartition(width, "p")
             .distinct()
             .persist()
         )
-        _TRI_EDGE_CACHE[key] = ps
-    return ps
+
+    return memo(spark, sf_dir, "ps_pairs", build)
 
 
 def _lpa_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1094,14 +1054,9 @@ def _lpa_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts offset by 10^6) — shared VERBATIM by graph_label_propagation /
     graph_modularity (via `_lpa_edges_labels`) and graph_bfs_distance,
     each of which previously built and persisted its own identical copy
-    per invocation. Derived from `_ps_pairs`; persisted; freed by
-    tables.clear_cache."""
-    try:
-        key = ("lpa_sym_edges", spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        key = ("lpa_sym_edges", "", sf_dir)
-    edges = _TRI_EDGE_CACHE.get(key)
-    if edges is None:
+    per invocation. Derived from `_ps_pairs`; a persisted session memo."""
+
+    def build():
         sp = _ps_pairs(spark, sf_dir).select(
             (F.col("p") + 1_000_000).alias("a"), F.col("s").alias("b")
         )
@@ -1116,13 +1071,13 @@ def _lpa_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             % 100
             < _LPA_EDGE_PCT
         )
-        edges = (
+        return (
             kept.select(F.col("a").alias("src"), F.col("b").alias("dst"))
             .unionByName(kept.select(F.col("b").alias("src"), F.col("a").alias("dst")))
             .persist()
         )
-        _TRI_EDGE_CACHE[key] = edges
-    return edges
+
+    return memo(spark, sf_dir, "lpa_sym_edges", build)
 
 
 def _co_supply_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1133,17 +1088,36 @@ def _co_supply_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     machine-wide aggregate inside `_co_supply_pair_counts` is the
     family's dominant stage (~2-3 s at sf0.1; O(co-supply pairs) at any
     scale), and before r14 session 23 each key's memo build re-ran it.
-    Persisted once per (applicationId, sf_dir); freed by
-    tables.clear_cache; fresh single-key processes build from parquet."""
-    try:
-        key = ("cosupply", spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        key = ("cosupply", "", sf_dir)
-    sh = _TRI_EDGE_CACHE.get(key)
-    if sh is None:
-        sh = _co_supply_pair_counts(spark, _ps_pairs(spark, sf_dir)).persist()
-        _TRI_EDGE_CACHE[key] = sh
-    return sh
+    A persisted session memo."""
+    return memo(
+        spark,
+        sf_dir,
+        "cosupply",
+        lambda: _co_supply_pair_counts(spark, _ps_pairs(spark, sf_dir)).persist(),
+    )
+
+
+def _tri_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Memoized p99-thresholded co-supply edge list (u < v) shared by
+    graph_triangles and graph_clustering_coeff. It is consumed by 4 plan
+    branches (3 triangle legs + degree) and holds ~1% of supplier pairs.
+    The pair aggregate under it (the family's dominant stage) is the
+    session-shared `_co_supply_counts` memo: it feeds both the p99
+    threshold and the filter it gates, and graph_kcore's own build."""
+
+    def build():
+        sh = _co_supply_counts(spark, sf_dir)
+        thr = sh.agg(F.percentile("c", F.lit(0.99)).alias("thr"))
+        e = (
+            sh.crossJoin(F.broadcast(thr))
+            .filter(F.col("c") >= F.col("thr"))
+            .select("u", "v")
+            .persist()
+        )
+        e.count()  # materialize e (and the shared sh cache) eagerly
+        return e
+
+    return memo(spark, sf_dir, "tri_edges", build)
 
 
 @register(
@@ -1202,30 +1176,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     and broadcast (no driver collect); the co-occurrence weights come from
     _co_supply_pair_counts' one-phase machine-wide aggregate (see its
     docstring for why partial aggregation loses on this pair stream)."""
-    # e is consumed by 4 plan branches (3 triangle legs + degree); persist
-    # once per (session, sf) — it holds only the p99-thresholded edge list
-    # (~1% of supplier pairs), and memoizing prevents re-persisting the
-    # same small RDD on repeated calls (the pagerank cache-leak lesson).
-    try:
-        memo_key = (spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        memo_key = ("", sf_dir)
-    e = _TRI_EDGE_CACHE.get(memo_key)
-    if e is None:
-        # the pair aggregate (the operator's dominant stage) is the
-        # session-shared _co_supply_counts memo: it feeds BOTH the p99
-        # threshold and the filter it gates here, AND graph_kcore's
-        # separately-thresholded build, computing once for all of them.
-        sh = _co_supply_counts(spark, sf_dir)
-        thr = sh.agg(F.percentile("c", F.lit(0.99)).alias("thr"))
-        e = (
-            sh.crossJoin(F.broadcast(thr))
-            .filter(F.col("c") >= F.col("thr"))
-            .select("u", "v")
-            .persist()
-        )
-        e.count()  # materialize e (and the shared sh cache) eagerly
-        _TRI_EDGE_CACHE[memo_key] = e
+    e = _tri_edges(spark, sf_dir)
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))
@@ -1294,19 +1245,15 @@ def graph_node_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The capped edge list `kept` feeds three plan branches (set sizes +
     both pair-join legs), each of which would otherwise re-scan lineitem
-    and re-run the distinct + degree aggregation; it is persisted once per
-    (session, sf) exactly like graph_triangles' _TRI_EDGE_CACHE (the r5
-    verdict item) — at 100 TB that is one fact-table scan instead of ~6."""
-    try:
-        memo_key = ("nodesim", spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        memo_key = ("nodesim", "", sf_dir)
-    kept = _TRI_EDGE_CACHE.get(memo_key)
-    if kept is None:
+    and re-run the distinct + degree aggregation; it is a persisted session
+    memo — at 100 TB that is one fact-table scan instead of ~6."""
+
+    def build():
         sp = _ps_pairs(spark, sf_dir).select("s", "p")
         deg = sp.groupBy("p").agg(F.count(F.lit(1)).alias("d"))
-        kept = sp.join(deg.filter(F.col("d") <= 31), "p").select("s", "p").persist()
-        _TRI_EDGE_CACHE[memo_key] = kept
+        return sp.join(deg.filter(F.col("d") <= 31), "p").select("s", "p").persist()
+
+    kept = memo(spark, sf_dir, "nodesim_kept", build)
     sz = kept.groupBy("s").agg(F.count(F.lit(1)).cast("double").alias("n"))
     co = (
         _co_supply_pair_counts(spark, kept.select("p", "s"))
@@ -1389,16 +1336,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     p{int(_KCORE_EDGE_Q * 100)} co-supply edge threshold reuses the
     graph_triangles hub-cap pattern (broadcast 1-row threshold, never
     all-pairs). Each round is one degree aggregate + two broadcast semi
-    joins over a strictly-shrinking edge list; the base edge list is
-    persisted once per (session, sf) like _TRI_EDGE_CACHE — at 100 TB
-    each round's survivor edges would be persisted too (the peel is a
-    contraction, so memory shrinks monotonically)."""
-    try:
-        memo_key = ("kcore", spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        memo_key = ("kcore", "", sf_dir)
-    e = _TRI_EDGE_CACHE.get(memo_key)
-    if e is None:
+    joins over a strictly-shrinking edge list; the base edge list is a
+    checkpointed session memo — at 100 TB each round's survivor edges
+    would be persisted too (the peel is a contraction, so memory shrinks
+    monotonically)."""
+
+    def build():
         # the ~C(|suppliers per part|,2) pair enumeration + aggregate —
         # the operator's dominant cost, 3.8s of the 7.2s cold total at
         # sf0.1 (r11) — is the session-shared _co_supply_counts memo:
@@ -1408,13 +1351,14 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stream, so holding it persisted for the session is cheap.
         sh = _co_supply_counts(spark, sf_dir)
         thr = sh.agg(F.percentile("c", F.lit(_KCORE_EDGE_Q)).alias("thr"))
-        e = (
+        return (
             sh.crossJoin(F.broadcast(thr))
             .filter(F.col("c") >= F.col("thr"))
             .select("u", "v")
             .localCheckpoint(eager=True)
         )
-        _TRI_EDGE_CACHE[memo_key] = e
+
+    e = memo(spark, sf_dir, "kcore_edges", build)
     # Early-exit on convergence (r14 optimization round): the peel is a
     # deterministic contraction, so when a round removes no edge every
     # later round is the identity and the remaining passes are pure
@@ -1454,12 +1398,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(kept.withColumnRenamed("node", "v")), "v", "left_semi")
             .localCheckpoint(eager=True)
         )
-        _free_local_checkpoint(kept)
+        release(kept)
         if i > 0:
             # free the SUPERSEDED round's checkpoint blocks (round 0's input
             # is the memoized edge cache — never freed; the final round's
             # blocks feed the lazily-returned aggregate, also kept)
-            _free_local_checkpoint(prev)
+            release(prev)
         n_new = e.count()
         if n_new == n_edges:
             break
@@ -1609,7 +1553,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("n_nodes", "n_edges", "avg_edge_degree", "assortativity")
         .localCheckpoint(eager=True)
     )
-    _free_local_checkpoint(edges)
+    release(edges)
     return result
 
 
@@ -1691,7 +1635,7 @@ def _lpa_edges_labels(spark: SparkSession, sf_dir: str):
             .localCheckpoint(eager=True)
         )
         if prev is not None:
-            _free_local_checkpoint(prev)
+            release(prev)
         prev = labels
     return edges, labels
 
@@ -1851,7 +1795,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         if prev is not None:
-            _free_local_checkpoint(prev)
+            release(prev)
         prev = dist
     return (
         nodes.join(dist, "node", "left")
@@ -1932,8 +1876,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregating groupBy per side — the canonical distributed
     power-iteration shuffle profile; executor state is two O(nodes) score
     tables, driver state zero. The edge list is the session-shared
-    `_ps_pairs` memo (persisted once per session, freed by
-    tables.clear_cache)."""
+    `_ps_pairs` memo."""
     # read the (s, p) projection straight off the session-shared _ps_pairs
     # memo (r14 session 22) — the rounds' joins scan the persisted base;
     # no second per-key persist of the same pairs
@@ -1986,7 +1929,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # free superseded raw tables (keep the two feeding h/a)
         while len(cuts) > 2:
-            _free_local_checkpoint(cuts.pop(0))
+            release(cuts.pop(0))
     hubs = (
         h.select(
             F.lit("hub").alias("node_type"),
@@ -2007,7 +1950,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     result = hubs.unionByName(auths).localCheckpoint(eager=True)
     for interim in (sup_nodes, *cuts):
-        _free_local_checkpoint(interim)
+        release(interim)
     return result
 
 
@@ -2085,21 +2028,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list) — two shuffle joins bounded by the p99 hub cap; the wedge
     denominator needs only the degree table. The global ratio is a 1-row
     aggregate broadcast onto 20 rows."""
-    try:
-        memo_key = (spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        memo_key = ("", sf_dir)
-    e = _TRI_EDGE_CACHE.get(memo_key)
-    if e is None:
-        sh = _co_supply_counts(spark, sf_dir)
-        thr = sh.agg(F.percentile("c", F.lit(0.99)).alias("thr"))
-        e = (
-            sh.crossJoin(F.broadcast(thr))
-            .filter(F.col("c") >= F.col("thr"))
-            .select("u", "v")
-            .persist()
-        )
-        _TRI_EDGE_CACHE[memo_key] = e
+    e = _tri_edges(spark, sf_dir)
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))

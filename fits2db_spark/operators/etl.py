@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import release
 from ..tables import load
 
 _SQL_RESERVED = {
@@ -1066,8 +1067,6 @@ def spatial_htm(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns (id + 3 vertices + point), so each cut materializes a few
     hundred KB. Interim blocks are freed once the (2-column) result
     materializes — the established shared-subtree discipline."""
-    from .advanced import _free_local_checkpoint
-
     c = load(spark, sf_dir, "customer")
     base = c.selectExpr(
         "c_custkey",
@@ -1097,7 +1096,7 @@ def spatial_htm(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     for it in interims:
-        _free_local_checkpoint(it)
+        release(it)
     return result
 
 

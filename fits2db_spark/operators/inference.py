@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import release
 from ..tables import daily_value_series, load
 
 
@@ -4338,9 +4339,7 @@ def ml_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("logloss", 6).alias("logloss"),
         F.round("cell_accuracy", 6).alias("cell_majority_accuracy"),
     ).localCheckpoint(eager=True)  # 1 row; lets the cells blocks free now
-    from .advanced import _free_local_checkpoint
-
-    _free_local_checkpoint(cells)
+    release(cells)
     return out
 
 
@@ -6667,10 +6666,8 @@ def ml_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("logloss_after"),
     )
-    from .advanced import _free_local_checkpoint
-
     result = out.localCheckpoint(eager=True)
-    _free_local_checkpoint(hist)
+    release(hist)
     return result
 
 
@@ -7239,10 +7236,8 @@ def ml_cox_ph(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(round(z, 6)).alias("z_stat"),
         F.lit(1 if abs(z) > 1.96 else 0).cast("int").alias("reject_05"),
     )
-    from .advanced import _free_local_checkpoint
-
     result = out.localCheckpoint(eager=True)
-    _free_local_checkpoint(ev_t)
+    release(ev_t)
     return result
 
 
@@ -7422,10 +7417,8 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)  # 1 row; lets the interim blocks go
     )
-    from .advanced import _free_local_checkpoint
-
     for interim in (d, fit0, calh):
-        _free_local_checkpoint(interim)
+        release(interim)
     return result
 
 
@@ -7591,15 +7584,11 @@ def ml_gradient_boost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).otherwise(F.lit(float(best["mu_right"])))
             ).alias("r"),
         ).localCheckpoint(eager=True)
-        from .advanced import _free_local_checkpoint
-
         if cur is not hist:
-            _free_local_checkpoint(cur)
+            release(cur)
         cur = nxt
-    from .advanced import _free_local_checkpoint
-
-    _free_local_checkpoint(hist)
-    _free_local_checkpoint(cur)
+    release(hist)
+    release(cur)
     return spark.createDataFrame(
         rows, "round int, split_bucket long, gain double, mu_left double, mu_right double"
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import memo, release
 from ..tables import load
 
 
@@ -660,40 +661,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _XM_NEAREST_DEG = 4.0  # nearest-neighbor search radius (degrees)
-# (applicationId, sf_dir, op) -> checkpointed phase-1 result: consumed by
-# multiple plan branches AND by repeated bench invocations — one bounded
-# checkpoint (<= k rows per B object) per session instead of one per call.
-# Staleness caveat (same contract as scans._SCRATCH_DONE): entries key on
-# the sf_dir PATH, so re-staging different parquet under the same path
-# within one session serves stale rows — call clear_xm_p1_cache() (or
-# session.free_memo_checkpoints()) after re-staging. Boundedness: inserting
-# a key for a NEW sf_dir evicts-and-frees every entry of other sf_dirs, so
-# a session sweeping many sf_dirs holds checkpoint blocks for one at a time.
-_XM_P1_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _xm_p1_memo(ck: tuple[str, str, str], build) -> DataFrame:
-    """Insert-or-get on _XM_P1_CACHE with displacement eviction (above)."""
-    if ck not in _XM_P1_CACHE:
-        from .advanced import _free_local_checkpoint
-
-        for old in [k for k in _XM_P1_CACHE if k[:2] != ck[:2]]:
-            _free_local_checkpoint(_XM_P1_CACHE.pop(old))
-        _XM_P1_CACHE[ck] = build()
-    return _XM_P1_CACHE[ck]
-
-
-def clear_xm_p1_cache() -> None:
-    """Free every memoized phase-1 checkpoint's block-manager storage and
-    empty the cache — the evict hook bench.py calls between tiers so a
-    cross-match key's checkpoint blocks can't bleed executor memory into
-    later, unrelated keys (VERDICT r13 measured ~1.8x on sim_ivf_balance)."""
-    from .advanced import _free_local_checkpoint
-
-    while _XM_P1_CACHE:
-        _, df = _XM_P1_CACHE.popitem()
-        _free_local_checkpoint(df)
-
 _XM_NEAREST_TIGHT_DEG = 0.125  # r8 phase-1 radius (second ladder rung)
 # Adaptive radius ladder (r14, VERDICT item 5): a B row escalates through
 # these rungs and stops at the first where it finds k candidates (k within
@@ -752,14 +719,15 @@ def _xm_ladder(spark, sf_dir: str, b0: DataFrame, topk_fn, need: int, op: str,
     to the rung set (every rung keeps only provably-global top-k rows), so
     the ladder is dropped entirely below _XM_LADDER_MIN_ROWS objects where
     per-rung machinery dominates (see the constant's comment)."""
-    app = getattr(spark.sparkContext, "applicationId", "")
     ladder = _XM_LADDER if _catalog_rows(sf_dir) >= _XM_LADDER_MIN_ROWS else ()
     remaining = b0
     pieces = []
     for i, r in enumerate(ladder):
         rem = remaining
-        tk = _xm_p1_memo(
-            (app, sf_dir, f"{op}_r{i}"),
+        tk = memo(
+            spark,
+            sf_dir,
+            f"xmatch_{op}_r{i}",
             lambda rem=rem, r=r: topk_fn(rem, r).localCheckpoint(eager=True),
         )
         done = (
@@ -2393,9 +2361,7 @@ def er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 round(lam * pm / (lam * pm + (1 - lam) * pu), 6),
             )
         )
-    from .advanced import _free_local_checkpoint
-
-    _free_local_checkpoint(pat)
+    release(pat)
     return spark.createDataFrame(
         out,
         "g1 int, g2 int, g3 int, n_pairs long, match_weight double, posterior double",
@@ -3072,8 +3038,6 @@ def join_xmatch_healpix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a_id", "b_id", F.round(sep_arcsec, 2).alias("sep_arcsec"), "shard_pix")
         .localCheckpoint(eager=True)
     )
-    from .advanced import _free_local_checkpoint
-
     for interim in (a, probes):
-        _free_local_checkpoint(interim)
+        release(interim)
     return result

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import memo, release
 from ..tables import load
 
 
@@ -399,86 +400,10 @@ def _shingles(d: DataFrame) -> DataFrame:
     return _doc_shingle_arrays(d).select("doc_id", F.explode("shingles").alias("shingle"))
 
 
-# one persisted shingle set per (session, sf_dir): repeat invocations (bench,
-# interactive use) share a single cache instead of stacking new persists
-_SH_CACHE: dict[tuple[str, str], DataFrame] = {}
-# converged connected-components results per (app, sf_dir, algorithm): the
-# iterative loop runs Spark jobs at plan-construction time, so repeat
-# invocations in one session (tests, bench, driver sweeps) reuse the
-# converged fixpoint instead of re-iterating (testdata is immutable)
-_CC_FINAL_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def clear_caches() -> None:
-    """Unpersist every cache this module holds (shingle sets, component
-    labels) — the session-hygiene hook for long-lived interactive sessions."""
-    for cache in (
-        _SH_CACHE,
-        _ARR_CACHE,
-        _BANDS_CACHE,
-        _CC_FINAL_CACHE,
-        _JACC_CAND_CACHE,
-    ):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-
-
-def _shingles_cached(spark: SparkSession, d: DataFrame, sf_dir: str) -> DataFrame:
-    try:
-        key = (spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        return _shingles(d)
-    if key not in _SH_CACHE:
-        _SH_CACHE[key] = _shingles(d).persist()
-    return _SH_CACHE[key]
-
-
-# per-doc shingle ARRAYS per (session, sf_dir): one row per doc. This is the
-# expensive md5 pass; the minhash signature, the LSH band table (read three
-# times: bucket counts + both self-join sides), and the exact verify all
-# derive from it with cheap array arithmetic. Without the cache the bucket
-# cap rebuilt signatures from raw text on every read (measured 3.4x the
-# whole query's cost at sf0.1).
-_ARR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _arrays_cached(spark: SparkSession, d: DataFrame, sf_dir: str) -> DataFrame:
-    try:
-        key = (spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        return _doc_shingle_arrays(d)
-    if key not in _ARR_CACHE:
-        _ARR_CACHE[key] = _doc_shingle_arrays(d).persist()
-    return _ARR_CACHE[key]
-
-
-# LSH band table per (session, sf_dir): 4 rows per doc, 3 readers (bucket
-# counts + both self-join sides). Cached so the 16-permutation signature
-# arithmetic runs once, not once per reader.
-_BANDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-# exact-Jaccard candidate pairs per (session, sf_dir): three exact-dedup
-# operators (ngram_jaccard, containment, lsh_recall's truth) share the
-# inverted-index self-join + pair aggregate — by far their dominant stage (r8)
-_JACC_CAND_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _jaccard_candidates_cached(
-    spark: SparkSession, sh: DataFrame, sf_dir: str
-) -> DataFrame:
-    try:
-        key = (spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        return _jaccard_candidates(sh)
-    if key not in _JACC_CAND_CACHE:
-        _JACC_CAND_CACHE[key] = _jaccard_candidates(sh).persist()
-    return _JACC_CAND_CACHE[key]
-
-
 def _bands(arrs: DataFrame) -> DataFrame:
+    """LSH band table: 4 rows per doc, read three times (bucket counts +
+    both self-join sides), so callers memoize it and the 16-permutation
+    signature arithmetic runs once."""
     sig = _minhash_sig(arrs)
     frames = [
         sig.select(
@@ -491,21 +416,10 @@ def _bands(arrs: DataFrame) -> DataFrame:
     out = frames[0]
     for bf in frames[1:]:
         out = out.unionByName(bf)
-    return out
-
-
-def _bands_cached(spark: SparkSession, arrs: DataFrame, sf_dir: str) -> DataFrame:
-    try:
-        key = (spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        return _bands(arrs)
-    if key not in _BANDS_CACHE:
-        # the 4-way union would inherit 4x the arrays cache's partitions
-        # (128 tiny partitions at bench scale = pure task-launch overhead in
-        # every downstream stage); the band table is 4 small rows per doc,
-        # so cache it in few partitions
-        _BANDS_CACHE[key] = _bands(arrs).coalesce(8).persist()
-    return _BANDS_CACHE[key]
+    # the 4-way union would inherit 4x the arrays' partitions (128 tiny
+    # partitions at bench scale = pure task-launch overhead in every
+    # downstream stage); the band table is small, so keep few partitions
+    return out.coalesce(8)
 
 
 _SHINGLES_SQL = """
@@ -646,12 +560,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard. Pairs whose only overlap is hot (stop-phrase) shingles are
     below any useful threshold anyway. The oracle mirrors the cap."""
     d = load(spark, sf_dir, "documents")
-    sh = _shingles_cached(spark, d, sf_dir)
-    cand = _jaccard_candidates_cached(spark, sh, sf_dir)
+    sh = memo(spark, sf_dir, "shingles", lambda: _shingles(d).persist())
+    cand = memo(spark, sf_dir, "jacc_cand", lambda: _jaccard_candidates(sh).persist())
     # exact verify from the candidate aggregate's shared-capped count plus
     # the hot-shingle intersect (r14; see _pair_exact_common — replaces the
     # full-array array_intersect join, which was the dominant cold cost)
-    arrs = _arrays_cached(spark, d, sf_dir)
+    arrs = memo(spark, sf_dir, "doc_arrays", lambda: _doc_shingle_arrays(d).persist())
     stats = _pair_exact_common(sh, arrs, cand)
     n_common = F.col("n_common")
     jac = n_common.cast("double") / (
@@ -792,8 +706,9 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, shingle) shuffle, no groupBy, no separate sizes join (the round-1
     bench's dominant re-shuffle)."""
     d = load(spark, sf_dir, "documents")
-    arrs = _arrays_cached(spark, d, sf_dir)
-    cand = _lsh_candidates(_bands_cached(spark, arrs, sf_dir))
+    arrs = memo(spark, sf_dir, "doc_arrays", lambda: _doc_shingle_arrays(d).persist())
+    bands = memo(spark, sf_dir, "bands", lambda: _bands(arrs).persist())
+    cand = _lsh_candidates(bands)
     pairs = cand.join(
         arrs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")), "doc_a"
     ).join(
@@ -1094,22 +1009,17 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver holds only the convergence counter, never data.
     """
     d = load(spark, sf_dir, "documents")
-    try:
-        memo_key = (spark.sparkContext.applicationId, sf_dir, "lp")
-    except Exception:
-        memo_key = None
-    if memo_key in _CC_FINAL_CACHE:
-        cached = _CC_FINAL_CACHE[memo_key]
-        return (
-            cached.select("doc_id", F.col("new_comp").alias("comp"))
-            .groupBy("comp")
-            .agg(F.count(F.lit(1)).alias("cluster_size"), F.min("doc_id").alias("keep_doc"))
-            .filter(F.col("cluster_size") > 1)
-        )
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    updated, labels = _label_propagate(pairs, d.select("doc_id"))
-    if memo_key is not None:
-        _CC_FINAL_CACHE[memo_key] = updated
+
+    def build():
+        # the loop runs Spark jobs at plan-construction time, so the
+        # converged fixpoint is a session memo (the ``updated`` frame: on
+        # the iterative path it is the checkpoint whose blocks release frees)
+        pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+        return _label_propagate(pairs, d.select("doc_id"))[0]
+
+    labels = memo(spark, sf_dir, "cc_label_prop", build).select(
+        "doc_id", F.col("new_comp").alias("comp")
+    )
     return (
         labels.groupBy("comp")
         .agg(F.count(F.lit(1)).alias("cluster_size"), F.min("doc_id").alias("keep_doc"))
@@ -1393,83 +1303,78 @@ def dedup_components_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("cluster_size") > 1)
         )
 
-    try:
-        memo_key = (spark.sparkContext.applicationId, sf_dir, "bigstar")
-    except Exception:
-        memo_key = None
-    if memo_key in _CC_FINAL_CACHE:
-        return _summary(_CC_FINAL_CACHE[memo_key])
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    # Lineage MUST be truncated between rounds: each star step references its
-    # input 2+ times, so the nested logical plan grows geometrically per
-    # round — analysis alone was the round-3 86s-at-sf0.01 pathology and blew
-    # the heap of a default-1g driver session. ``localCheckpoint(eager)``
-    # materializes and cuts the plan; on a real cluster swap in reliable
-    # ``checkpoint()`` against the cluster FS (survives executor loss).
-    und = (
-        pairs.select(F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _star(e: DataFrame, large: bool) -> DataFrame:
-        """One large-star (link larger neighbors to the min) or small-star
-        (link smaller-or-equal ones) step over a symmetric edge list; returns
-        the canonical undirected result."""
-        mn = (
-            e.groupBy("src")
-            .agg(F.min("dst").alias("mnd"))
-            .select("src", F.least(F.col("mnd"), F.col("src")).alias("m"))
+    def build() -> DataFrame:
+        pairs = dedup_ngram_jaccard(spark, sf_dir).select(
+            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
         )
-        if large:
-            moved = (
-                e.join(mn, "src")
-                .filter(F.col("dst") > F.col("src"))
-                .select(F.col("dst").alias("a"), F.col("m").alias("b"))
-            )
-        else:
-            moved = (
-                e.join(mn, "src")
-                .filter(F.col("dst") <= F.col("src"))
-                .select(F.col("dst").alias("a"), F.col("m").alias("b"))
-                .unionByName(mn.select(F.col("src").alias("a"), F.col("m").alias("b")))
-            )
-        return (
-            moved.select(F.least("a", "b").alias("src"), F.greatest("a", "b").alias("dst"))
+        # Lineage MUST be truncated between rounds: each star step references its
+        # input 2+ times, so the nested logical plan grows geometrically per
+        # round — analysis alone was the round-3 86s-at-sf0.01 pathology and blew
+        # the heap of a default-1g driver session. ``localCheckpoint(eager)``
+        # materializes and cuts the plan; on a real cluster swap in reliable
+        # ``checkpoint()`` against the cluster FS (survives executor loss).
+        und = (
+            pairs.select(F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
             .distinct()
+            .localCheckpoint(eager=True)
         )
 
-    max_rounds = 15
-    prev_chk = None
-    converged = False
-    for _ in range(max_rounds):
-        # checkpoint blocks of superseded rounds are reclaimed by the
-        # ContextCleaner once the Python references drop out of scope
-        ls = _star(_cc_sym(und), large=True).localCheckpoint(eager=True)
-        und = _star(_cc_sym(ls), large=False).localCheckpoint(eager=True)
-        chk = und.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("src") * 31 + F.col("dst")).alias("s"),
-        ).first()
-        if prev_chk == (chk.n, chk.s):
-            converged = True
-            break
-        prev_chk = (chk.n, chk.s)
-    # Silently-wrong clusters are worse than a loud failure: at the
-    # fixpoint every undirected edge must be (component-min, member),
-    # which only holds if the LS/SS alternation actually converged.
-    if not converged:
-        raise RuntimeError(
-            f"dedup_components_bigstar: no fixpoint after {max_rounds} "
-            "LS/SS rounds — raise max_rounds or inspect the edge graph"
-        )
-    if memo_key is not None:
-        _CC_FINAL_CACHE[memo_key] = und
-    return _summary(und)
+        def _star(e: DataFrame, large: bool) -> DataFrame:
+            """One large-star (link larger neighbors to the min) or small-star
+            (link smaller-or-equal ones) step over a symmetric edge list; returns
+            the canonical undirected result."""
+            mn = (
+                e.groupBy("src")
+                .agg(F.min("dst").alias("mnd"))
+                .select("src", F.least(F.col("mnd"), F.col("src")).alias("m"))
+            )
+            if large:
+                moved = (
+                    e.join(mn, "src")
+                    .filter(F.col("dst") > F.col("src"))
+                    .select(F.col("dst").alias("a"), F.col("m").alias("b"))
+                )
+            else:
+                moved = (
+                    e.join(mn, "src")
+                    .filter(F.col("dst") <= F.col("src"))
+                    .select(F.col("dst").alias("a"), F.col("m").alias("b"))
+                    .unionByName(mn.select(F.col("src").alias("a"), F.col("m").alias("b")))
+                )
+            return (
+                moved.select(F.least("a", "b").alias("src"), F.greatest("a", "b").alias("dst"))
+                .filter(F.col("src") != F.col("dst"))
+                .distinct()
+            )
+
+        max_rounds = 15
+        prev_chk = None
+        converged = False
+        for _ in range(max_rounds):
+            # checkpoint blocks of superseded rounds are reclaimed by the
+            # ContextCleaner once the Python references drop out of scope
+            ls = _star(_cc_sym(und), large=True).localCheckpoint(eager=True)
+            und = _star(_cc_sym(ls), large=False).localCheckpoint(eager=True)
+            chk = und.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("src") * 31 + F.col("dst")).alias("s"),
+            ).first()
+            if prev_chk == (chk.n, chk.s):
+                converged = True
+                break
+            prev_chk = (chk.n, chk.s)
+        # Silently-wrong clusters are worse than a loud failure: at the
+        # fixpoint every undirected edge must be (component-min, member),
+        # which only holds if the LS/SS alternation actually converged.
+        if not converged:
+            raise RuntimeError(
+                f"dedup_components_bigstar: no fixpoint after {max_rounds} "
+                "LS/SS rounds — raise max_rounds or inspect the edge graph"
+            )
+        return und
+
+    return _summary(memo(spark, sf_dir, "cc_bigstar", build))
 
 
 deprioritize("dedup_components_bigstar")
@@ -1515,10 +1420,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification runs on the FULL shingle sets so the reported
     containment is exact."""
     d = load(spark, sf_dir, "documents")
-    sh = _shingles_cached(spark, d, sf_dir)
-    cand = _jaccard_candidates_cached(spark, sh, sf_dir)
+    sh = memo(spark, sf_dir, "shingles", lambda: _shingles(d).persist())
+    cand = memo(spark, sf_dir, "jacc_cand", lambda: _jaccard_candidates(sh).persist())
     # exact verify from pair common-counts (r14; see _pair_exact_common)
-    arrs = _arrays_cached(spark, d, sf_dir)
+    arrs = memo(spark, sf_dir, "doc_arrays", lambda: _doc_shingle_arrays(d).persist())
     stats = _pair_exact_common(sh, arrs, cand)
     n_common = F.col("n_common")
     cont = n_common.cast("double") / F.least(F.col("n_a"), F.col("n_b"))
@@ -1595,8 +1500,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     production pipeline persists between runs (here: the memoized bands
     frame stands in for it)."""
     d = load(spark, sf_dir, "documents")
-    arrs = _arrays_cached(spark, d, sf_dir)
-    bands = _bands_cached(spark, arrs, sf_dir)
+    arrs = memo(spark, sf_dir, "doc_arrays", lambda: _doc_shingle_arrays(d).persist())
+    bands = memo(spark, sf_dir, "bands", lambda: _bands(arrs).persist())
     hotb = (
         bands.groupBy("band", "bkey")
         .agg(F.count(F.lit(1)).alias("bn"))
@@ -1776,9 +1681,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)  # 8 rows; lets w0's blocks free now
     )
-    from .advanced import _free_local_checkpoint
-
-    _free_local_checkpoint(w0)
+    release(w0)
     return out
 
 
@@ -2118,8 +2021,8 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds recall with tight CIs), while the candidate side stays full.
     One row out."""
     d = load(spark, sf_dir, "documents")
-    sh = _shingles_cached(spark, d, sf_dir)
-    arrs = _arrays_cached(spark, d, sf_dir)
+    sh = memo(spark, sf_dir, "shingles", lambda: _shingles(d).persist())
+    arrs = memo(spark, sf_dir, "doc_arrays", lambda: _doc_shingle_arrays(d).persist())
 
     def exact_pairs(cand: DataFrame) -> DataFrame:
         # in-row array_intersect verify (see dedup_ngram_jaccard's r8 note)
@@ -2140,10 +2043,10 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return pairs.filter(jac >= _JACCARD_T).select("doc_a", "doc_b")
 
-    truth = exact_pairs(_jaccard_candidates_cached(spark, sh, sf_dir))
-    cand = _lsh_candidates(_bands_cached(spark, arrs, sf_dir)).select(
-        "doc_a", "doc_b"
-    )
+    jacc = memo(spark, sf_dir, "jacc_cand", lambda: _jaccard_candidates(sh).persist())
+    bands = memo(spark, sf_dir, "bands", lambda: _bands(arrs).persist())
+    truth = exact_pairs(jacc)
+    cand = _lsh_candidates(bands).select("doc_a", "doc_b")
     verified = exact_pairs(cand)
     n_docs = arrs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     n_truth = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
@@ -3869,8 +3772,6 @@ def dedup_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Materialize the (near-dup pairs only, tiny) result eagerly so the tf
     # and samp checkpoint blocks can be freed before returning.
-    from .advanced import _free_local_checkpoint
-
     result = (
         exact.filter(F.col("jw") >= _ICWS_JW)
         .select(
@@ -3882,7 +3783,7 @@ def dedup_weighted_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     for interim in (tf, samp):
-        _free_local_checkpoint(interim)
+        release(interim)
     return result
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import memo
 from ..tables import load
 
 _DIM = 64
@@ -439,17 +440,8 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from ..registry import deprioritize  # noqa: E402
-from ..tables import register_aux_cache  # noqa: E402
 
 deprioritize("sim_range_search")
-
-# Trained IVF centroids per (session, sf_dir, k, iters). Registered so
-# tables.clear_cache() stays the ONE reset path (the _TRI_EDGE_CACHE leak
-# class). VERDICT r11 item 5: sim_ann_ivf and sim_ivf_balance each ran
-# their own identical 3-round Lloyd train (3 collect jobs apiece) — under
-# bench conditions nothing memoized, so the second operator re-paid the
-# whole train. Now they share one.
-_IVF_TRAIN_CACHE: dict = register_aux_cache({})
 
 
 def _ivf_nearest(cents, n):
@@ -557,18 +549,15 @@ def _lloyd_mean_update(spark: SparkSession, e: DataFrame, cents):
 def _ivf_lloyd_cents(spark: SparkSession, sf_dir: str, k: int, iters: int):
     """Deterministic Lloyd training for the IVF coarse quantizer: seeds
     from vec_id 0..k-1, ``iters`` assignment+mean rounds. Only k x 64
-    doubles ever reach the driver per round. Memoized per (session,
-    sf_dir, k, iters) so every IVF-family operator in a session pays the
-    train exactly once."""
-    key = (
-        "ivf-lloyd",
-        getattr(spark.sparkContext, "applicationId", ""),
-        sf_dir,
-        k,
-        iters,
+    doubles ever reach the driver per round. A session memo per (k,
+    iters): sim_ann_ivf and sim_ivf_balance each ran their own identical
+    train (3 collect jobs apiece) before they shared one."""
+    return memo(
+        spark, sf_dir, f"ivf_lloyd_k{k}_i{iters}", lambda: _ivf_train(spark, sf_dir, k, iters)
     )
-    if key in _IVF_TRAIN_CACHE:
-        return _IVF_TRAIN_CACHE[key]
+
+
+def _ivf_train(spark: SparkSession, sf_dir: str, k: int, iters: int):
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = [
         (i + 1, [float(x) for x in r.embedding])
@@ -586,7 +575,6 @@ def _ivf_lloyd_cents(spark: SparkSession, sf_dir: str, k: int, iters: int):
     # sidesteps both costs (no explode, no literals in the plan).
     for _ in range(iters):
         cents = _lloyd_mean_update(spark, e, cents)
-    _IVF_TRAIN_CACHE[key] = cents
     return cents
 
 
@@ -984,13 +972,6 @@ def _pq_ann_oracle(nq: int = 5, topk: int = 5) -> str:
     """
 
 
-from ..tables import register_aux_cache
-
-# registered so tables.clear_cache() stays the ONE reset path (same leak
-# class the r5 review fixed for _TRI_EDGE_CACHE)
-_PQ_FIT_CACHE: dict = register_aux_cache({})
-
-
 def _pq_subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     return e.select(
@@ -1057,15 +1038,13 @@ def _pq_assign(sv: DataFrame, cents: dict) -> DataFrame:
 def _pq_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     """Seeds from vec_id 0..k-1, ONE Lloyd update (the oracle's c1); the
     caller assigns against the returned codebook for the second, final
-    round. Memoized per (session, sf_dir): training collects only
-    m*k*sub = 256 doubles. Returns (sub-vector frame, codebook dict)."""
-    try:
-        key = (spark.sparkContext.applicationId, sf_dir)
-    except Exception:
-        key = ("", sf_dir)
+    round. A session memo: training collects only m*k*sub = 256
+    doubles. Returns (sub-vector frame, codebook dict)."""
     sv = _pq_subvectors(spark, sf_dir)
-    if key in _PQ_FIT_CACHE:
-        return sv, _PQ_FIT_CACHE[key]
+    return sv, memo(spark, sf_dir, "pq_codebook", lambda: _pq_train(sv))
+
+
+def _pq_train(sv: DataFrame) -> dict:
     seeds = sv.filter(F.col("vec_id") < _PQ_K).collect()
     cents = {
         (int(r.subspace), int(r.vec_id) + 1): [float(x) for x in r.v] for r in seeds
@@ -1080,11 +1059,9 @@ def _pq_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
         .select("subspace", "code", F.col("pm.mu").alias("cent"))
         .collect()
     )
-    cents = {
+    return {
         (int(r.subspace), int(r.code)): [float(x) for x in r.cent] for r in updated
     }
-    _PQ_FIT_CACHE[key] = cents
-    return sv, cents
 
 
 @register("vec_pq_train", oracle=_pq_oracle())
@@ -1465,15 +1442,11 @@ def cov_gram_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     full corpus pass in one session — a duplicated subtree across keys
     (guide §1.2), ~2-4s of first-invocation machinery per key at sf0.1 and
     a duplicated full-data pass at any scale. The reduced frame is d^2 + d
-    rows, persisted per (applicationId, sf_dir) in the aux-cache registry
-    (freed by ``tables.clear_cache``; fresh driver/oracle sessions build it
-    from parquet every run — nothing survives a process)."""
+    rows, a persisted session memo."""
     import numpy as np
     import pandas as pd
 
-    key = ("cov_parts", getattr(spark.sparkContext, "applicationId", ""), sf_dir)
-    cov = _PQ_FIT_CACHE.get(key)
-    if cov is None:
+    def build():
         e = load(spark, sf_dir, "embeddings").select("embedding")
 
         def partial_gram(batches):
@@ -1497,14 +1470,14 @@ def cov_gram_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                     }
                 )
 
-        cov = (
+        return (
             e.mapInPandas(partial_gram, "i int, j int, v double, n long")
             .groupBy("i", "j")
             .agg(F.sum("v").alias("v"), F.sum("n").alias("n"))
             .persist()
         )
-        _PQ_FIT_CACHE[key] = cov
-    return cov
+
+    return memo(spark, sf_dir, "cov_gram_parts", build)
 
 
 @register("vec_power_iteration", oracle=_power_iter_oracle())

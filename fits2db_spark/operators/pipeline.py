@@ -21,8 +21,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import deprioritize, register
+from ..session import memo
 from ..tables import load
-from .llm_text import _SHINGLES_SQL, _h64, _shingles_cached
+from .llm_text import _SHINGLES_SQL, _h64, _shingles
 
 
 # ---------------------------------------------------------------------------
@@ -235,7 +236,7 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     join under AQE when it fits, else a shuffle on the 8-byte shingle key;
     per-doc overlap is a partial-agg groupBy on doc_id."""
     d = load(spark, sf_dir, "documents")
-    sh = _shingles_cached(spark, d, sf_dir)
+    sh = memo(spark, sf_dir, "shingles", lambda: _shingles(d).persist())
     bench = d.filter(F.col("source") == "src0").select("doc_id")
     bench_sh = sh.join(bench, "doc_id", "semi").select("shingle").distinct()
     corp_sh = sh.join(bench, "doc_id", "anti")

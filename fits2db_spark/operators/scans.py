@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import memo
 from ..tables import SCHEMAS, load
 
 _SCRATCH = os.path.join(tempfile.gettempdir(), "fits2db_spark_scratch")
@@ -31,23 +32,6 @@ _SCRATCH = os.path.join(tempfile.gettempdir(), "fits2db_spark_scratch")
 # as a needless side effect. Paths embed the sf tag so alternating scale
 # factors in one session can never serve stale data.
 _SCRATCH_DONE: set[tuple[str, str]] = set()
-# (applicationId, sf_dir) -> checkpointed pushdown result; see
-# fits_datasource_pushdown for why the checkpoint is cached, not freed.
-# Staleness: keys on the sf_dir path like _SCRATCH_DONE (re-staging under
-# the same path within a session serves stale rows — clear via
-# clear_pushdown_ckpt_cache / session.free_memo_checkpoints). Bounded: an
-# insert for a new sf_dir evicts-and-frees entries of other sf_dirs.
-_PUSHDOWN_CKPT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_pushdown_ckpt_cache() -> None:
-    """Free the memoized pushdown checkpoints' block storage and empty the
-    cache — bench.py's between-tier evict hook (VERDICT r13 item 6)."""
-    from .advanced import _free_local_checkpoint
-
-    while _PUSHDOWN_CKPT_CACHE:
-        _, df = _PUSHDOWN_CKPT_CACHE.popitem()
-        _free_local_checkpoint(df)
 
 
 def _scratch_dir(spark: SparkSession, sf_dir: str, name: str, write) -> str:
@@ -1338,48 +1322,36 @@ def fits_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(blob)
 
     path = _scratch_dir(spark, sf_dir, "nation_fits", write)
-    # The pushdown conf is consulted when the scan is PLANNED (action time),
-    # so restore-after-return would silently disable it — and leaving it set
-    # would change scan behavior for every later fits read in the session.
-    # Materialize eagerly while the conf is on, then restore (ADVICE r11).
-    # Memoized per (session, sf_dir) so repeated invocations reuse ONE
-    # checkpoint instead of accumulating blocks in the block manager
-    # (ADVICE r12 — the other localCheckpoint sites pair with
-    # _free_local_checkpoint; here the result must outlive the call, so
-    # per-session reuse is the leak-free shape).
-    cache_key = (
-        getattr(spark.sparkContext, "applicationId", ""),
-        sf_dir,
-    )
-    cached = _PUSHDOWN_CKPT_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    if _PUSHDOWN_CKPT_CACHE:  # displacement eviction: new sf_dir frees old
-        from .advanced import _free_local_checkpoint
 
-        for old in [k for k in _PUSHDOWN_CKPT_CACHE if k != cache_key]:
-            _free_local_checkpoint(_PUSHDOWN_CKPT_CACHE.pop(old))
-    conf_key = "spark.sql.python.filterPushdown.enabled"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "true")
-    try:
-        register_fits(spark)
-        df = (
-            spark.read.format("fits")
-            .option("hdu", "1")
-            .option("pushdown", "true")
-            .load(path)
-        )
-        out = df.filter(
-            (F.col("n_regionkey") == 2) & (F.col("n_nationkey") > 5)
-        ).select("n_nationkey", "n_name").localCheckpoint(eager=True)
-        _PUSHDOWN_CKPT_CACHE[cache_key] = out
-        return out
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
+    def build() -> DataFrame:
+        # The pushdown conf is consulted when the scan is PLANNED (action
+        # time), so restore-after-return would silently disable it — and
+        # leaving it set would change scan behavior for every later fits
+        # read in the session. Materialize eagerly while the conf is on,
+        # then restore (ADVICE r11).
+        conf_key = "spark.sql.python.filterPushdown.enabled"
+        prev = spark.conf.get(conf_key, None)
+        spark.conf.set(conf_key, "true")
+        try:
+            register_fits(spark)
+            df = (
+                spark.read.format("fits")
+                .option("hdu", "1")
+                .option("pushdown", "true")
+                .load(path)
+            )
+            return df.filter(
+                (F.col("n_regionkey") == 2) & (F.col("n_nationkey") > 5)
+            ).select("n_nationkey", "n_name").localCheckpoint(eager=True)
+        finally:
+            if prev is None:
+                spark.conf.unset(conf_key)
+            else:
+                spark.conf.set(conf_key, prev)
+
+    # The result must outlive the call, so it is a session memo rather
+    # than a checkpoint freed before returning.
+    return memo(spark, sf_dir, "fits_pushdown", build)
 
 
 @register(

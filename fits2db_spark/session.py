@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Confs that are safe (and required) to set at runtime on a live session.
 # NOTE: events.parquet stores timestamp[ns]; PySpark 4.1.2 reads it natively
@@ -128,36 +128,63 @@ def get_spark(app_name: str = "fits2db_spark", shuffle_partitions: int | None = 
     return ensure_runtime_confs(spark)
 
 
+# (applicationId, sf_dir, name) -> memoized operator intermediate; see memo().
+_MEMO: dict[tuple[str, str, str], object] = {}
+
+
+def release(df) -> None:
+    """Free the executor storage behind a frame: its cache-manager entry
+    (``persist``) and, for a ``localCheckpoint``-ed frame, the checkpoint
+    blocks of the RDD behind its ``LogicalRDD`` leaf, which ``unpersist()``
+    does not touch. A checkpointed frame is unreadable afterwards, so only
+    release superseded or evicted intermediates. Values that are not frames
+    (driver-side codebooks) hold no storage and are ignored."""
+    if not isinstance(df, DataFrame):
+        return
+    try:
+        df.unpersist()
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass  # not a LogicalRDD plan, or already cleaned: nothing more to free
+
+
+def memo(spark: SparkSession, sf_dir: str, name: str, build):
+    """Return this session's intermediate ``name`` for ``sf_dir``, calling
+    ``build()`` on the first request. Operators use it to share a
+    persisted or checkpointed frame (or a driver-side result) across
+    keys and repeated calls in one session.
+
+    * Key: ``(applicationId, sf_dir, name)``. When the application id
+      cannot be read, ``build()`` runs unmemoized.
+    * Eviction: inserting a key for a new ``(applicationId, sf_dir)``
+      releases every entry of other ones, so a session sweeping scale
+      factors holds one sf_dir's intermediates at a time;
+      :func:`free_memo_checkpoints` releases all of them.
+    * Entries key on the sf_dir PATH: re-staging different data under the
+      same path within one session serves stale rows until
+      :func:`free_memo_checkpoints` runs.
+    * A frame built on an evicted checkpoint must not be executed
+      afterwards: its blocks are gone. Consume an operator's result before
+      running one on another sf_dir or freeing the memo."""
+    try:
+        key = (spark.sparkContext.applicationId, sf_dir, name)
+    except Exception:
+        return build()
+    if key not in _MEMO:
+        for old in [k for k in _MEMO if k[:2] != key[:2]]:
+            release(_MEMO.pop(old))
+        _MEMO[key] = build()
+    return _MEMO[key]
+
+
 def free_memo_checkpoints() -> None:
-    """Evict every per-session operator memo — the cross-match phase-1 /
-    FITS-pushdown ``localCheckpoint`` caches, every persisted-DataFrame
-    dict in the ``tables._AUX_CACHES`` registry (the graph edge/pair
-    memos, IVF train, PQ fit, covariance Gram), and the llm_text
-    shingle/band/component caches — and free their block-manager storage.
+    """Release every :func:`memo` entry and empty the store.
 
-    The memo caches make repeated invocations of the SAME key cheap, but
-    they hold executor storage for the whole session: VERDICT r13 measured
-    ~1.8x slowdown on an unrelated later key sharing the session with
-    ``join_xmatch_knn``'s retained checkpoint, and before r15 this helper
-    freed LESS than its name promises (VERDICT r14 item 2) — the graph /
-    vector / text memos stayed persisted for the session after bench.py's
-    between-tier eviction calls. Long-lived sessions that re-stage data
-    under an sf_dir should call it to drop stale entries; the fixture
-    cache that ``tables.warm_cache`` builds is deliberately NOT touched
-    (that is the bench's base-table layout, reset via
-    ``tables.clear_cache``)."""
-    from . import tables
-    from .operators.joins import clear_xm_p1_cache
-    from .operators.llm_text import clear_caches as clear_llm_text_caches
-    from .operators.scans import clear_pushdown_ckpt_cache
-
-    clear_xm_p1_cache()
-    clear_pushdown_ckpt_cache()
-    clear_llm_text_caches()
-    for aux in tables._AUX_CACHES:
-        for df in aux.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        aux.clear()
+    Memos make repeated calls of the same key cheap but hold executor
+    storage for the whole session: an unrelated later key slows down next
+    to another key's retained checkpoint (about 1.8x measured next to
+    ``join_xmatch_knn``'s). Call it between workloads or tiers, and after
+    re-staging data under an sf_dir. The fixture cache built by
+    ``tables.warm_cache`` is not touched; ``tables.clear_cache`` drops both."""
+    while _MEMO:
+        release(_MEMO.popitem()[1])

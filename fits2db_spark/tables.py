@@ -31,7 +31,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .session import ensure_runtime_confs
+from .session import ensure_runtime_confs, free_memo_checkpoints, release
 
 TABLE_NAMES = (
     "region",
@@ -161,31 +161,12 @@ def warm_cache(spark: SparkSession, sf_dir: str, partitions: int | None = None) 
         _CACHE[(sf_dir, name)] = df
 
 
-# Operator modules with their own persisted-DataFrame memo dicts register
-# them here so clear_cache() is the ONE reset path (r5 review: the
-# graph_triangles edge memo leaked past clear_cache).
-_AUX_CACHES: list[dict] = []
-
-
-def register_aux_cache(cache: dict) -> dict:
-    _AUX_CACHES.append(cache)
-    return cache
-
-
 def clear_cache() -> None:
+    """Drop the warm fixture cache, then every operator memo."""
     for df in _CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        release(df)
     _CACHE.clear()
-    for aux in _AUX_CACHES:
-        for df in aux.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        aux.clear()
+    free_memo_checkpoints()
 
 
 def load(spark: SparkSession, sf_dir: str, name: str, _use_cache: bool = True) -> DataFrame:

@@ -209,6 +209,27 @@ def test_cli_rejects_nonpositive_votable_limit(capsys):
     assert "must be >= 1" in capsys.readouterr().err
 
 
+def test_cli_rejects_nonpositive_jdbc_numbers_before_any_sink(tmp_path, spark, capsys):
+    """--batchsize 0 used to write the CSV sink before Spark's JDBC options
+    raised; --num-partitions 0 was silently ignored. Both must fail at
+    argument parsing, before any sink writes."""
+    blob = write_fits_bintable([("id", "K", [1, 2, 3])])
+    src = tmp_path / "cat.fits"
+    src.write_bytes(blob)
+    url = f"jdbc:derby:{tmp_path}/db;create=true"
+    for flag in ("--batchsize", "--num-partitions"):
+        out_dir = tmp_path / f"csv{flag}"
+        with pytest.raises(SystemExit) as exc:
+            run(
+                [str(src), "--table", "t", "--csv-out", str(out_dir),
+                 "--jdbc-url", url, flag, "0"],
+                spark=spark,
+            )
+        assert exc.value.code == 2
+        assert not out_dir.exists(), f"{flag} 0 wrote the CSV sink"
+    assert "must be >= 1" in capsys.readouterr().err
+
+
 def test_scaleup_bench_surfaces_subprocess_failures(monkeypatch):
     """r8 ADVICE: run_benches must raise with the subprocess stderr instead
     of dying on an IndexError when a bench crashes or prints no JSON."""

@@ -441,8 +441,8 @@ def test_co_supply_agg_is_one_wide_pass(spark):
     across a narrow shuffle."""
     from pyspark.sql import functions as F
 
-    from fits2db_spark.operators import advanced as A
     from fits2db_spark.operators.advanced import _co_supply_pair_counts
+    from fits2db_spark.session import free_memo_checkpoints
     from fits2db_spark.tables import load
 
     # drop the session-shared graph memos first: if _co_supply_counts is
@@ -450,7 +450,7 @@ def test_co_supply_agg_is_one_wide_pass(spark):
     # substitutes an InMemoryTableScan for this whole subtree and the
     # explain text prints the cached build plan's Final AND Initial
     # sections — doubling the REPARTITION_BY_NUM line this test counts.
-    A.clear_graph_memos()
+    free_memo_checkpoints()
 
     ps = (
         load(spark, SF_SMOKE, "lineitem")

@@ -3,6 +3,8 @@ ladder and the k-core convergence early-exit must not change what any query
 computes (the oracle pins end-to-end equality; these pin the specific
 invariants the optimizations rely on)."""
 
+from fits2db_spark import session
+from fits2db_spark.session import free_memo_checkpoints
 from tests.conftest import SF_SMOKE
 
 
@@ -17,11 +19,12 @@ def test_xm_singlepass_at_fixture_scale(spark):
     from fits2db_spark.operators import joins as J
 
     assert J._catalog_rows(SF_SMOKE) < J._XM_LADDER_MIN_ROWS
-    J.clear_xm_p1_cache()
+    free_memo_checkpoints()
     J.join_xmatch_knn(spark, SF_SMOKE).write.format("noop").mode(
         "overwrite"
     ).save()
-    assert J._XM_P1_CACHE == {}, "single-pass path must not build rung memos"
+    rungs = [k for k in session._MEMO if k[2].startswith("xmatch_")]
+    assert rungs == [], "single-pass path must not build rung memos"
 
 
 def test_xm_ladder_and_singlepass_agree(spark, monkeypatch):
@@ -29,16 +32,16 @@ def test_xm_ladder_and_singlepass_agree(spark, monkeypatch):
     scale must return row-identical results to the single pass."""
     from fits2db_spark.operators import joins as J
 
-    J.clear_xm_p1_cache()
+    free_memo_checkpoints()
     single = _rows(
         J.join_xmatch_knn(spark, SF_SMOKE), "b_id", "a_id", "rk", "sep_arcsec_floor"
     )
     monkeypatch.setattr(J, "_XM_LADDER_MIN_ROWS", 0)
-    J.clear_xm_p1_cache()
+    free_memo_checkpoints()
     laddered = _rows(
         J.join_xmatch_knn(spark, SF_SMOKE), "b_id", "a_id", "rk", "sep_arcsec_floor"
     )
-    J.clear_xm_p1_cache()
+    free_memo_checkpoints()
     assert single == laddered
     assert len(single) > 0
 
@@ -57,13 +60,13 @@ def test_kcore_unroll_invariance(spark, monkeypatch):
     from fits2db_spark.operators import advanced as A
 
     def run():
-        A.clear_graph_memos()
+        free_memo_checkpoints()
         return _rows(A.graph_kcore(spark, SF_SMOKE), "node", "core_degree")
 
     base = run()
     monkeypatch.setattr(A, "_KCORE_ROUNDS", A._KCORE_ROUNDS + 3)
     more = run()
-    A.clear_graph_memos()
+    free_memo_checkpoints()
     assert base == more
 
 
@@ -412,13 +415,10 @@ def test_spatial_htm_chain_is_split_and_freed(spark, monkeypatch):
     levels 3 and 6) plus the eager result, and frees exactly the 2
     interims (the full 38-projection span is what Janino failed to
     compile — OPTIMIZATION_r14.md §22)."""
-    from fits2db_spark.operators import advanced as A
     from fits2db_spark.operators import etl as E
 
     freed = []
-    monkeypatch.setattr(
-        A, "_free_local_checkpoint", lambda df: freed.append(df)
-    )
+    monkeypatch.setattr(E, "release", lambda df: freed.append(df))
     out = E.spatial_htm(spark, SF_SMOKE)
     assert len(freed) == 2, "chain must checkpoint (and free) 2 interim spans"
     # the returned frame is the eager result checkpoint: a leaf scan, so
@@ -492,7 +492,7 @@ def test_ps_pairs_memo_shared_and_equivalent(spark):
     from fits2db_spark import tables
     from fits2db_spark.operators import advanced as A
 
-    A.clear_graph_memos()
+    free_memo_checkpoints()
     base = A._ps_pairs(spark, SF_SMOKE)
     assert A._ps_pairs(spark, SF_SMOKE) is base, "memo must return one frame"
     sym = A._lpa_sym_edges(spark, SF_SMOKE)
@@ -515,9 +515,9 @@ def test_ps_pairs_memo_shared_and_equivalent(spark):
     assert len(e) > 0 and len(e) % 2 == 0
     assert e == sorted((d, s) for s, d in e)
 
-    # clear_cache stays the ONE reset path for the shared graph base
+    # clear_cache also drops the shared graph base
     tables.clear_cache()
-    assert A._TRI_EDGE_CACHE == {}
+    assert not session._MEMO
 
 
 def test_co_supply_counts_memo_shared_by_threshold_builds(spark):
@@ -526,13 +526,13 @@ def test_co_supply_counts_memo_shared_by_threshold_builds(spark):
     thresholded edge-list builds must read the same persisted frame."""
     from fits2db_spark.operators import advanced as A
 
-    A.clear_graph_memos()
+    free_memo_checkpoints()
     sh = A._co_supply_counts(spark, SF_SMOKE)
     assert A._co_supply_counts(spark, SF_SMOKE) is sh, "memo must return one frame"
     A.graph_triangles(spark, SF_SMOKE).collect()
-    cosupply = [k for k in A._TRI_EDGE_CACHE if k and k[0] == "cosupply"]
+    cosupply = [k for k in session._MEMO if k[2] == "cosupply"]
     assert len(cosupply) == 1
-    assert A._TRI_EDGE_CACHE[cosupply[0]] is sh
+    assert session._MEMO[cosupply[0]] is sh
     A.graph_kcore(spark, SF_SMOKE).collect()
-    assert A._TRI_EDGE_CACHE[cosupply[0]] is sh, "kcore build must reuse it"
-    A.clear_graph_memos()
+    assert session._MEMO[cosupply[0]] is sh, "kcore build must reuse it"
+    free_memo_checkpoints()

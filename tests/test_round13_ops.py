@@ -39,13 +39,14 @@ def test_spark_round_matches_spark_on_halfway_reprs(spark):
 
 
 def test_fits_datasource_pushdown_checkpoint_is_memoized(spark):
+    from fits2db_spark import session
     from fits2db_spark.operators import scans
 
-    scans._PUSHDOWN_CKPT_CACHE.clear()
+    session.free_memo_checkpoints()
     a = scans.fits_datasource_pushdown(spark, SF_SMOKE)
     b = scans.fits_datasource_pushdown(spark, SF_SMOKE)
     assert a is b, "repeated invocations must reuse the cached checkpoint"
-    assert len(scans._PUSHDOWN_CKPT_CACHE) == 1
+    assert [k[2] for k in session._MEMO] == ["fits_pushdown"]
     assert a.count() == b.count()
 
 

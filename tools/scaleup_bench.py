@@ -133,11 +133,11 @@ def run_benches() -> dict:
 
 def candidate_growth() -> list[dict]:
     from fits2db_spark.operators.llm_text import (
-        _arrays_cached,
-        _bands_cached,
+        _bands,
+        _doc_shingle_arrays,
         _jaccard_candidates,
         _lsh_candidates,
-        _shingles_cached,
+        _shingles,
     )
     from fits2db_spark.session import get_spark
     from fits2db_spark.tables import load
@@ -147,10 +147,8 @@ def candidate_growth() -> list[dict]:
     for tier in ("/root/testdata/sf0.01", "/root/testdata/sf0.1", OUT):
         d = load(spark, tier, "documents")
         n_docs = d.count()
-        lsh = _lsh_candidates(
-            _bands_cached(spark, _arrays_cached(spark, d, tier), tier)
-        ).count()
-        jac = _jaccard_candidates(_shingles_cached(spark, d, tier)).count()
+        lsh = _lsh_candidates(_bands(_doc_shingle_arrays(d))).count()
+        jac = _jaccard_candidates(_shingles(d)).count()
         rows.append(
             {
                 "tier": tier,

@@ -23,14 +23,15 @@ Usage: python tools/verify_all.py [--fast] [--deep] [--scaleup]
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DRIVER_SIM = (
-    "import sys; sys.path.insert(0, '/root/repo')\n"
+    f"import sys; sys.path.insert(0, {REPO!r})\n"
     "from pyspark.sql import SparkSession\n"
     "spark = (SparkSession.builder.master('local[8]')\n"
     "         .config('spark.ui.enabled','false').getOrCreate())\n"
