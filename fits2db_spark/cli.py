@@ -46,12 +46,13 @@ def build_parser() -> argparse.ArgumentParser:
         default="1",
         help="BINTABLE extension: 1-based index or EXTNAME (default 1)",
     )
-    p.add_argument(
+    kind = p.add_mutually_exclusive_group()
+    kind.add_argument(
         "--ascii",
         action="store_true",
         help="inputs are ASCII TABLE extensions (XTENSION=TABLE) instead of BINTABLE",
     )
-    p.add_argument(
+    kind.add_argument(
         "--image",
         action="store_true",
         help="inputs are IMAGE extensions: load one (x, y, val) row per "

@@ -879,11 +879,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result
 
 
-from ..registry import deprioritize  # noqa: E402
-
-deprioritize("graph_pagerank")
-
-
 @register("vec_pca_evr")  # rows-only: LAPACK eig on the driver's 64x64 Gram
 def vec_pca_evr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA of the embedding column — the dimensionality-reduction step a
@@ -927,9 +922,6 @@ def vec_pca_evr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, "component int, eigenvalue double, evr double")
 
 
-deprioritize("vec_pca_evr")
-
-
 _JOIN_SALT = 8
 
 
@@ -970,9 +962,6 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
             "revenue"
         ),
     )
-
-
-deprioritize("join_skew_salted")
 
 
 # ---------------------------------------------------------------------------

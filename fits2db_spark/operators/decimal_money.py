@@ -50,8 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import load
-from .scans import _scratch_dir
+from ..tables import load, stage
 
 # ---------------------------------------------------------------------------
 # Parquet round-trip of a DECIMAL(15,2) column
@@ -86,7 +85,7 @@ def decimal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet pages dictionary- and delta-encode like any integer column,
     and min/max page stats on the unscaled value keep data skipping alive.
     """
-    out = _scratch_dir(
+    out = stage(
         spark,
         sf_dir,
         "lineitem_decimal",

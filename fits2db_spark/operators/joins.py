@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..session import memo, release
-from ..tables import load
+from ..tables import load, stage
 
 
 @register(
@@ -591,11 +591,6 @@ def join_xmatch_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(sep_arcsec <= _XM_RADIUS_ARCSEC)
         .select("a_id", "b_id", F.round(sep_arcsec, 2).alias("sep_arcsec"))
     )
-
-
-from ..registry import deprioritize  # noqa: E402
-
-deprioritize("join_asof_tolerance")
 
 
 @register(
@@ -1651,14 +1646,12 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     warehouse makes for its fact-to-fact conformance keys."""
     import os
 
-    from .scans import _scratch_dir
-
     # catalog identifiers cannot carry '.' (sf0.001 would parse as a
     # schema qualifier) — sanitize the tag for the table names only
     tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
     li_t, o_t = f"li_bkt_{tag}", f"o_bkt_{tag}"
 
-    def stage(out_dir: str) -> None:
+    def write(out_dir: str) -> None:
         os.makedirs(out_dir, exist_ok=True)
         spark.sql(f"DROP TABLE IF EXISTS {li_t}")
         spark.sql(f"DROP TABLE IF EXISTS {o_t}")
@@ -1681,10 +1674,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
             .saveAsTable(o_t)
         )
 
-    # _scratch_dir memoizes per (session, sf): a fresh session re-runs
-    # stage(), which drops + recreates the catalog entries over the same
-    # external paths — so the tables always exist when the join builds
-    _scratch_dir(spark, sf_dir, "bucketed_join", stage)
+    stage(spark, sf_dir, "bucketed_join", write)
     return (
         spark.table(li_t)
         .hint("merge")

@@ -1088,9 +1088,7 @@ def doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-2 additions — registered at the END of the driver ordering
-# (registry.deprioritize) so they extend coverage without displacing the
-# curated first-50 verification window.
+# Round-2 additions
 # ---------------------------------------------------------------------------
 
 # deterministic PII-bearing text: the fixture corpus is synthetic and clean,
@@ -1264,11 +1262,6 @@ def dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..registry import deprioritize  # noqa: E402
-
-deprioritize("text_pii_redact", "dedup_keep_longest")
-
-
 def _cc_sym(e: DataFrame) -> DataFrame:
     return e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1375,9 +1368,6 @@ def dedup_components_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
         return und
 
     return _summary(memo(spark, sf_dir, "cc_bigstar", build))
-
-
-deprioritize("dedup_components_bigstar")
 
 
 _CONTAIN_T = 0.7  # containment threshold

@@ -439,11 +439,6 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..registry import deprioritize  # noqa: E402
-
-deprioritize("sim_range_search")
-
-
 def _ivf_nearest(cents, n):
     """Stable-label nearest-cell expression: top-``n`` cell LABELS for the
     row's ``embedding`` against the (label, centroid) list ``cents``.
@@ -714,9 +709,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= 3)
         .select("query_id", "neighbor_id", "cos_sim", "rk")
     )
-
-
-deprioritize("sim_ann_ivf")
 
 
 @register(

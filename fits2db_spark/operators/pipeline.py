@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import deprioritize, register
+from ..registry import register
 from ..session import memo
 from ..tables import load
 from .llm_text import _SHINGLES_SQL, _h64, _shingles
@@ -686,22 +686,6 @@ def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-deprioritize(
-    "merge_upsert",
-    "scd2_intervals",
-    "split_train_test",
-    "seq_pack_bins",
-    "text_vocab_topk",
-    "contamination_ngram",
-    "anomaly_zscore",
-    "dq_profile",
-    "agg_mode_median",
-    "corr_covar",
-    "vec_quantize_int8",
-    "cms_heavy_hitters",
-)
-
-
 @register(
     "dq_expectations",
     oracle="""
@@ -765,9 +749,6 @@ def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scalar.unionByName(fk)
 
 
-deprioritize("dq_expectations")
-
-
 @register(
     "agg_string_concat",
     oracle="""
@@ -794,9 +775,6 @@ def agg_string_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
             ",", F.sort_array(F.collect_list(F.col("o_orderkey").cast("string")))
         ).alias("order_keys"),
     )
-
-
-deprioritize("agg_string_concat")
 
 
 # ---------------------------------------------------------------------------

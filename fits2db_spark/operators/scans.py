@@ -23,28 +23,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..session import memo
-from ..tables import SCHEMAS, load
-
-_SCRATCH = os.path.join(tempfile.gettempdir(), "fits2db_spark_scratch")
-
-# Scratch round-trip outputs are written once per (session, sf_dir) — the
-# round-1 review flagged the per-invocation rewrite (bench warmup included)
-# as a needless side effect. Paths embed the sf tag so alternating scale
-# factors in one session can never serve stale data.
-_SCRATCH_DONE: set[tuple[str, str]] = set()
-
-
-def _scratch_dir(spark: SparkSession, sf_dir: str, name: str, write) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    out = os.path.join(_SCRATCH, f"{name}_{tag}")
-    try:
-        key = (spark.sparkContext.applicationId, out)
-    except Exception:
-        key = ("", out)
-    if key not in _SCRATCH_DONE or not os.path.exists(out):
-        write(out)
-        _SCRATCH_DONE.add(key)
-    return out
+from ..tables import SCHEMAS, load, stage
 
 
 @register("scan_parquet", oracle="SELECT * FROM region")
@@ -57,7 +36,7 @@ def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV round trip: emit the reference's interchange format, read it back
     with an explicit StructType (header on, standard quoting)."""
-    out = _scratch_dir(
+    out = stage(
         spark,
         sf_dir,
         "nation_csv",
@@ -72,7 +51,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("scan_json", oracle="SELECT * FROM nation")
 def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines round trip with explicit schema."""
-    out = _scratch_dir(
+    out = stage(
         spark,
         sf_dir,
         "nation_json",
@@ -108,7 +87,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_extra", (F.col("n_nationkey").cast("long") * 10)
         ).write.mode("overwrite").parquet(os.path.join(out_dir, "gen=2"))
 
-    out = _scratch_dir(spark, sf_dir, "nation_evolving", write)
+    out = stage(spark, sf_dir, "nation_evolving", write)
     return (
         spark.read.option("mergeSchema", True)
         .parquet(os.path.join(out, "gen=1"), os.path.join(out, "gen=2"))
@@ -133,9 +112,18 @@ def fits_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a byte-level FITS file (our own writer), then read it back through
     the binaryFile + mapInArrow decode path. Oracle-checkable because the
     round trip must reproduce the source rows exactly."""
+    from ..sources.fits import read_fits
+
+    return read_fits(spark, _stage_nation_fits(spark, sf_dir))
+
+
+def _stage_nation_fits(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the nation table as one FITS BINTABLE (J / A24 / J columns,
+    ordered by key) written by our own encoder: the one input of
+    fits_ingest, fits_datasource_v2 and fits_datasource_pushdown."""
     import duckdb
 
-    from ..sources.fits import read_fits, write_fits_bintable
+    from ..sources.fits import write_fits_bintable
 
     def write(out_dir: str) -> None:
         rows = (
@@ -157,7 +145,7 @@ def fits_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(out_dir, "nation.fits"), "wb") as f:
             f.write(blob)
 
-    return read_fits(spark, _scratch_dir(spark, sf_dir, "nation_fits", write))
+    return stage(spark, sf_dir, "nation_fits", write)
 
 
 @register(
@@ -205,7 +193,7 @@ def fits_ingest_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(out_dir, "customer_z.fits"), "wb") as f:
             f.write(blob)
 
-    return read_fits(spark, _scratch_dir(spark, sf_dir, "customer_zfits", write))
+    return read_fits(spark, stage(spark, sf_dir, "customer_zfits", write))
 
 
 @register(
@@ -231,18 +219,7 @@ def scan_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: a date-partitioned event store makes every time-bounded query
     O(days touched), not O(corpus); the same pruning applies to any
     partition column (source, lang, healpix shard...)."""
-
-    def write(out_dir: str) -> None:
-        ev = load(spark, sf_dir, "events")
-        (
-            ev.withColumn("event_date", F.date_trunc("day", F.col("ts")).cast("date"))
-            .repartition("event_date")
-            .write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(out_dir)
-        )
-
-    path = _scratch_dir(spark, sf_dir, "events_partitioned", write)
+    path = _stage_events_partitioned(spark, sf_dir)
     return (
         spark.read.parquet(path)
         .filter(
@@ -255,6 +232,23 @@ def scan_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("total_value"),
         )
     )
+
+
+def _stage_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the events table partitioned by ``event_date`` (Hive-style
+    ``event_date=2024-01-03/`` directories): the one input of
+    scan_partition_pruning and join_dpp."""
+    def write(out_dir: str) -> None:
+        ev = load(spark, sf_dir, "events")
+        (
+            ev.withColumn("event_date", F.date_trunc("day", F.col("ts")).cast("date"))
+            .repartition("event_date")
+            .write.mode("overwrite")
+            .partitionBy("event_date")
+            .parquet(out_dir)
+        )
+
+    return stage(spark, sf_dir, "events_partitioned", write)
 
 
 @register(
@@ -287,10 +281,8 @@ def fits_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stage_sci_image(spark: SparkSession, sf_dir: str) -> str:
     """Stage the 48x32 science image (pixel function (x*31 + y*17) % 1000
-    - 200, BSCALE 0.5 / BZERO 100) ONCE per (session, sf). Shared by
-    fits_image_ingest and fits_cutout — both write to the same scratch
-    key, so the formula must live in exactly one place or whichever
-    operator ran first would silently define the file for both."""
+    - 200, BSCALE 0.5 / BZERO 100): the one input of fits_image_ingest
+    and fits_cutout."""
     from ..sources.fits import write_fits_image
 
     def write(out_dir: str) -> None:
@@ -301,7 +293,7 @@ def _stage_sci_image(spark: SparkSession, sf_dir: str) -> str:
         with open(os.path.join(out_dir, "sci.fits"), "wb") as f:
             write_fits_image(img, bscale=0.5, bzero=100.0, extname="SCI", out=f)
 
-    out = _scratch_dir(spark, sf_dir, "fits_image", write)
+    out = stage(spark, sf_dir, "fits_image", write)
     return os.path.join(out, "sci.fits")
 
 
@@ -368,19 +360,7 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     for any dim filter without rewriting the query, which is exactly what
     static partition filters cannot do. The dimension broadcasts, so the
     pruning subquery reuses the broadcast exchange (no extra scan)."""
-
-    def write(out_dir: str) -> None:
-        ev = load(spark, sf_dir, "events")
-        (
-            ev.withColumn("event_date", F.date_trunc("day", F.col("ts")).cast("date"))
-            .repartition("event_date")
-            .write.mode("overwrite")
-            .partitionBy("event_date")
-            .parquet(out_dir)
-        )
-
-    path = _scratch_dir(spark, sf_dir, "events_partitioned", write)
-    ev = spark.read.parquet(path)
+    ev = spark.read.parquet(_stage_events_partitioned(spark, sf_dir))
     dim = (
         spark.range(62)
         .select(
@@ -426,7 +406,6 @@ def scan_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write(out_dir: str) -> None:
         import glob as _glob
         import shutil
-        import tempfile
 
         tmp = tempfile.mkdtemp(prefix="csv_corrupt_")
         load(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").option(
@@ -442,7 +421,7 @@ def scan_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write("1,TOO,2,MANY,FIELDS,HERE\n")
         shutil.rmtree(tmp, ignore_errors=True)
 
-    path = _scratch_dir(spark, sf_dir, "nation_csv_corrupt", write)
+    path = stage(spark, sf_dir, "nation_csv_corrupt", write)
     # StructType.add mutates in place — build a fresh copy so the shared
     # SCHEMAS["nation"] never grows a corrupt-record column
     from pyspark.sql.types import StructType
@@ -521,7 +500,7 @@ def fits_wcs_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import duckdb
 
     from ..sources.fits import (
-        parse_bintable_header_path,
+        parse_bintable_header,
         read_fits,
         write_fits_bintable,
     )
@@ -550,11 +529,11 @@ def fits_wcs_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(out_dir, "catalog.fits"), "wb") as f:
             f.write(blob)
 
-    path = _scratch_dir(spark, sf_dir, "catalog_wcs_fits", write)
+    path = stage(spark, sf_dir, "catalog_wcs_fits", write)
     df = read_fits(spark, path)
     # WCS is per-file scalar metadata: header-only read (no data I/O)
     fits_file = os.path.join(path, "catalog.fits")
-    cards, _cols, _off = parse_bintable_header_path(fits_file, 1)
+    cards, _cols, _off = parse_bintable_header(fits_file, 1)
     if cards.get("CTYPE1") != "RA---TAN" or cards.get("CTYPE2") != "DEC--TAN":
         raise ValueError(f"unsupported WCS projection: {cards.get('CTYPE1')}")
     crval1, crval2 = float(cards["CRVAL1"]), float(cards["CRVAL2"])
@@ -582,7 +561,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet (predicate pushdown and column pruning both apply; ORC adds
     built-in bloom-filter and min/max index support at write time via
     ``option("orc.bloom.filter.columns", ...)``)."""
-    out = _scratch_dir(
+    out = stage(
         spark,
         sf_dir,
         "nation_orc",
@@ -627,7 +606,7 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rootTag", "suppliers"
         ).save(p)
 
-    out = _scratch_dir(spark, sf_dir, "supplier_xml", write)
+    out = stage(spark, sf_dir, "supplier_xml", write)
     schema = StructType(
         [
             StructField("s_suppkey", sup["s_suppkey"].dataType),
@@ -687,7 +666,7 @@ def scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).text(out_dir)
 
-    out = _scratch_dir(spark, sf_dir, "customer_fixedwidth", write)
+    out = stage(spark, sf_dir, "customer_fixedwidth", write)
     raw = spark.read.text(out)
     cols = []
     for name, start, width in _FW_COLS:
@@ -775,7 +754,7 @@ def pipeline_fits_catalog_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(out_dir, "catalog.fits"), "wb") as f:
             f.write(blob)
 
-    raw = read_fits(spark, _scratch_dir(spark, sf_dir, "catalog_fits", write))
+    raw = read_fits(spark, stage(spark, sf_dir, "catalog_fits", write))
     named = with_sql_safe_names(raw)
     dec = F.degrees(
         F.asin(((F.col("cust_key").cast("double") * 0.6180339887) % 1.0) * 2 - 1)
@@ -833,7 +812,7 @@ def scan_csv_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "compression", "gzip"
         ).csv(p)
 
-    out = _scratch_dir(spark, sf_dir, "customer_csv_gz", write)
+    out = stage(spark, sf_dir, "customer_csv_gz", write)
     cust = SCHEMAS["customer"]
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -871,7 +850,6 @@ def scan_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write(out_dir: str) -> None:
         import glob as _glob
         import shutil
-        import tempfile
 
         tmp = tempfile.mkdtemp(prefix="json_corrupt_")
         load(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").json(tmp)
@@ -885,7 +863,7 @@ def scan_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write('{"n_nationkey": "notanint", "n_name": 7, "n_regionkey": []}\n')
         shutil.rmtree(tmp, ignore_errors=True)
 
-    path = _scratch_dir(spark, sf_dir, "nation_json_corrupt", write)
+    path = stage(spark, sf_dir, "nation_json_corrupt", write)
     from pyspark.sql.types import StringType, StructType
 
     schema = StructType(list(SCHEMAS["nation"].fields)).add(
@@ -964,7 +942,7 @@ def fits_vla_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(out_dir, "vla_z.fits"), "wb") as f:
             f.write(blob)
 
-    df = read_fits(spark, _scratch_dir(spark, sf_dir, "vla_zfits", write))
+    df = read_fits(spark, stage(spark, sf_dir, "vla_zfits", write))
     return (
         df.select("n_nationkey", F.explode("custkeys").alias("ck"))
         .groupBy("n_nationkey")
@@ -999,9 +977,9 @@ def fits_multi_hdu_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     way) runs BEFORE ingest: which HDUs exist, under what EXTNAMEs, with
     how many rows/columns. Stages one file holding REGION + NATION +
     SUPPLIER as three BINTABLE extensions, then catalogs it with the
-    header-only distributed walk (`sources.fits.read_fits_catalog`):
-    headers are parsed executor-side via mapInArrow, data areas are
-    SKIPPED by the standard size formula, so the manifest costs O(files)
+    header-only walk (`sources.fits.read_fits_catalog`): each file's
+    header blocks are read on the driver by seeks, data areas are SKIPPED
+    by the standard size formula, so the manifest costs O(files)
     regardless of data volume — at archive scale (millions of files,
     100 TB of pixels) that asymmetry is the whole point. The data_bytes
     column is dropped for the oracle (byte layout is writer-specific);
@@ -1056,7 +1034,7 @@ def fits_multi_hdu_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(out_dir, "catalog.fits"), "wb") as f:
             f.write(blob)
 
-    staged = _scratch_dir(spark, sf_dir, "multi_hdu_catalog", write)
+    staged = stage(spark, sf_dir, "multi_hdu_catalog", write)
     return read_fits_catalog(spark, staged).drop("data_bytes")
 
 
@@ -1200,8 +1178,8 @@ def fits_cube_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stage_spec_cube(spark: SparkSession, sf_dir: str) -> str:
     """Stage the 20x16x12 spectral cube (voxel function (x*31 + y*17 +
-    z*7) % 1000 - 200, BSCALE 0.25 / BZERO 50) once per (session, sf)."""
-    from ..sources.fits import write_fits_cube
+    z*7) % 1000 - 200, BSCALE 0.25 / BZERO 50)."""
+    from ..sources.fits import write_fits_image
 
     def write(out_dir: str) -> None:
         os.makedirs(out_dir, exist_ok=True)
@@ -1210,9 +1188,9 @@ def _stage_spec_cube(spark: SparkSession, sf_dir: str) -> str:
         z = np.arange(12)[:, None, None]
         cube = ((x * 31 + y * 17 + z * 7) % 1000 - 200).astype("i2")
         with open(os.path.join(out_dir, "cube.fits"), "wb") as f:
-            write_fits_cube(cube, bscale=0.25, bzero=50.0, extname="CUBE", out=f)
+            write_fits_image(cube, bscale=0.25, bzero=50.0, extname="CUBE", out=f)
 
-    out = _scratch_dir(spark, sf_dir, "fits_cube", write)
+    out = stage(spark, sf_dir, "fits_cube", write)
     return os.path.join(out, "cube.fits")
 
 
@@ -1240,34 +1218,9 @@ def fits_datasource_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``CREATE TABLE obs USING fits OPTIONS (path ...)``), while the
     mapInArrow route remains the library-call form; a multi-GB BINTABLE
     parallelizes WITHIN one file because fixed-width rows seek."""
-    import duckdb
-
-    from ..sources.fits import write_fits_bintable
     from ..sources.fits_datasource import register as register_fits
 
-    def write(out_dir: str) -> None:
-        rows = (
-            duckdb.connect()
-            .execute(
-                "SELECT n_nationkey, n_name, n_regionkey FROM "
-                f"read_parquet('{sf_dir}/nation.parquet') ORDER BY n_nationkey"
-            )
-            .fetchall()
-        )
-        os.makedirs(out_dir, exist_ok=True)
-        blob = write_fits_bintable(
-            [
-                ("n_nationkey", "J", [r[0] for r in rows]),
-                ("n_name", "A24", [r[1] for r in rows]),
-                ("n_regionkey", "J", [r[2] for r in rows]),
-            ]
-        )
-        with open(os.path.join(out_dir, "nation.fits"), "wb") as f:
-            f.write(blob)
-
-    # same scratch key as fits_ingest: both operators stage the identical
-    # file, so whichever runs first defines it for both
-    path = _scratch_dir(spark, sf_dir, "nation_fits", write)
+    path = _stage_nation_fits(spark, sf_dir)
     register_fits(spark)  # idempotent; ships the parser to executors
     return spark.read.format("fits").option("hdu", "1").load(path)
 
@@ -1296,32 +1249,9 @@ def fits_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the row-range partition planning it gives the registered format
     the same scan-reduction levers a parquet reader has (minus row-group
     statistics, which FITS headers do not carry)."""
-    import duckdb
-
-    from ..sources.fits import write_fits_bintable
     from ..sources.fits_datasource import register as register_fits
 
-    def write(out_dir: str) -> None:
-        rows = (
-            duckdb.connect()
-            .execute(
-                "SELECT n_nationkey, n_name, n_regionkey FROM "
-                f"read_parquet('{sf_dir}/nation.parquet') ORDER BY n_nationkey"
-            )
-            .fetchall()
-        )
-        os.makedirs(out_dir, exist_ok=True)
-        blob = write_fits_bintable(
-            [
-                ("n_nationkey", "J", [r[0] for r in rows]),
-                ("n_name", "A24", [r[1] for r in rows]),
-                ("n_regionkey", "J", [r[2] for r in rows]),
-            ]
-        )
-        with open(os.path.join(out_dir, "nation.fits"), "wb") as f:
-            f.write(blob)
-
-    path = _scratch_dir(spark, sf_dir, "nation_fits", write)
+    path = _stage_nation_fits(spark, sf_dir)
 
     def build() -> DataFrame:
         # The pushdown conf is consulted when the scan is PLANNED (action
@@ -1458,7 +1388,7 @@ def fits_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             tnulls={"seg_len": -9999},
         )
 
-    path = _scratch_dir(spark, sf_dir, "customer_fits_roundtrip", write)
+    path = stage(spark, sf_dir, "customer_fits_roundtrip", write)
     return read_fits(spark, path, hdu="CUSTROUND")
 
 
@@ -1500,7 +1430,7 @@ def fits_image_blank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 img, bscale=0.5, bzero=100.0, extname="SCI", blank=-32768, out=f
             )
 
-    out = _scratch_dir(spark, sf_dir, "fits_image_blank", write)
+    out = stage(spark, sf_dir, "fits_image_blank", write)
     return read_fits_image(spark, os.path.join(out, "sci_blank.fits"), hdu="SCI")
 
 
@@ -1547,7 +1477,7 @@ def votable_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(out_dir, ignore_errors=True)
         write_votable_fragments(staged, out_dir, table_name="customer")
 
-    path = _scratch_dir(spark, sf_dir, "customer_votable", write)
+    path = stage(spark, sf_dir, "customer_votable", write)
     back = read_votable_tabledata(
         spark, os.path.join(path, "rows", "part-*"),
         ["c_custkey", "c_name", "seg", "c_acctbal"],
@@ -1619,7 +1549,7 @@ def fits_ascii_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(out_dir, "customer_ascii.fits"), "wb") as f:
             f.write(blob)
 
-    path = _scratch_dir(spark, sf_dir, "customer_fits_ascii", write)
+    path = stage(spark, sf_dir, "customer_fits_ascii", write)
     return read_fits_ascii(spark, path, hdu="CUSTASCII")
 
 
@@ -1668,5 +1598,5 @@ def fits_checksum_verified_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(out_dir, "nation_ck.fits"), "wb") as f:
             f.write(blob)
 
-    path = _scratch_dir(spark, sf_dir, "nation_fits_checksum", write)
+    path = stage(spark, sf_dir, "nation_fits_checksum", write)
     return read_fits(spark, path, verify_checksum=True)

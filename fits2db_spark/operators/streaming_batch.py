@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import load
+from ..session import memo
+from ..tables import load, stage
 
 
 @register(
@@ -197,29 +198,18 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against the SAME SQL as the batch stream_tumbling.
 # ---------------------------------------------------------------------------
 
-_LIVE_DONE: dict[tuple[str, str, str], str] = {}
-
-
-def _live_key(spark: SparkSession, sf_dir: str, tag: str) -> tuple[str, str, str]:
-    try:
-        app_id = spark.sparkContext.applicationId
-    except Exception:
-        app_id = ""
-    return (app_id, sf_dir, tag)
-
-
 def _drain_live(
     spark: SparkSession,
-    key: tuple,
+    sf_dir: str,
     prefix: str,
     stream_df: DataFrame,
     output_mode: str,
     state_partitions: int | None = None,
 ) -> DataFrame:
-    """Drain a live stream to a memory sink (availableNow), memoize the sink
-    table per (session, sf_dir, tag), and return it. Raises rather than
-    memoizing if the drain does not terminate — a partial sink table must
-    never be returned. The ONE drain contract for every stream_live_* query.
+    """Drain a live stream to a memory sink (availableNow) and return the
+    sink table. Raises if the drain does not terminate — a partial sink
+    table must never be returned (or memoized). The ONE drain contract for
+    every stream_live_* query.
 
     ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
     query's FIRST batch only (streaming state sharding is fixed at query
@@ -230,7 +220,7 @@ def _drain_live(
     sized to state volume, exactly as the module docstring prescribes."""
     from ..streaming.live import run_stream_to_memory
 
-    name = f"{prefix}_{abs(hash(key)) % 10**8}"
+    name = f"{prefix}_{abs(hash(sf_dir)) % 10**8}"
     before = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
@@ -246,7 +236,6 @@ def _drain_live(
             f"{prefix}: availableNow drain did not terminate in 300s — a "
             "partial sink table must never be returned (or memoized)"
         )
-    _LIVE_DONE[key] = name
     return spark.table(name)
 
 
@@ -283,13 +272,10 @@ def _state_shards(spark: SparkSession, sf_dir: str) -> int:
 
 def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events table as 3 time-ordered parquet files (one per
-    future micro-batch). Memoized per (session, sf_dir) via _scratch_dir,
-    so every live-streaming query shares one staging pass."""
+    future micro-batch), shared by every live-streaming query."""
     import os
 
-    from .scans import _scratch_dir
-
-    def stage(out_dir: str) -> None:
+    def write(out_dir: str) -> None:
         import glob as _glob
         import shutil
         import tempfile
@@ -312,7 +298,7 @@ def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
             shutil.copy(part, os.path.join(out_dir, f"{i:03d}.parquet"))
         shutil.rmtree(tmp, ignore_errors=True)
 
-    return _scratch_dir(spark, sf_dir, "events_stream_stage", stage)
+    return stage(spark, sf_dir, "events_stream_stage", write)
 
 
 @register(
@@ -333,8 +319,8 @@ def stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the events table is staged as 3 time-ordered parquet files, read back
     with ``readStream`` (maxFilesPerTrigger=1 -> 3 micro-batches), windowed
     exactly like the batch ``stream_tumbling``, and drained to a memory
-    sink under ``trigger(availableNow=True)``. The stream runs once per
-    (session, sf_dir); repeat calls return the materialized sink table.
+    sink under ``trigger(availableNow=True)``; repeat calls return the
+    memoized sink table.
 
     Scale: the identical plan runs unbounded on a real file/Kafka source —
     state lives in the state store keyed by (window, event_type); here the
@@ -342,20 +328,18 @@ def stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a production job uses append mode + watermark eviction)."""
     from ..streaming.live import events_stream, tumbling_counts
 
-    key = _live_key(spark, sf_dir, "tumbling")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    staging = _staged_events_dir(spark, sf_dir)
-    return _drain_live(
+    return memo(spark, sf_dir, "live_tumbling", lambda: _drain_live(
         spark,
-        key,
+        sf_dir,
         "live_tumbling",
         tumbling_counts(
-            events_stream(spark, staging, max_files_per_trigger=1),
+            events_stream(
+                spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=1
+            ),
             watermark="100 days",
         ),
         "complete",
-    )
+    ))
 
 
 @register(
@@ -392,20 +376,19 @@ def stream_live_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_live.py::test_stream_dedup_drops_duplicates."""
     from ..streaming.live import events_stream
 
-    key = _live_key(spark, sf_dir, "dedup")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    staging = _staged_events_dir(spark, sf_dir)
-    stream = (
-        events_stream(spark, staging, max_files_per_trigger=None)
-        .withWatermark("ts", "100 days")
-        .dropDuplicates(["user_id", "event_type"])
-        .select("user_id", "event_type")
-    )
-    return _drain_live(
-        spark, key, "live_dedup", stream, "append",
-        state_partitions=_state_shards(spark, sf_dir),
-    )
+    def drain() -> DataFrame:
+        stream = (
+            events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=None)
+            .withWatermark("ts", "100 days")
+            .dropDuplicates(["user_id", "event_type"])
+            .select("user_id", "event_type")
+        )
+        return _drain_live(
+            spark, sf_dir, "live_dedup", stream, "append",
+            state_partitions=_state_shards(spark, sf_dir),
+        )
+
+    return memo(spark, sf_dir, "live_dedup", drain)
 
 
 @register(
@@ -445,30 +428,29 @@ def stream_live_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays pinned in tests/test_streaming_live.py."""
     from ..streaming.live import click_purchase_interval_join, events_stream
 
-    key = _live_key(spark, sf_dir, "ivjoin")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    staging = _staged_events_dir(spark, sf_dir)
-    joined = click_purchase_interval_join(
-        events_stream(spark, staging, max_files_per_trigger=None)
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_ts",
-        "buy_ts",
-        F.round("buy_value", 2).alias("buy_value"),
-    )
-    # 2 state stores (one per join side) x shards x per-batch commit cost.
-    # r12 floor probe (BASELINE.md): warm single-batch drain is 2.0-2.4s at
-    # 4 shards vs 1.85-1.9s at 1 shard at sf0.1, but the r15 sf1 sweep
-    # measured 4 shards at 4.3/4.5s vs 7.4/6.1s at 1 shard — the optimum
-    # moves with staged volume, so _state_shards derives it from the
-    # events footer row count (1 at sf0.1, 4 at sf1, machine width cap).
-    # The residue is availableNow machinery: a 1-row staging through the
-    # identical plan still costs 2.8s cold / ~1.9s warm.
-    return _drain_live(
-        spark, key, "live_ivjoin", joined, "append",
-        state_partitions=_state_shards(spark, sf_dir),
-    )
+    def drain() -> DataFrame:
+        joined = click_purchase_interval_join(
+            events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=None)
+        ).select(
+            F.col("c_user").alias("user_id"),
+            "click_ts",
+            "buy_ts",
+            F.round("buy_value", 2).alias("buy_value"),
+        )
+        # 2 state stores (one per join side) x shards x per-batch commit cost.
+        # r12 floor probe (BASELINE.md): warm single-batch drain is 2.0-2.4s at
+        # 4 shards vs 1.85-1.9s at 1 shard at sf0.1, but the r15 sf1 sweep
+        # measured 4 shards at 4.3/4.5s vs 7.4/6.1s at 1 shard — the optimum
+        # moves with staged volume, so _state_shards derives it from the
+        # events footer row count (1 at sf0.1, 4 at sf1, machine width cap).
+        # The residue is availableNow machinery: a 1-row staging through the
+        # identical plan still costs 2.8s cold / ~1.9s warm.
+        return _drain_live(
+            spark, sf_dir, "live_ivjoin", joined, "append",
+            state_partitions=_state_shards(spark, sf_dir),
+        )
+
+    return memo(spark, sf_dir, "live_ivjoin", drain)
 
 
 @register(
@@ -505,20 +487,17 @@ def stream_live_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_live.py::test_stateful_running_counters."""
     from ..streaming.live import events_stream, running_user_counters
 
-    key = _live_key(spark, sf_dir, "counters")
-    if key in _LIVE_DONE:
-        drained = spark.table(_LIVE_DONE[key])
-    else:
-        staging = _staged_events_dir(spark, sf_dir)
-        drained = _drain_live(
-            spark,
-            key,
-            "live_counters",
-            running_user_counters(
-                events_stream(spark, staging, max_files_per_trigger=None)
-            ),
-            "update",
-        )
+    drained = memo(spark, sf_dir, "live_counters", lambda: _drain_live(
+        spark,
+        sf_dir,
+        "live_counters",
+        running_user_counters(
+            events_stream(
+                spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=None
+            )
+        ),
+        "update",
+    ))
     return (
         drained.groupBy("user_id")
         .agg(
@@ -569,34 +548,28 @@ def stream_live_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     session per user, sharded by the grouping key and evicted by the
     watermark as event time advances; a production job runs append mode
     with a real watermark and emits each session once, on close."""
-    key = _live_key(spark, sf_dir, "session")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
     from ..streaming.live import events_stream
 
-    staging = _staged_events_dir(spark, sf_dir)
-    stream = (
-        events_stream(spark, staging, max_files_per_trigger=1)
-        .withWatermark("ts", "100 days")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
+    def drain() -> DataFrame:
+        stream = (
+            events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=1)
+            .withWatermark("ts", "100 days")
+            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum("value"), 4).alias("total_value"),
+            )
+            .select(
+                "user_id",
+                F.col("w.start").alias("session_start"),
+                F.col("w.end").alias("session_end"),
+                "n_events",
+                "total_value",
+            )
         )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-    return _drain_live(spark, key, "live_session", stream, "complete")
+        return _drain_live(spark, sf_dir, "live_session", stream, "complete")
 
-
-from ..registry import deprioritize  # noqa: E402
-
-deprioritize("stream_windowed_topk")
+    return memo(spark, sf_dir, "live_session", drain)
 
 
 @register(
@@ -617,24 +590,23 @@ def stream_live_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly how slowly-changing lookup tables are consumed by
     streams. The oracle is the plain batch join, because stream-static
     inner joins are exactly-once row-equivalent to their batch form."""
-    ev_dim = load(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
     from ..streaming.live import events_stream
 
-    key = _live_key(spark, sf_dir, "enrich")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    staging = _staged_events_dir(spark, sf_dir)
-    stream = events_stream(spark, staging, max_files_per_trigger=1)
-    enriched = stream.join(F.broadcast(ev_dim), "user_id").select(
-        "event_id",
-        "user_id",
-        "c_mktsegment",
-        "event_type",
-        F.round("value", 4).alias("value"),
-    )
-    return _drain_live(spark, key, "live_enrich", enriched, "append")
+    def drain() -> DataFrame:
+        ev_dim = load(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("user_id"), "c_mktsegment"
+        )
+        stream = events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=1)
+        enriched = stream.join(F.broadcast(ev_dim), "user_id").select(
+            "event_id",
+            "user_id",
+            "c_mktsegment",
+            "event_type",
+            F.round("value", 4).alias("value"),
+        )
+        return _drain_live(spark, sf_dir, "live_enrich", enriched, "append")
+
+    return memo(spark, sf_dir, "live_enrich", drain)
 
 
 @register(
@@ -667,27 +639,26 @@ def stream_live_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structured Streaming twin."""
     from ..streaming.live import events_stream
 
-    key = _live_key(spark, sf_dir, "sliding")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    staging = _staged_events_dir(spark, sf_dir)
-    stream = events_stream(spark, staging, max_files_per_trigger=1)
-    agg = (
-        stream.withWatermark("ts", "100 days")
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
+    def drain() -> DataFrame:
+        stream = events_stream(spark, _staged_events_dir(spark, sf_dir), max_files_per_trigger=1)
+        agg = (
+            stream.withWatermark("ts", "100 days")
+            .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.round(F.sum("value"), 4).alias("total_value"),
+            )
+            .select(
+                F.col("w.start").alias("window_start"),
+                F.col("w.end").alias("window_end"),
+                "event_type",
+                "n",
+                "total_value",
+            )
         )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-    return _drain_live(spark, key, "live_sliding", agg, "complete")
+        return _drain_live(spark, sf_dir, "live_sliding", agg, "complete")
+
+    return memo(spark, sf_dir, "live_sliding", drain)
 
 
 # ---------------------------------------------------------------------------
@@ -883,16 +854,14 @@ def events_slo_burnrate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _staged_customer_fits_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the customer table as 3 key-ranged FITS BINTABLE files —
-    the watched-archive-directory fixture for the live FITS ingest key.
-    Memoized per (session, sf) via _scratch_dir."""
+    the watched-archive-directory fixture for the live FITS ingest key."""
     import os
 
     import duckdb
 
     from ..sources.fits import write_fits_bintable
-    from .scans import _scratch_dir
 
-    def stage(out_dir: str) -> None:
+    def write(out_dir: str) -> None:
         rows = (
             duckdb.connect()
             .execute(
@@ -924,7 +893,7 @@ def _staged_customer_fits_dir(spark: SparkSession, sf_dir: str) -> str:
             with open(os.path.join(out_dir, f"{i:03d}.fits"), "wb") as f:
                 f.write(blob)
 
-    return _scratch_dir(spark, sf_dir, "customer_fits_stream_stage", stage)
+    return stage(spark, sf_dir, "customer_fits_stream_stage", write)
 
 
 @register(
@@ -955,21 +924,19 @@ def stream_live_fits_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     `fits_datasource_v2`); the streaming value here is the offset
     bookkeeping and sink integration, not decode bandwidth."""
     from ..sources.fits_datasource import register as register_fits
-    from ..streaming.live import run_stream_to_memory
 
-    key = _live_key(spark, sf_dir, "fits_ingest")
-    if key in _LIVE_DONE:
-        return spark.table(_LIVE_DONE[key])
-    register_fits(spark)
-    staging = _staged_customer_fits_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.format("fits")
-        .load(staging)
-        .filter(F.col("c_acctbal") > 5000)
-        .select(
-            "c_custkey",
-            "c_name",
-            F.round(F.col("c_acctbal"), 2).alias("acctbal"),
+    def drain() -> DataFrame:
+        register_fits(spark)
+        stream = (
+            spark.readStream.format("fits")
+            .load(_staged_customer_fits_dir(spark, sf_dir))
+            .filter(F.col("c_acctbal") > 5000)
+            .select(
+                "c_custkey",
+                "c_name",
+                F.round(F.col("c_acctbal"), 2).alias("acctbal"),
+            )
         )
-    )
-    return _drain_live(spark, key, "live_fits", stream, "append")
+        return _drain_live(spark, sf_dir, "live_fits", stream, "append")
+
+    return memo(spark, sf_dir, "live_fits", drain)

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
 
-from ..registry import deprioritize, register
+from ..registry import register
 from ..tables import load
 
 
@@ -237,6 +237,3 @@ def udf_arrow_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0)
     return o.select("o_orderkey", add_tax("o_totalprice").alias("taxed"))
-
-
-deprioritize("udf_arrow_scalar")

@@ -261,11 +261,6 @@ def win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..registry import deprioritize  # noqa: E402
-
-deprioritize("win_range_frame")
-
-
 @register(
     "win_gaps_islands",
     oracle="""

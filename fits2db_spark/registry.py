@@ -597,38 +597,14 @@ _PRIORITY_QUERIES = (
     "corr_covar",
     "dedup_components_bigstar",
 )
-_PRIORITY_MODULE_ORDER = (
-    "fits2db_spark.operators.llm_text",
-    "fits2db_spark.operators.llm_vectors",
-    "fits2db_spark.operators.multimodal",
-    "fits2db_spark.operators.streaming_batch",
-    "fits2db_spark.operators.udfs",
-    "fits2db_spark.operators.scalar_functions",
-    "fits2db_spark.operators.advanced",
-)
-
-# Queries forced to the END of the ordering regardless of module: round-2+
-# additions that must not displace the curated first-50 verification window
-# (they are oracle-verified locally via tools/check_oracle.py either way).
-_DEPRIORITIZED: set[str] = set()
-
-
-def deprioritize(*names: str) -> None:
-    _DEPRIORITIZED.update(names)
 
 
 def _ordered_names() -> list[str]:
-    by_module: dict[str, list[str]] = {}
-    for name, fn in _QUERIES.items():
-        by_module.setdefault(getattr(fn, "__wrapped__", fn).__module__, []).append(name)
-    out = [n for n in _PRIORITY_QUERIES if n in _QUERIES]
-    for mod in _PRIORITY_MODULE_ORDER:
-        out.extend(
-            n for n in by_module.get(mod, []) if n not in out and n not in _DEPRIORITIZED
-        )
-    out.extend(n for n in _QUERIES if n not in out and n not in _DEPRIORITIZED)
-    out.extend(n for n in _QUERIES if n in _DEPRIORITIZED and n not in out)
-    return out
+    """The priority queue's order; a registered key missing from the queue
+    is appended in registration order, so a new key is never dropped."""
+    queued = [n for n in _PRIORITY_QUERIES if n in _QUERIES]
+    seen = set(queued)
+    return queued + [n for n in _QUERIES if n not in seen]
 
 
 _DOC_PLACEHOLDER = __import__("re").compile(

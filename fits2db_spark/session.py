@@ -165,7 +165,11 @@ def memo(spark: SparkSession, sf_dir: str, name: str, build):
       :func:`free_memo_checkpoints` runs.
     * A frame built on an evicted checkpoint must not be executed
       afterwards: its blocks are gone. Consume an operator's result before
-      running one on another sf_dir or freeing the memo."""
+      running one on another sf_dir or freeing the memo.
+    * Staged scratch paths (``tables.stage``) and drained live-stream sink
+      tables are entries too. Eviction forgets them, so the next call
+      rewrites the path or drains the stream again; frames read from them
+      follow the rule above."""
     try:
         key = (spark.sparkContext.applicationId, sf_dir, name)
     except Exception:

@@ -259,10 +259,6 @@ def parse_bintable_header(src, hdu: int | str = 1) -> tuple[dict, list[dict], in
     return h.cards, _parse_columns(h.cards), h.data_off
 
 
-# the path form of the probe: :func:`parse_bintable_header` seeks on a path
-parse_bintable_header_path = parse_bintable_header
-
-
 def _parse_columns(cards: dict) -> list[dict]:
     tfields = _header_int(cards, "TFIELDS")
     cols = []
@@ -1280,24 +1276,26 @@ def verify_checksums(blob: bytes) -> list[dict]:
     return results
 
 
-def _complete_hdus(blob: bytes) -> list[Hdu]:
-    """Every HDU of an in-memory file, each with its whole padded data area."""
-    with _open_blocks(blob) as b:
+def _complete_hdus(src) -> list[Hdu]:
+    """Every HDU of a file given as bytes or a path, each with its whole
+    padded data area present; only header blocks are read."""
+    with _open_blocks(src) as b:
         hdus = list(_walk_hdus(b))
-    if hdus and hdus[-1].end > len(blob):
+    if hdus and hdus[-1].end > b.size:
         raise FitsFormatError("truncated HDU data area")
     return hdus
 
 
-def catalog_hdus(blob: bytes) -> list[dict]:
-    """Header-only walk of every HDU in a FITS file: index, EXTNAME,
-    extension type, row/column counts and data-area bytes — WITHOUT
-    touching the data areas (the walk seeks by the standard size formula,
-    so cataloging a multi-GB file costs only its header blocks). This is
-    the manifest step a bulk loader runs before scheduling per-HDU ingest
-    jobs: which extensions exist, under what names, and how big each is."""
+def catalog_hdus(src) -> list[dict]:
+    """Header-only walk of every HDU in a FITS file given as bytes or a
+    path: index, EXTNAME, extension type, row/column counts and data-area
+    bytes — WITHOUT touching the data areas (the walk seeks by the
+    standard size formula, so cataloging a multi-GB file costs only its
+    header blocks). This is the manifest step a bulk loader runs before
+    scheduling per-HDU ingest jobs: which extensions exist, under what
+    names, and how big each is."""
     out = []
-    for h in _complete_hdus(blob):
+    for h in _complete_hdus(src):
         cards = h.cards
         xt = str(cards.get("XTENSION", "PRIMARY")).strip()
         naxis = _header_int(cards, "NAXIS")
@@ -1315,19 +1313,21 @@ def catalog_hdus(blob: bytes) -> list[dict]:
 
 
 def read_fits_catalog(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed HDU manifest over a file / glob of FITS files: one row
-    per HDU with (file, hdu, extname, xtension, n_rows, n_cols,
-    data_bytes). Runs :func:`catalog_hdus` executor-side per file via
-    mapInArrow — header blocks only, no data decode, so the scan cost is
-    O(files), not O(bytes); at archive scale this is the planning query
-    that decides which HDUs are worth a full ingest pass."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from ..session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    files = spark.read.format("binaryFile").load(path)
+    """HDU manifest over a FITS file, directory or glob: one row per HDU
+    with (file, hdu, extname, xtension, n_rows, n_cols, data_bytes). Each
+    file's header blocks are walked on the driver by :func:`catalog_hdus`
+    and its data areas are skipped, never read, so the cost is O(files),
+    not O(bytes), whatever a file's size; at archive scale this is the
+    planning query that decides which HDUs are worth a full ingest pass."""
+    files = resolve_paths(path)
+    if not files:
+        raise FileNotFoundError(f"no FITS files match {path!r}")
+    rows = []
+    for f in files:
+        try:
+            rows += [{"file": os.path.basename(f), **e} for e in catalog_hdus(f)]
+        except FitsFormatError as e:
+            raise FitsFormatError(f"{f}: {e}") from None
     schema = StructType(
         [
             StructField("file", StringType()),
@@ -1339,17 +1339,7 @@ def read_fits_catalog(spark: SparkSession, path: str) -> DataFrame:
             StructField("data_bytes", LongType()),
         ]
     )
-    arrow_schema = to_arrow_schema(schema)
-
-    def walk(batches):
-        for batch in batches:
-            rows: list[dict] = []
-            for pathv, payload in zip(batch.column("path").to_pylist(), batch.column("content")):
-                base = os.path.basename(pathv)
-                rows += [{"file": base, **e} for e in catalog_hdus(payload.as_py())]
-            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
-
-    return files.select("path", "content").mapInArrow(walk, schema=schema)
+    return spark.createDataFrame(rows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1407,10 +1397,6 @@ def write_fits_image(
     return blob
 
 
-# a cube is a 3-D image: NAXIS1 = x, NAXIS2 = y, NAXIS3 = channel
-write_fits_cube = write_fits_image
-
-
 def decode_image(src, hdu: int | str = 1):
     """2-D IMAGE HDU -> (schema, [x, y, val]) pixel table: one row per pixel,
     x = column (NAXIS1, the fastest axis), y = row, val = the PHYSICAL
@@ -1418,12 +1404,6 @@ def decode_image(src, hdu: int | str = 1):
     contract as :func:`decode_bintable`, so the parallel Spark read path
     is shared."""
     return _decode(src, hdu, "image")
-
-
-def decode_cube(src, hdu: int | str = 1):
-    """3-D IMAGE HDU -> (x, y, z, val) voxel table: z is the channel
-    (NAXIS3); otherwise as :func:`decode_image`."""
-    return _decode(src, hdu, "cube")
 
 
 def _pixel_schema(cards: dict) -> StructType:

@@ -17,6 +17,9 @@ partitioned directory layout; nothing here materializes or collects.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -31,7 +34,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .session import ensure_runtime_confs, free_memo_checkpoints, release
+from .session import ensure_runtime_confs, free_memo_checkpoints, memo, release
 
 TABLE_NAMES = (
     "region",
@@ -140,8 +143,6 @@ def warm_cache(spark: SparkSession, sf_dir: str, partitions: int | None = None) 
     row-group layout (any production table) this is unnecessary: scan
     parallelism comes from splits, and this function is simply not called.
     """
-    import os
-
     n_parts = partitions or min(int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8), 32)
     # Fact tables are repartitioned BY KEY, not round-robin: the cached
     # InMemoryRelation then reports hashpartitioning on the table's primary
@@ -193,14 +194,22 @@ def load(spark: SparkSession, sf_dir: str, name: str, _use_cache: bool = True) -
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load(spark, sf_dir, n) for n in TABLE_NAMES}
+_SCRATCH = os.path.join(tempfile.gettempdir(), "fits2db_spark_scratch")
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (SQL entry point)."""
-    for n, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(n)
+def stage(spark: SparkSession, sf_dir: str, name: str, write) -> str:
+    """Return the scratch path ``<tmp>/fits2db_spark_scratch/<name>_<sf tag>``
+    of a staged input, calling ``write(path)`` on the first request: a
+    :func:`~fits2db_spark.session.memo` entry, so one staged input has one
+    name and one writer."""
+    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    out = os.path.join(_SCRATCH, f"{name}_{tag}")
+
+    def build() -> str:
+        write(out)
+        return out
+
+    return memo(spark, sf_dir, f"staged:{name}", build)
 
 
 def daily_value_series(spark: SparkSession, sf_dir: str, agg: str = "sum") -> DataFrame:

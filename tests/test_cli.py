@@ -230,6 +230,21 @@ def test_cli_rejects_nonpositive_jdbc_numbers_before_any_sink(tmp_path, spark, c
     assert "must be >= 1" in capsys.readouterr().err
 
 
+def test_cli_image_and_ascii_are_exclusive(fits_file, tmp_path, spark, capsys):
+    """--image and --ascii name two different HDU kinds; passing both used
+    to load pixels silently. It must be an argparse error before any sink
+    writes."""
+    out_dir = tmp_path / "csv"
+    with pytest.raises(SystemExit) as exc:
+        run(
+            [fits_file, "--table", "t", "--image", "--ascii", "--csv-out", str(out_dir)],
+            spark=spark,
+        )
+    assert exc.value.code == 2
+    assert not out_dir.exists()
+    assert "not allowed with argument" in capsys.readouterr().err
+
+
 def test_scaleup_bench_surfaces_subprocess_failures(monkeypatch):
     """r8 ADVICE: run_benches must raise with the subprocess stderr instead
     of dying on an IndexError when a bench crashes or prints no JSON."""

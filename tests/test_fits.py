@@ -316,13 +316,10 @@ def test_datasource_row_range_partitions(spark, tmp_path):
 
 
 def test_header_only_probe_matches_full_parse(spark, tmp_path):
-    """parse_bintable_header_path (seek-based, header-only I/O) must agree
-    with the in-memory parser on a multi-HDU file, selected by EXTNAME."""
-    from fits2db_spark.sources.fits import (
-        parse_bintable_header,
-        parse_bintable_header_path,
-        write_fits_multi,
-    )
+    """parse_bintable_header on a path (seek-based, header-only I/O) must
+    agree with it on the file's bytes for a multi-HDU file, selected by
+    EXTNAME."""
+    from fits2db_spark.sources.fits import parse_bintable_header, write_fits_multi
 
     blob = write_fits_multi(
         [
@@ -334,7 +331,7 @@ def test_header_only_probe_matches_full_parse(spark, tmp_path):
     path.write_bytes(blob)
     for hdu in (1, 2, "SECOND", "first"):
         cards_m, cols_m, off_m = parse_bintable_header(blob, hdu)
-        cards_p, cols_p, off_p = parse_bintable_header_path(str(path), hdu)
+        cards_p, cols_p, off_p = parse_bintable_header(str(path), hdu)
         assert off_m == off_p
         assert [c["name"] for c in cols_m] == [c["name"] for c in cols_p]
         assert cards_m == cards_p
@@ -835,6 +832,34 @@ def test_read_fits_catalog_distributed(spark, tmp_path):
     assert rows[("f0.fits", 1)] == ("T0", "BINTABLE", 2, 1)
     assert rows[("f1.fits", 1)] == ("T1", "BINTABLE", 3, 1)
     assert rows[("f0.fits", 0)][1] == "PRIMARY"
+
+
+def test_read_fits_catalog_reads_headers_only(spark, tmp_path):
+    """The catalog walks header blocks by path: a sparse BINTABLE whose
+    header declares 2.4 GB of rows catalogs without its data area ever
+    being read (a whole-file read fails on any file over 2 GiB)."""
+    from fits2db_spark.sources.fits import (
+        parse_bintable_header,
+        read_fits_catalog,
+        write_fits_bintable,
+    )
+
+    n_rows = 300_000_000  # 8-byte rows: 2.4e9 data bytes
+    blob = write_fits_bintable([("k", "K", [1])])
+    _, _, data_off = parse_bintable_header(blob, 1)
+    header = blob[:data_off]
+    at = header.index(b"NAXIS2  = ")
+    header = header[:at] + f"{'NAXIS2':<8}= {n_rows:>20}".ljust(80).encode() + header[at + 80 :]
+    big = tmp_path / "big.fits"
+    with open(big, "wb") as f:
+        f.write(header)
+        f.truncate(data_off + -(-8 * n_rows // 2880) * 2880)
+    assert big.stat().st_size > 2**31
+    rows = {
+        r.hdu: (r.xtension, r.n_rows, r.n_cols, r.data_bytes)
+        for r in read_fits_catalog(spark, str(big)).collect()
+    }
+    assert rows == {0: ("PRIMARY", 0, 0, 0), 1: ("BINTABLE", n_rows, 1, 8 * n_rows)}
 
 
 def test_datasource_pushfilters_accepts_and_applies(tmp_path):

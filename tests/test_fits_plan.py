@@ -14,7 +14,6 @@ from fits2db_spark.sources.fits import (
     read_fits_cube,
     read_fits_image,
     write_fits_bintable,
-    write_fits_cube,
     write_fits_image,
 )
 
@@ -81,7 +80,7 @@ def test_every_reader_matches_extname_case_insensitively(spark, tmp_path):
     img = np.arange(6, dtype="i2").reshape(2, 3)
     (tmp_path / "img.fits").write_bytes(write_fits_image(img, extname="SCI"))
     cube = np.arange(8, dtype="i2").reshape(2, 2, 2)
-    (tmp_path / "cube.fits").write_bytes(write_fits_cube(cube, extname="CUBE"))
+    (tmp_path / "cube.fits").write_bytes(write_fits_image(cube, extname="CUBE"))
 
     assert list(decode_image(str(tmp_path / "img.fits"), " sci ")[1][2]) == list(range(6))
     px = read_fits_image(spark, str(tmp_path / "img.fits"), hdu="sci")

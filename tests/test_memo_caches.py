@@ -1,14 +1,17 @@
 """Boundedness of the per-session operator memos (``session.memo``): the
 evict hook frees block-manager storage, checkpoint blocks included, and
 inserting a new sf_dir displaces entries of old ones, so a session never
-accumulates memo storage across scale factors or tiers.
+accumulates memo storage across scale factors or tiers. Staged scratch
+inputs and drained live streams are entries under the same rule.
 """
+
+import os
 
 import pytest
 from pyspark import StorageLevel
 
 from fits2db_spark import session, tables
-from fits2db_spark.operators import joins, scans
+from fits2db_spark.operators import joins, scans, streaming_batch
 from fits2db_spark.registry import all_queries
 from fits2db_spark.session import free_memo_checkpoints
 
@@ -53,6 +56,10 @@ def test_free_memo_checkpoints_empties_caches_and_storage(spark):
     assert len(_memo_keys("xmatch_")) == len(joins._XM_LADDER)
 
 
+def _sorted_rows(df) -> list:
+    return sorted(tuple(r) for r in df.collect())
+
+
 def test_new_sf_dir_displaces_old_checkpoints(spark):
     from fits2db_spark.operators.advanced import _ps_pairs
 
@@ -62,12 +69,24 @@ def test_new_sf_dir_displaces_old_checkpoints(spark):
     ps.count()
     assert ps.storageLevel != StorageLevel.NONE
     qs["join_xmatch_nearest"](spark, SF_A).count()
+    fits_rows = _sorted_rows(scans.fits_ingest(spark, SF_A))
+    live_rows = _sorted_rows(streaming_batch.stream_live_tumbling(spark, SF_A))
+    staged = next(v for k, v in session._MEMO.items() if k[2] == "staged:nation_fits")
+    staged_mtime = os.stat(os.path.join(staged, "nation.fits")).st_mtime_ns
+    assert _memo_keys("live_tumbling")
     assert {k[1] for k in session._MEMO} == {SF_A}
     qs["join_xmatch_nearest"](spark, SF_B).count()
     assert {k[1] for k in session._MEMO} == {SF_B}, (
         "old sf_dir's entries must be evicted on displacement"
     )
     assert ps.storageLevel == StorageLevel.NONE, "evicted graph memo still cached"
+    # the evicted staged input and drained stream are rewritten and
+    # drained again on the next call at SF_A, with the same rows
+    assert _sorted_rows(scans.fits_ingest(spark, SF_A)) == fits_rows
+    assert _sorted_rows(streaming_batch.stream_live_tumbling(spark, SF_A)) == live_rows
+    assert {k[1] for k in _memo_keys("staged:nation_fits")} == {SF_A}
+    assert {k[1] for k in _memo_keys("live_tumbling")} == {SF_A}
+    assert os.stat(os.path.join(staged, "nation.fits")).st_mtime_ns > staged_mtime
     scans.fits_datasource_pushdown(spark, SF_A).count()
     scans.fits_datasource_pushdown(spark, SF_B).count()
     assert {k[1] for k in _memo_keys("fits_pushdown")} == {SF_B}
@@ -89,9 +108,10 @@ def test_same_sf_dir_keeps_multiple_ops(spark):
 
 def test_free_memo_checkpoints_covers_full_aux_registry(spark):
     """The evict hook must empty the whole memo store — the graph memos
-    (_ps_pairs, _co_supply_counts), the vector memos (cov_gram_parts) and
-    the llm_text shingle/array/band memos — and return block-manager
-    storage to its pre-build level."""
+    (_ps_pairs, _co_supply_counts), the vector memos (cov_gram_parts),
+    the llm_text shingle/array/band memos, a staged input and a drained
+    live stream — and return block-manager storage to its pre-build
+    level."""
     from fits2db_spark.operators import advanced
     from fits2db_spark.operators.llm_vectors import cov_gram_parts
 
@@ -100,8 +120,13 @@ def test_free_memo_checkpoints_covers_full_aux_registry(spark):
     advanced._co_supply_counts(spark, SF_A).count()  # also builds _ps_pairs
     cov_gram_parts(spark, SF_A).count()
     all_queries()["dedup_near_minhash"](spark, SF_A).count()
+    scans.fits_ingest(spark, SF_A).count()
+    streaming_batch.stream_live_tumbling(spark, SF_A).count()
     names = {k[2] for k in session._MEMO}
-    assert {"ps_pairs", "cosupply", "cov_gram_parts", "doc_arrays", "bands"} <= names
+    assert {
+        "ps_pairs", "cosupply", "cov_gram_parts", "doc_arrays", "bands",
+        "staged:nation_fits", "live_tumbling",
+    } <= names
     assert _storage_count(spark) > base
     free_memo_checkpoints()
     assert not session._MEMO, "memo survived free_memo_checkpoints"

@@ -46,7 +46,8 @@ def test_fits_datasource_pushdown_checkpoint_is_memoized(spark):
     a = scans.fits_datasource_pushdown(spark, SF_SMOKE)
     b = scans.fits_datasource_pushdown(spark, SF_SMOKE)
     assert a is b, "repeated invocations must reuse the cached checkpoint"
-    assert [k[2] for k in session._MEMO] == ["fits_pushdown"]
+    # the staged FITS input is a memo entry too, written once
+    assert [k[2] for k in session._MEMO] == ["staged:nation_fits", "fits_pushdown"]
     assert a.count() == b.count()
 
 
@@ -177,12 +178,12 @@ def test_image_blank_masks_before_scaling(spark, tmp_path):
 def test_cube_blank_masks_voxels(spark, tmp_path):
     import numpy as np
 
-    from fits2db_spark.sources.fits import read_fits_cube, write_fits_cube
+    from fits2db_spark.sources.fits import read_fits_cube, write_fits_image
 
     cube = np.arange(2 * 2 * 3, dtype="i4").reshape(2, 2, 3)
     cube[1, 0, 2] = -7
     p = tmp_path / "c.fits"
-    p.write_bytes(write_fits_cube(cube, bscale=2.0, extname="C", blank=-7))
+    p.write_bytes(write_fits_image(cube, bscale=2.0, extname="C", blank=-7))
     rows = {
         (r.x, r.y, r.z): r.val
         for r in read_fits_cube(spark, str(p), hdu="C").collect()
