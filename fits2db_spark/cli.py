@@ -16,15 +16,38 @@ Differences from the reference, by design (Spark-first): the "chunked row
 loop" is Spark's per-file parallel decode (one task per FITS file); CSV
 output is a partitioned directory unless --single-file; the JDBC load runs
 one connection per partition (--num-partitions caps it to the database's
-ingest capacity, not the cluster's core count).
+ingest capacity, not the cluster's core count). The reference writes its
+outputs one after another; here every requested row sink (parquet, CSV,
+VOTable, JDBC) reads one shared frame, decoded once per load and
+repartitioned once for --num-partitions, and the sinks run as concurrent
+Spark jobs.
+
+Failure semantics of a load with several row sinks:
+
+* Every input is planned and checked on the driver (header, column names,
+  types, byte size) before any sink writes; a bad input fails the load
+  with no sink written.
+* Every sink is attempted, and none is cancelled once running: a failing
+  sink (say a VOTable over its --votable-limit) does not stop the others,
+  and cancelling a JDBC append would leave its already-committed
+  partitions behind. After all sinks end, the load raises one error that
+  names each failed sink and each sink that completed.
+* A failure of the shared decode itself (a corrupt tile, a --verify-checksum
+  mismatch) fails every sink that reads the frame.
+* A JDBC sink commits per partition, so a JDBC write that fails part-way
+  leaves the partitions it already committed.
 """
 
 from __future__ import annotations
 
 import argparse
 import sys
+from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import get_spark, release
 
 
 def _positive_int(raw: str) -> int:
@@ -169,8 +192,6 @@ def emit_ddl(schema, args: argparse.Namespace, out) -> None:
 def run(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_parser().parse_args(argv)
     if spark is None:
-        from .session import get_spark
-
         spark = get_spark("fits2db_spark_cli")
 
     df = load_frame(spark, args)
@@ -185,62 +206,118 @@ def run(argv: list[str], spark: SparkSession | None = None) -> int:
     if args.ddl_only:
         return 0
 
-    did_output = False
-    if args.parquet_out:
-        out_df = df.repartition(args.num_partitions) if args.num_partitions else df
-        writer = out_df.write.mode("overwrite")
-        if args.partition_by:
-            writer = writer.partitionBy(
-                *[c.strip() for c in args.partition_by.split(",") if c.strip()]
-            )
-        writer.parquet(args.parquet_out)
-        did_output = True
-    if args.csv_out:
-        from .sinks.csv_sink import write_csv
+    sinks = _row_sinks(args)
+    if not sinks:
+        if not wants_ddl:
+            # dry run: schema + row count (the reference prints a summary too)
+            print(f"table {args.table}: {df.count()} rows")
+            for f in df.schema.fields:
+                print(f"  {f.name}: {f.dataType.simpleString()}")
+        return 0
+    if args.num_partitions:
+        df = df.repartition(args.num_partitions)
+    if len(sinks) > 1:
+        df = df.persist()
+    try:
+        _write_concurrently(df, sinks)
+    finally:
+        release(df)
+    return 0
 
-        out_df = df.repartition(args.num_partitions) if args.num_partitions else df
-        write_csv(
-            out_df,
-            args.csv_out,
-            delimiter=args.delimiter,
-            null_marker=args.null_marker,
-            single_file=args.single_file,
-        )
-        did_output = True
-    if args.votable_out:
-        from .sinks.votable import votable_string, write_votable_fragments
 
-        if args.votable_fragments:
-            write_votable_fragments(df, args.votable_out, table_name=args.table)
-        else:
-            # raises (never silently truncates) when the result exceeds
-            # --votable-limit; the error points at --votable-fragments
-            with open(args.votable_out, "w") as f:
-                f.write(
-                    votable_string(df, table_name=args.table, limit=args.votable_limit)
-                )
-        did_output = True
+Sink = tuple[str, Callable[[DataFrame], None]]
+
+
+def _row_sinks(args: argparse.Namespace) -> list[Sink]:
+    """The requested row sinks as (name, write) pairs, JDBC first: it is
+    the longest job, and Spark's FIFO scheduler gives freed task slots to
+    the earliest-submitted job. ``run`` has already repartitioned the
+    frame for --num-partitions, so no sink repartitions it again."""
+    sinks = []
     if args.jdbc_url:
         from .sinks.jdbc import write_jdbc
 
-        write_jdbc(
-            df,
-            args.jdbc_url,
-            args.table,
-            mode=args.mode,
-            dialect=args.dialect,
-            batchsize=args.batchsize,
-            num_partitions=args.num_partitions,
-            driver=args.jdbc_driver,
+        sinks.append(
+            ("jdbc", lambda df: write_jdbc(
+                df,
+                args.jdbc_url,
+                args.table,
+                mode=args.mode,
+                dialect=args.dialect,
+                batchsize=args.batchsize,
+                num_partitions=None,
+                driver=args.jdbc_driver,
+            ))
         )
-        did_output = True
+    if args.parquet_out:
+        def write_parquet(df: DataFrame) -> None:
+            writer = df.write.mode("overwrite")
+            if args.partition_by:
+                writer = writer.partitionBy(
+                    *[c.strip() for c in args.partition_by.split(",") if c.strip()]
+                )
+            writer.parquet(args.parquet_out)
 
-    if not did_output and not wants_ddl:
-        # dry run: schema + row count (the reference prints a summary too)
-        print(f"table {args.table}: {df.count()} rows")
-        for f in df.schema.fields:
-            print(f"  {f.name}: {f.dataType.simpleString()}")
-    return 0
+        sinks.append(("parquet", write_parquet))
+    if args.csv_out:
+        from .sinks.csv_sink import write_csv
+
+        sinks.append(
+            ("csv", lambda df: write_csv(
+                df,
+                args.csv_out,
+                delimiter=args.delimiter,
+                null_marker=args.null_marker,
+                single_file=args.single_file,
+            ))
+        )
+    if args.votable_out:
+        from .sinks.votable import votable_string, write_votable_fragments
+
+        def write_votable(df: DataFrame) -> None:
+            if args.votable_fragments:
+                write_votable_fragments(df, args.votable_out, table_name=args.table)
+                return
+            # raises (never silently truncates) when the result exceeds
+            # --votable-limit; the error points at --votable-fragments
+            doc = votable_string(df, table_name=args.table, limit=args.votable_limit)
+            with open(args.votable_out, "w") as f:
+                f.write(doc)
+
+        sinks.append(("votable", write_votable))
+    return sinks
+
+
+def _write_concurrently(df: DataFrame, sinks: list[Sink]) -> None:
+    """Run every sink on ``df``, each in its own thread, and wait for all
+    of them; then raise one error naming the failed and the completed
+    sinks. ``InheritableThread`` carries the caller's Spark local
+    properties (its job group) into each sink's jobs, which a plain
+    thread drops in PySpark's pinned-thread mode. No sink is cancelled."""
+    errors: dict[str, Exception] = {}
+
+    def attempt(name: str, write) -> None:
+        try:
+            write(df)
+        except Exception as e:  # reported after every sink has ended
+            errors[name] = e
+
+    threads = [
+        InheritableThread(attempt, args=sink, name=f"fits2db-sink-{sink[0]}")
+        for sink in sinks
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        failed = [name for name, _ in sinks if name in errors]
+        completed = [name for name, _ in sinks if name not in errors]
+        raise ExceptionGroup(
+            f"sinks failed: {', '.join(failed)}; "
+            f"completed: {', '.join(completed) or 'none'}",
+            [errors[name] for name in failed],
+        )
 
 
 def main() -> None:

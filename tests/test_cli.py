@@ -286,3 +286,112 @@ def test_cli_parquet_out_with_partitioning(fits_file, tmp_path, spark):
     back = spark.read.parquet(out)
     rows = {(r["id"], r["flux"], r["name"]) for r in back.collect()}
     assert rows == {(1, 0.5, "aa"), (2, 1.5, "bb"), (3, 2.5, "cc")}
+
+
+def _derby_rows(spark, url, table):
+    back = spark.read.format("jdbc").option("url", url).option("dbtable", table).load()
+    return sorted((r.id, r.flux, r.name) for r in back.collect())
+
+
+def _csv_rows(out_dir):
+    import pathlib
+
+    rows = []
+    for part in pathlib.Path(out_dir).glob("part-*.csv"):
+        lines = part.read_text().strip().splitlines()
+        assert lines[0] == "id,flux,name"
+        rows += lines[1:]
+    return sorted(rows)
+
+
+def _cached_rdd_ids(spark):
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+ROWS = [(1, 0.5, "aa"), (2, 1.5, "bb"), (3, 2.5, "cc")]
+CSV_ROWS = ["1,0.5,aa", "2,1.5,bb", "3,2.5,cc"]
+
+
+def test_cli_num_partitions_shapes_every_sink(fits_file, tmp_path, spark):
+    """--num-partitions repartitions the one frame every sink reads: the
+    CSV and parquet sinks each write two parts and Derby gets every row."""
+    import glob
+
+    url = f"jdbc:derby:{tmp_path}/np_db;create=true"
+    csv_dir, pq_dir = str(tmp_path / "csv"), str(tmp_path / "pq")
+    rc = run(
+        [fits_file, "--table", "stars", "--num-partitions", "2",
+         "--csv-out", csv_dir, "--parquet-out", pq_dir, "--jdbc-url", url],
+        spark=spark,
+    )
+    assert rc == 0
+    assert len(glob.glob(f"{csv_dir}/part-*.csv")) == 2
+    assert _csv_rows(csv_dir) == CSV_ROWS
+    assert len(glob.glob(f"{pq_dir}/part-*.parquet")) == 2
+    back = spark.read.parquet(pq_dir)
+    assert sorted((r.id, r.flux, r.name) for r in back.collect()) == ROWS
+    assert _derby_rows(spark, url, "stars") == ROWS
+
+
+def test_cli_sink_jobs_keep_the_callers_job_group(fits_file, tmp_path, spark):
+    """The sinks run in threads; each sink's jobs must still belong to the
+    job group the caller set, or a caller could neither cancel nor count
+    them."""
+    sc = spark.sparkContext
+    group = "cli-sinks-job-group"
+    sc.setJobGroup(group, group)
+    try:
+        rc = run(
+            [fits_file, "--table", "stars", "--csv-out", str(tmp_path / "csv"),
+             "--jdbc-url", f"jdbc:derby:{tmp_path}/jg_db;create=true"],
+            spark=spark,
+        )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert rc == 0
+    tracker = sc.statusTracker()
+    stage_names = {
+        tracker.getStageInfo(s).name
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    }
+    assert any(n.startswith("csv at") for n in stage_names), stage_names
+    assert any(n.startswith("save at") for n in stage_names), stage_names
+
+
+def test_cli_failed_sink_does_not_stop_the_others(fits_file, tmp_path, spark):
+    """A VOTable over its --votable-limit fails; the CSV and Derby sinks
+    still load every row, and the error names the failed and the completed
+    sinks."""
+    url = f"jdbc:derby:{tmp_path}/fail_db;create=true"
+    csv_dir = str(tmp_path / "csv")
+    with pytest.raises(ExceptionGroup, match="failed: votable; completed: jdbc, csv") as exc:
+        run(
+            [fits_file, "--table", "stars", "--votable-out", str(tmp_path / "t.vot"),
+             "--votable-limit", "1", "--csv-out", csv_dir, "--jdbc-url", url],
+            spark=spark,
+        )
+    [err] = exc.value.exceptions
+    assert isinstance(err, ValueError) and "exceeds limit=1" in str(err)
+    assert not (tmp_path / "t.vot").exists()
+    assert _csv_rows(csv_dir) == CSV_ROWS
+    assert _derby_rows(spark, url, "stars") == ROWS
+
+
+def test_cli_releases_the_shared_frame(fits_file, tmp_path, spark):
+    """The frame the sinks share is persisted for the load only: after a
+    load that succeeds and after one whose sink fails, no cached RDD is
+    left behind (a leak would grow with every append)."""
+    url = f"jdbc:derby:{tmp_path}/rel_db;create=true"
+    before = _cached_rdd_ids(spark)
+    argv = [fits_file, "--table", "stars", "--csv-out", str(tmp_path / "csv"),
+            "--jdbc-url", url]
+    assert run([*argv, "--mode", "create"], spark=spark) == 0
+    assert _cached_rdd_ids(spark) == before
+    with pytest.raises(ExceptionGroup, match="failed: votable"):
+        run([*argv, "--mode", "append", "--votable-out", str(tmp_path / "t.vot"),
+             "--votable-limit", "1"], spark=spark)
+    assert _cached_rdd_ids(spark) == before
+    assert len(_derby_rows(spark, url, "stars")) == 6
