@@ -11,6 +11,13 @@ engine:
     python -m fits2db_spark cat.fits --table t \
         --jdbc-url jdbc:derby:/tmp/db;create=true \
         --jdbc-driver org.apache.derby.jdbc.EmbeddedDriver --mode create
+    python -m fits2db_spark cube.fits --table vox --hdu CUBE --csv-out /tmp/vox
+
+No flag names the HDU kind: the header of the HDU that --hdu selects picks
+the decoder. A BINTABLE (tile-compressed included) or an ASCII TABLE loads
+its rows; a 2-D or 3-D IMAGE loads one (x, y[, z], val) row per pixel or
+voxel, with BSCALE/BZERO applied and BLANK pixels NULL. Every input must
+select the same kind.
 
 Differences from the reference, by design (Spark-first): the "chunked row
 loop" is Spark's per-file parallel decode (one task per FITS file); CSV
@@ -24,8 +31,9 @@ Spark jobs.
 
 Failure semantics of a load with several row sinks:
 
-* Every input is planned and checked on the driver (header, column names,
-  types, byte size) before any sink writes; a bad input fails the load
+* Every input is planned and checked on the driver (header, HDU kind,
+  column names, types, byte size, and Spark's binaryFile length limit,
+  2 GiB by default) before any sink writes; a bad input fails the load
   with no sink written.
 * Every sink is attempted, and none is cancelled once running: a failing
   sink (say a VOTable over its --votable-limit) does not stop the others,
@@ -60,26 +68,17 @@ def _positive_int(raw: str) -> int:
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="fits2db_spark",
-        description="FITS binary tables -> SQL (DDL / CSV / JDBC), on Spark.",
+        description="FITS tables and images -> SQL (DDL / CSV / JDBC), on Spark.",
     )
     p.add_argument("inputs", nargs="+", help="FITS file(s) or glob(s)")
     p.add_argument("--table", required=True, help="target SQL table name")
     p.add_argument(
         "--hdu",
         default="1",
-        help="BINTABLE extension: 1-based index or EXTNAME (default 1)",
-    )
-    kind = p.add_mutually_exclusive_group()
-    kind.add_argument(
-        "--ascii",
-        action="store_true",
-        help="inputs are ASCII TABLE extensions (XTENSION=TABLE) instead of BINTABLE",
-    )
-    kind.add_argument(
-        "--image",
-        action="store_true",
-        help="inputs are IMAGE extensions: load one (x, y, val) row per "
-        "pixel with BSCALE/BZERO applied",
+        help="HDU to load: 1-based index or EXTNAME (default 1). Its header "
+        "picks the decoder: a BINTABLE or ASCII TABLE loads its rows, a 2-D "
+        "or 3-D IMAGE one (x, y[, z], val) row per pixel with BSCALE/BZERO "
+        "applied",
     )
     p.add_argument(
         "--verify-checksum",
@@ -151,31 +150,16 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _hdu_arg(raw: str) -> int | str:
-    try:
-        return int(raw)
-    except ValueError:
-        return raw
-
-
 def load_frame(spark: SparkSession, args: argparse.Namespace) -> DataFrame:
     """All FITS inputs as one DataFrame, from one reader call. The reader
     plans on the driver from file headers alone: it expands the globs,
-    takes the schema from the first file's header (declared, never
-    inferred) and checks every file against it by column name, type and
-    byte size, so a bad input fails here, before any sink writes."""
-    from .sources.fits import read_fits, read_fits_ascii, read_fits_image
+    takes the HDU kind and the schema from the first file's header
+    (declared, never inferred) and checks every file against them by kind,
+    column name, type and byte size, so a bad input fails here, before any
+    sink writes."""
+    from .sources.fits import read_fits
 
-    if getattr(args, "image", False):
-        reader = read_fits_image
-    elif getattr(args, "ascii", False):
-        reader = read_fits_ascii
-    else:
-        reader = read_fits
-    # --verify-checksum composes with every reader (checksums cover
-    # BINTABLE, TABLE and IMAGE HDUs alike)
-    verify = bool(getattr(args, "verify_checksum", False))
-    return reader(spark, args.inputs, hdu=_hdu_arg(args.hdu), verify_checksum=verify)
+    return read_fits(spark, args.inputs, hdu=args.hdu, verify_checksum=args.verify_checksum)
 
 
 def emit_ddl(schema, args: argparse.Namespace, out) -> None:

@@ -274,9 +274,9 @@ def fits_image_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     mosaic of tiles parallelizes by file, and downstream pixel queries
     (cone cutouts, background stats) are plain filters/aggregates that
     push into the scan."""
-    from ..sources.fits import read_fits_image
+    from ..sources.fits import read_fits
 
-    return read_fits_image(spark, _stage_sci_image(spark, sf_dir), hdu="SCI")
+    return read_fits(spark, _stage_sci_image(spark, sf_dir), hdu="SCI")
 
 
 def _stage_sci_image(spark: SparkSession, sf_dir: str) -> str:
@@ -317,9 +317,9 @@ def fits_cutout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shares the staged image (and its closed-form pixel function) with
     ``fits_image_ingest``, so every cutout value is oracle-checked."""
-    from ..sources.fits import read_fits_image
+    from ..sources.fits import read_fits
 
-    px = read_fits_image(spark, _stage_sci_image(spark, sf_dir), hdu="SCI")
+    px = read_fits(spark, _stage_sci_image(spark, sf_dir), hdu="SCI")
     x0, y0, hw, hh = 12, 9, 8, 6
     return px.filter(
         (F.col("x") >= x0 - hw)
@@ -1085,9 +1085,9 @@ def fits_image_sigma_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a shuffle of pixels (the filter consumes the broadcast scalar).
     On a mosaic at archive scale the same plan runs per-tile via one
     groupBy(file) with the clip bounds as windowed scalars."""
-    from ..sources.fits import read_fits_image
+    from ..sources.fits import read_fits
 
-    px = read_fits_image(spark, _stage_sci_image(spark, sf_dir), hdu="SCI").select(
+    px = read_fits(spark, _stage_sci_image(spark, sf_dir), hdu="SCI").select(
         F.col("val").cast("double").alias("val")
     )
     kept = px
@@ -1161,9 +1161,9 @@ def fits_cube_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument as fits_cutout one dimension up. The closed-form voxel
     function makes every value oracle-checkable (the fits_image_ingest
     convention)."""
-    from ..sources.fits import read_fits_cube
+    from ..sources.fits import read_fits
 
-    vox = read_fits_cube(spark, _stage_spec_cube(spark, sf_dir), hdu="CUBE")
+    vox = read_fits(spark, _stage_spec_cube(spark, sf_dir), hdu="CUBE")
     ap = vox.filter(
         (F.col("x") >= 4) & (F.col("x") < 12) & (F.col("y") >= 3) & (F.col("y") < 9)
     )
@@ -1416,7 +1416,7 @@ def fits_image_blank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the other image keys — one decode task per file,
     masking is a vectorized numpy compare riding the existing Arrow
     validity bitmap path (to_arrow_columns), zero extra passes."""
-    from ..sources.fits import read_fits_image, write_fits_image
+    from ..sources.fits import read_fits, write_fits_image
 
     def write(out_dir: str) -> None:
         os.makedirs(out_dir, exist_ok=True)
@@ -1431,7 +1431,7 @@ def fits_image_blank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     out = stage(spark, sf_dir, "fits_image_blank", write)
-    return read_fits_image(spark, os.path.join(out, "sci_blank.fits"), hdu="SCI")
+    return read_fits(spark, os.path.join(out, "sci_blank.fits"), hdu="SCI")
 
 
 @register(
@@ -1506,7 +1506,7 @@ def fits_ascii_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round trip (BINTABLE: fits_write_roundtrip; VOTable:
     votable_write_roundtrip): customer -> ``write_fits_asciitable``
     (Aw/Iw/Fw.d fixed-column text, TNULLn string sentinel for SQL NULL)
-    -> ``read_fits_ascii`` -> exact value-hash vs the source table.
+    -> ``read_fits`` -> exact value-hash vs the source table.
 
     Float determinism: acctbal carries exactly 2 decimals, so the F12.2
     rendering is exact (no rounding ties) and the parse-back returns the
@@ -1522,7 +1522,7 @@ def fits_ascii_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path."""
     import duckdb
 
-    from ..sources.fits import read_fits_ascii, write_fits_asciitable
+    from ..sources.fits import read_fits, write_fits_asciitable
 
     def write(out_dir: str) -> None:
         rows = (
@@ -1550,7 +1550,7 @@ def fits_ascii_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(blob)
 
     path = stage(spark, sf_dir, "customer_fits_ascii", write)
-    return read_fits_ascii(spark, path, hdu="CUSTASCII")
+    return read_fits(spark, path, hdu="CUSTASCII")
 
 
 @register(

@@ -15,24 +15,21 @@ def write_csv(
     df: DataFrame,
     path: str,
     *,
-    header: bool = True,
     null_marker: str = r"\N",
     delimiter: str = ",",
-    mode: str = "overwrite",
     single_file: bool = False,
-    compression: str | None = None,
 ) -> None:
+    """Write ``df`` as CSV with a header row, replacing ``path``."""
     if single_file:
         # driver-side merge convenience for small exports — never at scale
         df = df.coalesce(1)
-    w = (
-        df.write.option("header", header)
+    (
+        df.write.option("header", True)
         .option("nullValue", null_marker)
         .option("delimiter", delimiter)
         .option("quote", '"')
         .option("escape", '"')
         .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        .mode("overwrite")
+        .csv(path)
     )
-    if compression:
-        w = w.option("compression", compression)
-    w.mode(mode).csv(path)

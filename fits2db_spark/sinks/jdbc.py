@@ -28,7 +28,6 @@ def write_jdbc(
     batchsize: int = 10_000,
     num_partitions: int | None = None,
     driver: str | None = None,
-    properties: dict | None = None,
     column_types: str | None = None,
 ) -> None:
     """Load a DataFrame into a SQL table.
@@ -56,8 +55,6 @@ def write_jdbc(
     )
     if driver:
         w = w.option("driver", driver)
-    for k, v in (properties or {}).items():
-        w = w.option(k, v)
     if column_types:
         w = w.option("createTableColumnTypes", column_types)
     if mode == "create":

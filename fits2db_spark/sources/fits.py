@@ -13,10 +13,14 @@ Every reader goes through one read core:
   types and byte size — before any Spark job;
 * one decode to Arrow (:func:`to_batch`) that binds columns by name.
 
-Two transports carry it: ``binaryFile`` + ``mapInArrow`` (``read_fits*``
-and the CLI, one task per file) and the Python DataSource
-(``format("fits")``, row-range splits, pushdown, streaming).
-Type map per SURVEY.md §1.2:
+The selected HDU's header picks the decoder (:func:`_kind`): a BINTABLE
+(tile-compressed included), an ASCII TABLE, or a 2-D or 3-D IMAGE as one
+row per pixel or voxel. No caller names the kind; a read whose files
+select different kinds fails in the plan. Two transports carry the core:
+``binaryFile`` + ``mapInArrow`` (:func:`read_fits` and the CLI, one task
+per file, every kind) and the Python DataSource (``format("fits")``,
+BINTABLEs only: row-range splits, pushdown, streaming).
+BINTABLE type map per SURVEY.md §1.2:
 
     L -> boolean   X -> binary(bitfield)  B -> short (unsigned byte)
     I -> short     J -> int               K -> long
@@ -221,21 +225,18 @@ def _walk_hdus(blocks: _Blocks):
         off, idx = hdu.end, idx + 1
 
 
-def _find_hdu(blocks: _Blocks, hdu: int | str, kind: str) -> Hdu:
-    """Select an HDU of ``kind`` by index (1 = the first extension) or by
-    EXTNAME, compared stripped and case-insensitively for every kind."""
-    k = _KINDS[kind]
+def _find_hdu(blocks: _Blocks, hdu: int | str, want: str | None = None) -> tuple[Hdu, _Kind]:
+    """Select an HDU by index (1 = the first extension; a numeric string is
+    an index) or by EXTNAME, compared stripped and case-insensitively, and
+    return it with the kind its header declares (which must be ``want`` if
+    given)."""
+    if isinstance(hdu, str) and hdu.strip().isdigit():
+        hdu = int(hdu)
     name = hdu.strip().upper() if isinstance(hdu, str) else None
     for h in _walk_hdus(blocks):
-        if name is None and h.index == hdu:
-            if not k.matches(h):
-                raise FitsFormatError(
-                    f"HDU {hdu} is not a {k.label} (XTENSION={h.cards.get('XTENSION')!r})"
-                )
-            return h
-        if name is not None and k.matches(h) and h.cards.get("EXTNAME", "").strip().upper() == name:
-            return h
-    raise FitsFormatError(f"{k.label} HDU {hdu!r} not found")
+        if h.index == hdu if name is None else h.cards.get("EXTNAME", "").strip().upper() == name:
+            return h, _kind(h, want)
+    raise FitsFormatError(f"HDU {hdu!r} not found")
 
 
 def _check_size(blocks: _Blocks, h: Hdu, where: str) -> None:
@@ -255,7 +256,7 @@ def parse_bintable_header(src, hdu: int | str = 1) -> tuple[dict, list[dict], in
                tnull, tscale, tzero}, ...]
     """
     with _open_blocks(src) as b:
-        h = _find_hdu(b, hdu, "bintable")
+        h, _ = _find_hdu(b, hdu, "BINTABLE")
     return h.cards, _parse_columns(h.cards), h.data_off
 
 
@@ -423,7 +424,14 @@ def decode_bintable(src, hdu: int | str = 1):
     repeat>1 columns, and ``np.ma.MaskedArray`` where a TNULLn sentinel
     declares nulls — :func:`to_arrow_columns` turns all three into Arrow
     arrays (list-typed for 2D, null-bearing for masked)."""
-    return _decode(src, hdu, "bintable")
+    return _decode(src, hdu, "BINTABLE")
+
+
+def decode_hdu(src, hdu: int | str = 1):
+    """One HDU given as bytes or a path -> (schema, columns), decoded as the
+    kind its header declares: a BINTABLE or ASCII TABLE as its rows, a 2-D
+    or 3-D IMAGE as one (x, y[, z], val) row per pixel or voxel."""
+    return _decode(src, hdu)
 
 
 def decode_bintable_range(
@@ -433,16 +441,17 @@ def decode_bintable_range(
     disk — the partitioned-read primitive: fixed-width rows make the byte
     range exact (data_off + row_start*NAXIS1), so a 100 GB table splits into
     independent seek+read chunks with no coordination."""
-    return _decode(path, hdu, "bintable", row_start, row_count)
+    return _decode(path, hdu, "BINTABLE", row_start, row_count)
 
 
-def _decode(src, hdu: int | str, kind: str, *rows):
-    """Select, size-check and decode one HDU of ``kind`` from bytes or a path."""
+def _decode(src, hdu: int | str, want: str | None = None, *rows):
+    """Select, size-check and decode one HDU from bytes or a path as the
+    kind its header declares (which must be ``want`` if given)."""
     with _open_blocks(src) as b:
-        h = _find_hdu(b, hdu, kind)
+        h, kind = _find_hdu(b, hdu, want)
         name = src if isinstance(src, (str, os.PathLike)) else "FITS bytes"
         _check_size(b, h, f"{name} HDU {h.index}")
-        return _KINDS[kind].decode(b, h, *rows)
+        return kind.decode(b, h, *rows)
 
 
 def _row_range(nrows: int, row_start: int, row_count: int | None) -> tuple[int, int]:
@@ -592,52 +601,63 @@ def resolve_paths(path: str | None) -> list[str]:
     return sorted(p for p in glob.glob(path) if os.path.isfile(p))
 
 
-def header_schema(path: str, hdu: int | str = 1, kind: str = "bintable") -> StructType:
-    """The schema one file's header declares, from its header blocks alone."""
+def header_schema(path: str, hdu: int | str = 1) -> StructType:
+    """The schema one file's BINTABLE header declares, from its header
+    blocks alone."""
     with _open_blocks(path) as b:
-        return _KINDS[kind].schema(_find_hdu(b, hdu, kind).cards)
+        return _bintable_schema(_find_hdu(b, hdu, "BINTABLE")[0].cards)
 
 
 class FitsPlan(NamedTuple):
-    """A checked FITS read: the declared schema and each file's selected HDU."""
+    """A checked FITS read: the declared schema, the HDU kind every file
+    selects, and each file's selected HDU."""
 
     schema: StructType
+    kind: str
     files: list[tuple[str, Hdu]]
 
 
 def plan_fits(
     path: str | list[str],
     hdu: int | str = 1,
-    kind: str = "bintable",
     schema: StructType | None = None,
 ) -> FitsPlan:
     """The one plan of a FITS read, made on the driver before any Spark job.
 
     Expands ``path`` (a file, directory or glob, or a list of them; each
-    must match a file), reads only the header blocks of every file, and
-    checks each against the declared schema — ``schema`` if given, else the
-    first file's header. Columns match by name; their types must be equal,
-    except that a given ``schema`` may widen integer and float columns. A
-    file that differs, or is shorter than its header declares, raises
-    :class:`FitsFormatError` naming the file, HDU and column."""
+    must match a file) and reads only the header blocks of every file. The
+    first file's selected HDU declares the kind (:func:`_kind`); every
+    other file must select the same kind. Each file is checked against the
+    declared schema — ``schema`` if given, else the first file's header.
+    Columns match by name; their types must be equal, except that a given
+    ``schema`` may widen integer and float columns. A file of another
+    kind, that differs, or that is shorter than its header declares raises
+    :class:`FitsFormatError` naming the file, HDU and column or kinds."""
     widen = schema is not None
+    first: tuple[str, _Kind] | None = None
     files: dict[str, Hdu] = {}
-    for p in [path] if isinstance(path, str) else path:
+    for p in [path] if isinstance(path, str) else path or [""]:
         matched = resolve_paths(p)
         if not matched:
             raise FileNotFoundError(f"no FITS files match {p!r}")
         for f in matched:
             with _open_blocks(f) as b:
                 try:
-                    h = _find_hdu(b, hdu, kind)
+                    h, kind = _find_hdu(b, hdu)
                 except FitsFormatError as e:
                     raise FitsFormatError(f"{f}: {e}") from None
                 where = f"{f} HDU {h.index}"
                 _check_size(b, h, where)
-            got = _KINDS[kind].schema(h.cards)
+            first = first or (where, kind)
+            if kind is not first[1]:
+                raise FitsFormatError(
+                    f"{where} is {kind.label}, but {first[0]} is {first[1].label}: "
+                    "one read takes one HDU kind"
+                )
+            got = kind.schema(h.cards)
             schema = got if schema is None else _check_schema(where, got, schema, widen)
             files[f] = h
-    return FitsPlan(schema, list(files.items()))
+    return FitsPlan(schema, first[1].label, list(files.items()))
 
 
 # file column types a caller's schema may widen; to_batch casts the column
@@ -684,6 +704,10 @@ def to_batch(schema: StructType, decoded, where: str):
     return pa.RecordBatch.from_arrays(out, names=schema.names)
 
 
+# the longest file Spark's binaryFile source reads (2 GiB - 1 by default)
+_BINARY_FILE_MAX_LENGTH = "spark.sql.sources.binaryFile.maxLength"
+
+
 def read_fits(
     spark: SparkSession,
     path: str | list[str],
@@ -691,48 +715,43 @@ def read_fits(
     schema: StructType | None = None,
     verify_checksum: bool = False,
 ) -> DataFrame:
-    """Read FITS BINTABLE(s) — a file, directory or glob, or a list of
-    them — into one DataFrame.
+    """Read one HDU of each FITS file — a file, directory or glob, or a
+    list of them — into one DataFrame, through the ``binaryFile`` +
+    ``mapInArrow`` transport: one decode task per planned file.
 
-    ``hdu`` selects the BINTABLE extension by 1-based index or EXTNAME.
-    :func:`plan_fits` reads every file's header on the driver and declares
-    the schema (``schema`` if given, else the first file's header; never
-    inferred from row data); columns bind by name. ``verify_checksum=True``
+    ``hdu`` selects the HDU by 1-based index (an int or a numeric string)
+    or EXTNAME; its header picks the decoder. A BINTABLE or ASCII TABLE
+    loads its rows; a 2-D or 3-D IMAGE loads one (x, y[, z], val) row per
+    pixel or voxel with BSCALE/BZERO applied and BLANK pixels null.
+    :func:`plan_fits` reads every file's header on the driver, requires one
+    HDU kind across the files and declares the schema (``schema`` if given,
+    else the first file's header; never inferred from row data); columns
+    bind by name. A file over Spark's ``binaryFile`` length limit is
+    rejected in the plan, before any Spark job. ``verify_checksum=True``
     validates the public CHECKSUM/DATASUM convention on every HDU of every
     file, executor-side before decode, and fails the job on the first
     corrupt HDU (files without the keywords pass — unprotected is not
     corrupt).
     """
-    return _read_fits_with(spark, path, hdu, schema, "bintable", verify_checksum)
-
-
-def read_fits_ascii(
-    spark: SparkSession,
-    path: str | list[str],
-    hdu: int | str = 1,
-    schema: StructType | None = None,
-    verify_checksum: bool = False,
-) -> DataFrame:
-    """Read ASCII TABLE extension(s) into a DataFrame (same plan and
-    per-file parallel decode as :func:`read_fits`, using
-    :func:`decode_asciitable`)."""
-    return _read_fits_with(spark, path, hdu, schema, "ascii", verify_checksum)
-
-
-def _read_fits_with(spark, path, hdu, schema, kind, verify) -> DataFrame:
-    """The ``binaryFile`` + ``mapInArrow`` transport: one decode task per
-    planned file."""
     from ..session import ensure_runtime_confs
 
-    plan = plan_fits(path, hdu, kind, schema)
-    schema = plan.schema
+    plan = plan_fits(path, hdu, schema)
+    schema, kind = plan.schema, plan.kind
+    limit = int(spark.conf.get(_BINARY_FILE_MAX_LENGTH))
+    for p, _ in plan.files:
+        if (size := os.path.getsize(p)) > limit:
+            raise FitsFormatError(
+                f"{p}: {size} bytes is over the binaryFile read limit "
+                f"{_BINARY_FILE_MAX_LENGTH}={limit}; read a BINTABLE this large with "
+                'spark.read.format("fits"), which splits it into row ranges'
+            )
     ensure_runtime_confs(spark)  # ships this package to executor workers
 
     def decode_files(batches):
         for batch in batches:
             for p, payload in zip(batch.column("path").to_pylist(), batch.column("content")):
                 data = payload.as_py()
-                if verify:
+                if verify_checksum:
                     _verify_or_raise(data, p)
                 yield to_batch(schema, _decode(data, hdu, kind), f"{p} HDU {hdu!r}")
 
@@ -742,7 +761,7 @@ def _read_fits_with(spark, path, hdu, schema, kind, verify) -> DataFrame:
 
 def _verify_or_raise(data: bytes, where: str) -> None:
     """CHECKSUM/DATASUM validation of every HDU of a file — BINTABLE, TABLE
-    and IMAGE alike, so the flag composes identically with every reader."""
+    and IMAGE alike, whatever kind the read selects."""
     for r in verify_checksums(data):
         if r["datasum_ok"] is False or r["checksum_ok"] is False:
             raise FitsFormatError(
@@ -1036,11 +1055,6 @@ def _ascii_columns(cards: dict) -> list[dict]:
             )
         )
     return cols
-
-
-def decode_asciitable(src, hdu: int | str = 1):
-    """One ASCII TABLE HDU, given as bytes or a path -> (schema, columns)."""
-    return _decode(src, hdu, "ascii")
 
 
 def _decode_ascii_hdu(b: _Blocks, h: Hdu):
@@ -1397,15 +1411,6 @@ def write_fits_image(
     return blob
 
 
-def decode_image(src, hdu: int | str = 1):
-    """2-D IMAGE HDU -> (schema, [x, y, val]) pixel table: one row per pixel,
-    x = column (NAXIS1, the fastest axis), y = row, val = the PHYSICAL
-    value BZERO + BSCALE * raw as double. The same (schema, columns)
-    contract as :func:`decode_bintable`, so the parallel Spark read path
-    is shared."""
-    return _decode(src, hdu, "image")
-
-
 def _pixel_schema(cards: dict) -> StructType:
     """One integer coordinate column per axis (x = NAXIS1, the fastest) and
     the physical value; ``val`` is nullable only where BLANK declares an
@@ -1442,64 +1447,38 @@ def _decode_pixels(b: _Blocks, h: Hdu):
     return _pixel_schema(cards), [*coords, val]
 
 
-def read_fits_image(
-    spark: SparkSession,
-    path: str,
-    hdu: int | str = 1,
-    schema: StructType | None = None,
-    verify_checksum: bool = False,
-) -> DataFrame:
-    """Read IMAGE extension(s) as a pixel table — one (x, y, val) row per
-    pixel with BSCALE/BZERO applied. Same per-file parallel decode as
-    :func:`read_fits` (and the same ``verify_checksum`` contract); the
-    tabular view is what makes array data joinable (source catalogs x
-    cutouts) in the same engine as everything else."""
-    return _read_fits_with(spark, path, hdu, schema, "image", verify_checksum)
-
-
-def read_fits_cube(
-    spark: SparkSession,
-    path: str,
-    hdu: int | str = 1,
-    schema: StructType | None = None,
-    verify_checksum: bool = False,
-) -> DataFrame:
-    """Read 3-D IMAGE extension(s) as a voxel table — one (x, y, z, val)
-    row per voxel with BSCALE/BZERO applied; same per-file parallel decode
-    contract as :func:`read_fits_image`."""
-    return _read_fits_with(spark, path, hdu, schema, "cube", verify_checksum)
-
-
 # ---------------------------------------------------------------------------
 # HDU kinds: what each reader selects, declares and decodes
 # ---------------------------------------------------------------------------
 
 class _Kind(NamedTuple):
     label: str
-    matches: Callable[[Hdu], bool]
     schema: Callable[[dict], StructType]  # header cards -> declared schema
     decode: Callable  # (blocks, hdu[, row_start, row_count]) -> (schema, columns)
 
 
-def _is_image(h: Hdu, naxis: int) -> bool:
-    primary = h.index == 0 and h.cards.get("SIMPLE") == "T"
-    image = primary or h.cards.get("XTENSION", "").strip() == "IMAGE"
-    return image and _header_int(h.cards, "NAXIS") == naxis
+_BINTABLE = _Kind("BINTABLE", _bintable_schema, _decode_bintable_hdu)
+_ASCII = _Kind("ASCII TABLE", lambda cards: fits_spark_schema(_ascii_columns(cards)), _decode_ascii_hdu)
+_IMAGE = _Kind("IMAGE", _pixel_schema, _decode_pixels)
 
 
-_KINDS = {
-    "bintable": _Kind(
-        "BINTABLE",
-        lambda h: h.cards.get("XTENSION", "").startswith("BINTABLE"),
-        _bintable_schema,
-        _decode_bintable_hdu,
-    ),
-    "ascii": _Kind(
-        "ASCII TABLE",
-        lambda h: h.cards.get("XTENSION", "").startswith("TABLE"),
-        lambda cards: fits_spark_schema(_ascii_columns(cards)),
-        _decode_ascii_hdu,
-    ),
-    "image": _Kind("2-D IMAGE", lambda h: _is_image(h, 2), _pixel_schema, _decode_pixels),
-    "cube": _Kind("3-D IMAGE", lambda h: _is_image(h, 3), _pixel_schema, _decode_pixels),
-}
+def _kind(h: Hdu, want: str | None = None) -> _Kind:
+    """The kind an HDU's header declares: a BINTABLE (tile-compressed
+    included), an ASCII TABLE, or a 2-D or 3-D IMAGE (an IMAGE extension
+    or the primary array). Raises for any other HDU, or for a kind other
+    than ``want`` when given."""
+    cards = h.cards
+    if h.index == 0 and cards.get("SIMPLE") == "T":
+        kind = _IMAGE
+    else:
+        kind = {"BINTABLE": _BINTABLE, "TABLE": _ASCII, "IMAGE": _IMAGE}.get(
+            cards.get("XTENSION", "").strip()
+        )
+    if kind is _IMAGE and _header_int(cards, "NAXIS") not in (2, 3):
+        kind = None
+    if kind is None or want not in (None, kind.label):
+        raise FitsFormatError(
+            f"HDU {h.index} is not a {want or 'BINTABLE, ASCII TABLE or 2-D/3-D IMAGE'}"
+            f" (XTENSION={cards.get('XTENSION')!r}, NAXIS={cards.get('NAXIS')})"
+        )
+    return kind

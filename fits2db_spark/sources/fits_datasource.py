@@ -12,10 +12,12 @@ missing, extra or retyped column or a truncated file fails before any task
 starts. Each task decodes its rows and binds them to the schema by name, so
 files that order their columns differently load correctly.
 
-Both transports stay: this one splits a large table into row ranges and
+Both transports stay: this one reads BINTABLEs only (its row-range
+planning needs fixed-width rows), splits a large table into row ranges and
 supports filter pushdown and ``readStream``; the ``binaryFile`` +
-``mapInArrow`` transport behind ``read_fits`` and the CLI is faster at
-tile-sized files.
+``mapInArrow`` transport behind ``read_fits`` and the CLI reads every HDU
+kind and is faster at tile-sized files, but no file over Spark's
+``binaryFile`` length limit (2 GiB by default).
 """
 
 from __future__ import annotations
@@ -32,6 +34,7 @@ from pyspark.sql.datasource import (
 # call-time ``from .fits import ...`` would re-enter the real import
 # system and fail — module-scope names are captured into the pickle.
 from .fits import (
+    FitsFormatError,
     _header_int,
     decode_bintable,
     decode_bintable_range,
@@ -65,7 +68,7 @@ class FitsBaseReader(DataSourceReader):
 
     def __init__(self, options, schema):
         self._path = options.get("path")
-        self._hdu = _hdu_option(options)
+        self._hdu = options.get("hdu", 1)
         self._schema = schema
         self._chunk_bytes = int(float(options.get("chunk_mb", 64)) * 1024 * 1024)
         self._pushed: list[tuple[str, str, object]] = []
@@ -99,8 +102,14 @@ class FitsBaseReader(DataSourceReader):
         return batch.filter(pc.coalesce(mask, pa.scalar(False)))
 
     def partitions(self):
+        plan = plan_fits(self._path, self._hdu, schema=self._schema)
+        if plan.kind != "BINTABLE":
+            raise FitsFormatError(
+                f'format("fits") reads BINTABLE HDUs; {plan.files[0][0]} selects '
+                f"{plan.kind}, which read_fits loads"
+            )
         parts = []
-        for p, h in plan_fits(self._path, self._hdu, schema=self._schema).files:
+        for p, h in plan.files:
             cards = h.cards
             if cards.get("ZTABLE", "").strip() == "T":
                 # tile-compressed table: the container's NAXIS2 counts TILES,
@@ -186,7 +195,7 @@ class FitsDataSource(DataSource):
         paths = resolve_paths(self.options.get("path"))
         if not paths:
             raise FileNotFoundError(f"no FITS files match {self.options.get('path')!r}")
-        schema = header_schema(paths[0], _hdu_option(self.options))
+        schema = header_schema(paths[0], self.options.get("hdu", 1))
         # Strip TUNIT/TDISP column metadata at the DataSource boundary:
         # Spark 4.1's SimpleDataSourceStreamReader runner fails its Arrow
         # batch assertion whenever the declared schema carries ANY
@@ -209,15 +218,6 @@ class FitsDataSource(DataSource):
 
     def simpleStreamReader(self, schema):
         return FitsSimpleStreamReader(self.options, schema)
-
-
-def _hdu_option(options) -> int | str:
-    """``hdu`` option: numeric string -> 1-based index, else EXTNAME."""
-    raw = options.get("hdu", 1)
-    try:
-        return int(raw)
-    except (TypeError, ValueError):
-        return str(raw)
 
 
 def register(spark) -> None:
@@ -260,7 +260,7 @@ class FitsSimpleStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options, schema):
         self._options = options
         self._schema = schema
-        self._hdu = _hdu_option(options)
+        self._hdu = options.get("hdu", 1)
         self._path = options.get("path")
 
     def initialOffset(self) -> dict:

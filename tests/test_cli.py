@@ -101,7 +101,8 @@ def test_cli_hdu_by_name(tmp_path, spark, capsys):
 
 
 def test_cli_ascii_table_csv(tmp_path, spark):
-    """--ascii reads an ASCII TABLE extension end-to-end to CSV."""
+    """An ASCII TABLE extension loads end-to-end to CSV with no kind flag:
+    its header picks the decoder."""
     from fits2db_spark.sources.fits import write_fits_asciitable
 
     blob = write_fits_asciitable(
@@ -111,7 +112,7 @@ def test_cli_ascii_table_csv(tmp_path, spark):
     src.write_bytes(blob)
     out = tmp_path / "csv"
     rc = run(
-        [str(src), "--table", "cat", "--ascii", "--csv-out", str(out), "--single-file"],
+        [str(src), "--table", "cat", "--csv-out", str(out), "--single-file"],
         spark=spark,
     )
     assert rc == 0
@@ -153,7 +154,7 @@ def test_cli_image_pixel_table_csv(tmp_path, spark):
     p.write_bytes(write_fits_image(img, bscale=2.0, extname="SCI"))
     out = tmp_path / "csv"
     rc = run(
-        [str(p), "--table", "pix", "--hdu", "SCI", "--image",
+        [str(p), "--table", "pix", "--hdu", "SCI",
          "--csv-out", str(out), "--single-file"],
         spark=spark,
     )
@@ -162,6 +163,30 @@ def test_cli_image_pixel_table_csv(tmp_path, spark):
     assert body[0] == "x,y,val"
     assert len(body) == 13  # header + 12 pixels
     assert "3,2,22.0" in body  # img[2,3] = 11 -> 2*11
+
+
+def test_cli_cube_voxel_table_csv(tmp_path, spark):
+    """A 3-D IMAGE loads with no kind flag: one (x, y, z, val) row per
+    voxel, BSCALE/BZERO applied."""
+    import numpy as np
+
+    from fits2db_spark.sources.fits import write_fits_image
+
+    cube = np.arange(24, dtype="i2").reshape(2, 3, 4)  # [z, y, x]
+    p = tmp_path / "cube.fits"
+    p.write_bytes(write_fits_image(cube, bscale=0.5, bzero=1.0, extname="CUBE"))
+    out = tmp_path / "csv"
+    rc = run(
+        [str(p), "--table", "vox", "--hdu", "cube", "--csv-out", str(out), "--single-file"],
+        spark=spark,
+    )
+    assert rc == 0
+    body = next(out.glob("*.csv")).read_text().strip().splitlines()
+    assert body[0] == "x,y,z,val"
+    assert sorted(body[1:]) == sorted(
+        f"{x},{y},{z},{1.0 + 0.5 * cube[z, y, x]}"
+        for z in range(2) for y in range(3) for x in range(4)
+    )
 
 
 def test_cli_verify_checksum_composes_with_image(tmp_path, spark):
@@ -178,8 +203,7 @@ def test_cli_verify_checksum_composes_with_image(tmp_path, spark):
     p.write_bytes(bytes(bad))
     with pytest.raises(Exception, match="checksum mismatch"):
         run(
-            [str(p), "--table", "pix", "--hdu", "SCI", "--image",
-             "--verify-checksum"],
+            [str(p), "--table", "pix", "--hdu", "SCI", "--verify-checksum"],
             spark=spark,
         )
 
@@ -228,21 +252,6 @@ def test_cli_rejects_nonpositive_jdbc_numbers_before_any_sink(tmp_path, spark, c
         assert exc.value.code == 2
         assert not out_dir.exists(), f"{flag} 0 wrote the CSV sink"
     assert "must be >= 1" in capsys.readouterr().err
-
-
-def test_cli_image_and_ascii_are_exclusive(fits_file, tmp_path, spark, capsys):
-    """--image and --ascii name two different HDU kinds; passing both used
-    to load pixels silently. It must be an argparse error before any sink
-    writes."""
-    out_dir = tmp_path / "csv"
-    with pytest.raises(SystemExit) as exc:
-        run(
-            [fits_file, "--table", "t", "--image", "--ascii", "--csv-out", str(out_dir)],
-            spark=spark,
-        )
-    assert exc.value.code == 2
-    assert not out_dir.exists()
-    assert "not allowed with argument" in capsys.readouterr().err
 
 
 def test_scaleup_bench_surfaces_subprocess_failures(monkeypatch):

@@ -224,6 +224,9 @@ def test_multi_hdu_selection_by_index_and_name():
     assert list(cols1[0]) == [1, 2]
     _, cols2 = decode_bintable(blob, 2)
     assert list(cols2[0]) == [3.5]
+    # a numeric string is an index, as the CLI's --hdu and format("fits") pass it
+    _, cols2 = decode_bintable(blob, "2")
+    assert list(cols2[0]) == [3.5]
     _, cols_by_name = decode_bintable(blob, "events")
     assert list(cols_by_name[0]) == [3.5]
     with pytest.raises(FitsFormatError, match="not found"):
@@ -341,7 +344,7 @@ def test_ascii_table_roundtrip(spark):
     """ASCII TABLE (XTENSION=TABLE): Aw/Iw/Fw.d/Ew.d fields, TNULL string
     sentinel -> NULL, Fortran D exponents, and Spark-level load."""
     from fits2db_spark.sources.fits import (
-        decode_asciitable,
+        decode_hdu,
         to_arrow_columns,
         write_fits_asciitable,
     )
@@ -356,7 +359,7 @@ def test_ascii_table_roundtrip(spark):
         extname="CAT",
         null_token="*",
     )
-    schema, cols = decode_asciitable(blob, 1)
+    schema, cols = decode_hdu(blob, 1)
     assert [f.dataType.simpleString() for f in schema.fields] == [
         "string", "bigint", "double", "double",
     ]
@@ -378,18 +381,18 @@ def test_ascii_table_roundtrip(spark):
 
 def test_ascii_table_tscal_and_d_exponent(spark):
     """TSCAL/TZERO scaling on ASCII numerics, and 'D' exponents parse."""
-    from fits2db_spark.sources.fits import decode_asciitable, write_fits_asciitable
+    from fits2db_spark.sources.fits import decode_hdu, write_fits_asciitable
 
     blob = write_fits_asciitable(
         [("raw", "I4", [1, 2, 3])], extra_cards=[("TSCAL1", 0.5), ("TZERO1", 10.0)]
     )
-    schema, cols = decode_asciitable(blob, 1)
+    schema, cols = decode_hdu(blob, 1)
     assert schema.fields[0].dataType.simpleString() == "double"
     assert [float(v) for v in cols[0]] == [10.5, 11.0, 11.5]
     # a file with a Fortran D-exponent value (hand-edit an E field)
     blob2 = write_fits_asciitable([("x", "E12.4", [1500.0])])
     blob2 = blob2.replace(b"1.5000E+03", b"1.5000D+03")
-    _, cols = decode_asciitable(blob2, 1)
+    _, cols = decode_hdu(blob2, 1)
     assert abs(cols[0][0] - 1500.0) < 1e-6
 
 
@@ -714,10 +717,10 @@ def test_ztable_complex_column_roundtrip():
 def test_image_extension_roundtrip_and_scaling():
     import numpy as np
 
-    from fits2db_spark.sources.fits import decode_image, write_fits_image
+    from fits2db_spark.sources.fits import decode_hdu, write_fits_image
 
     img = np.arange(12, dtype="i2").reshape(3, 4)
-    schema, (x, y, val) = decode_image(write_fits_image(img, bscale=2.0, bzero=-5.0))
+    schema, (x, y, val) = decode_hdu(write_fits_image(img, bscale=2.0, bzero=-5.0))
     assert [f.name for f in schema.fields] == ["x", "y", "val"]
     assert len(x) == 12
     # x fastest (NAXIS1), row-major
@@ -728,13 +731,13 @@ def test_image_extension_roundtrip_and_scaling():
 def test_image_float_and_byte_dtypes():
     import numpy as np
 
-    from fits2db_spark.sources.fits import decode_image, write_fits_image
+    from fits2db_spark.sources.fits import decode_hdu, write_fits_image
 
     f = np.linspace(-1, 1, 8, dtype="f4").reshape(2, 4)
-    _, (_, _, val) = decode_image(write_fits_image(f.astype(">f4")))
+    _, (_, _, val) = decode_hdu(write_fits_image(f.astype(">f4")))
     assert abs(val[5] - f[1, 1]) < 1e-7
     b = np.arange(6, dtype="u1").reshape(2, 3)
-    _, (_, _, vb) = decode_image(write_fits_image(b))
+    _, (_, _, vb) = decode_hdu(write_fits_image(b))
     assert list(vb) == [0.0, 1.0, 2.0, 3.0, 4.0, 5.0]
 
 
@@ -743,7 +746,7 @@ def test_image_extname_selection_and_checksum():
 
     from fits2db_spark.sources.fits import (
         add_checksums,
-        decode_image,
+        decode_hdu,
         verify_checksums,
         write_fits_image,
     )
@@ -752,18 +755,18 @@ def test_image_extname_selection_and_checksum():
         write_fits_image(np.ones((4, 4), dtype="i2"), extname="SCI")
     )
     assert all(r["checksum_ok"] for r in verify_checksums(blob))
-    _, (_, _, val) = decode_image(blob, "SCI")
+    _, (_, _, val) = decode_hdu(blob, "SCI")
     assert set(val) == {1.0}
 
 
 def test_image_spark_read_path(spark, tmp_path):
     import numpy as np
 
-    from fits2db_spark.sources.fits import read_fits_image, write_fits_image
+    from fits2db_spark.sources.fits import read_fits, write_fits_image
 
     img = (np.arange(64, dtype="i4") * 3).reshape(8, 8)
     (tmp_path / "img.fits").write_bytes(write_fits_image(img, extname="SCI"))
-    df = read_fits_image(spark, str(tmp_path / "img.fits"), hdu="SCI")
+    df = read_fits(spark, str(tmp_path / "img.fits"), hdu="SCI")
     rows = {(r.x, r.y): r.val for r in df.collect()}
     assert len(rows) == 64
     assert rows[(3, 2)] == float(img[2, 3])

@@ -1,6 +1,7 @@
-"""The FITS read plan: one header-only plan on the driver, columns bound by
-name, every input checked before any Spark job or sink write, and one
-EXTNAME rule for every HDU kind."""
+"""The FITS read plan: one header-only plan on the driver, the selected
+HDU's header picking the decoder, columns bound by name, every input
+checked before any Spark job or sink write, and one EXTNAME rule for every
+HDU kind."""
 
 import numpy as np
 import pytest
@@ -9,10 +10,10 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 from fits2db_spark.cli import build_parser, load_frame, run
 from fits2db_spark.sources.fits import (
     FitsFormatError,
-    decode_image,
+    decode_hdu,
+    parse_bintable_header,
     read_fits,
-    read_fits_cube,
-    read_fits_image,
+    write_fits_asciitable,
     write_fits_bintable,
     write_fits_image,
 )
@@ -32,6 +33,20 @@ def _good(path, ids):
             ("dec", "D", [1.0 * i for i in ids]),
         ],
     )
+
+
+def _sparse_big(path, n_rows=100_000_000):
+    """A BINTABLE of ``_good``'s columns whose header declares ``n_rows``
+    24-byte rows (2.4 GB by default), written sparse: only the header and
+    the first row, (1, 10.0, 1.0), are on disk."""
+    blob = write_fits_bintable([("id", "K", [1]), ("ra", "D", [10.0]), ("dec", "D", [1.0])])
+    _, _, data_off = parse_bintable_header(blob, 1)
+    at = blob.index(b"NAXIS2  = ")
+    card = f"{'NAXIS2':<8}= {n_rows:>20}".ljust(80).encode()
+    with open(path, "wb") as f:
+        f.write(blob[:at] + card + blob[at + 80 :])
+        f.truncate(data_off + -(-24 * n_rows // 2880) * 2880)
+    return str(path)
 
 
 def _jobs_in_group(spark, group, fn):
@@ -82,11 +97,39 @@ def test_every_reader_matches_extname_case_insensitively(spark, tmp_path):
     cube = np.arange(8, dtype="i2").reshape(2, 2, 2)
     (tmp_path / "cube.fits").write_bytes(write_fits_image(cube, extname="CUBE"))
 
-    assert list(decode_image(str(tmp_path / "img.fits"), " sci ")[1][2]) == list(range(6))
-    px = read_fits_image(spark, str(tmp_path / "img.fits"), hdu="sci")
+    assert list(decode_hdu(str(tmp_path / "img.fits"), " sci ")[1][2]) == list(range(6))
+    px = read_fits(spark, str(tmp_path / "img.fits"), hdu="sci")
     assert px.count() == 6
-    vox = read_fits_cube(spark, str(tmp_path / "cube.fits"), hdu="cube")
+    vox = read_fits(spark, str(tmp_path / "cube.fits"), hdu="cube")
     assert sorted(r.val for r in vox.collect()) == [float(v) for v in range(8)]
+
+
+def test_mixed_hdu_kinds_fail_in_the_plan(spark, tmp_path):
+    _good(tmp_path / "a.fits", [1, 2])
+    (tmp_path / "b.fits").write_bytes(write_fits_asciitable([("id", "I4", [3])]))
+    out = tmp_path / "csv"
+
+    def load():
+        with pytest.raises(
+            FitsFormatError, match=r"b\.fits HDU 1 is ASCII TABLE, but \S*a\.fits HDU 1 is BINTABLE"
+        ):
+            run([str(tmp_path / "*.fits"), "--table", "t", "--csv-out", str(out)], spark=spark)
+
+    assert _jobs_in_group(spark, "fits-mixed-kinds", load) == []
+    assert not out.exists()
+
+
+def test_datasource_reads_bintables_only(spark, tmp_path):
+    from fits2db_spark.sources.fits_datasource import register
+
+    path = str(tmp_path / "img.fits")
+    (tmp_path / "img.fits").write_bytes(write_fits_image(np.ones((2, 2), dtype="i2")))
+    register(spark)
+    with pytest.raises(Exception, match="HDU 1 is not a BINTABLE"):
+        spark.read.format("fits").load(path)
+    with pytest.raises(Exception, match="reads BINTABLE HDUs"):
+        spark.read.format("fits").schema("x int, y int, val double").load(path).collect()
+    assert read_fits(spark, path).count() == 4
 
 
 def test_mapinarrow_and_datasource_bind_columns_by_name(spark, tmp_path):
@@ -120,7 +163,7 @@ def test_image_blank_in_a_later_file_makes_val_nullable(spark, tmp_path):
     img = np.arange(4, dtype="i2").reshape(2, 2)
     (tmp_path / "a.fits").write_bytes(write_fits_image(img))
     (tmp_path / "b.fits").write_bytes(write_fits_image(img, blank=3))
-    df = read_fits_image(spark, str(tmp_path))
+    df = read_fits(spark, str(tmp_path))
     assert df.schema["val"].nullable
     assert sorted(r.val for r in df.collect() if r.val is not None) == [0.0, 0.0, 1.0, 1.0, 2.0, 2.0, 3.0]
 
@@ -190,3 +233,35 @@ def test_append_rejects_truncated_tile_in_a_glob(derby, tmp_path):
     with pytest.raises(FitsFormatError, match="t1.fits HDU 1: truncated"):
         load([str(tiles / "*.fits")])
     assert rows() == before
+
+
+def test_append_rejects_a_file_over_the_binaryfile_limit(derby, spark, tmp_path):
+    """Spark's binaryFile source cannot read a file over 2 GiB; the plan
+    rejects one, naming it, before any Spark job or sink write."""
+    load, rows = derby
+    before = rows()
+    tiles = tmp_path / "tiles"
+    tiles.mkdir()
+    _good(tiles / "a.fits", [3])
+    _sparse_big(tiles / "b.fits")
+    _good(tiles / "c.fits", [5])
+
+    def plan():
+        with pytest.raises(
+            FitsFormatError, match=r'b\.fits: \d+ bytes is over the binaryFile read limit.*format\("fits"\)'
+        ):
+            load([str(tiles / "*.fits")])
+
+    assert _jobs_in_group(spark, "fits-size-limit", plan) == []
+    assert rows() == before
+
+
+def test_datasource_reads_a_file_over_the_binaryfile_limit(spark, tmp_path):
+    """The alternative the size-limit error names: format("fits") splits
+    the same 2.4 GB table into 64 MB row ranges."""
+    from fits2db_spark.sources.fits_datasource import register
+
+    register(spark)
+    df = spark.read.format("fits").load(_sparse_big(tmp_path / "big.fits"))
+    assert df.rdd.getNumPartitions() == 36
+    assert tuple(df.limit(1).collect()[0]) == (1, 10.0, 1.0)

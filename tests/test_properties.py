@@ -132,9 +132,9 @@ def test_fits_bintable_roundtrip_property(vals):
 @given(vals=_FITS_VALS)
 @_settings
 def test_fits_asciitable_roundtrip_property(vals):
-    """write_fits_asciitable -> decode_asciitable round-trips I/F/A fields
+    """write_fits_asciitable -> decode_hdu round-trips I/F/A fields
     (within the fixed-point precision the F format declares)."""
-    from fits2db_spark.sources.fits import decode_asciitable, write_fits_asciitable
+    from fits2db_spark.sources.fits import decode_hdu, write_fits_asciitable
 
     ints = [v[0] for v in vals]
     dbls = [max(-1e9, min(1e9, v[1])) for v in vals]
@@ -143,7 +143,7 @@ def test_fits_asciitable_roundtrip_property(vals):
     blob = write_fits_asciitable(
         [("i", "I12", ints), ("f", "F24.6", dbls), ("s", f"A{width}", strs)]
     )
-    _, cols = decode_asciitable(blob, 1)
+    _, cols = decode_hdu(blob, 1)
     assert [int(v) for v in cols[0]] == ints
     for got, want in zip(cols[1], dbls):
         assert abs(got - want) <= max(1e-6, abs(want)) * 1e-6 + 1e-6

@@ -218,9 +218,9 @@ def test_cube_spectrum_roundtrip_and_aperture(spark):
 def test_cube_voxel_table_full_shape(spark):
     # the staged cube read back whole must carry exactly w*h*nz voxels
     from fits2db_spark.operators.scans import _stage_spec_cube
-    from fits2db_spark.sources.fits import read_fits_cube
+    from fits2db_spark.sources.fits import read_fits
 
-    vox = read_fits_cube(spark, _stage_spec_cube(spark, SF_SMOKE), hdu="CUBE")
+    vox = read_fits(spark, _stage_spec_cube(spark, SF_SMOKE), hdu="CUBE")
     assert vox.count() == 20 * 16 * 12
     row = vox.filter("x = 5 AND y = 7 AND z = 3").collect()[0]
     want = 50 + 0.25 * ((5 * 31 + 7 * 17 + 3 * 7) % 1000 - 200)

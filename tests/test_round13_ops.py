@@ -159,7 +159,7 @@ def test_image_blank_masks_before_scaling(spark, tmp_path):
 
     from fits2db_spark.sources.fits import (
         FitsFormatError,
-        read_fits_image,
+        read_fits,
         write_fits_image,
     )
 
@@ -168,7 +168,7 @@ def test_image_blank_masks_before_scaling(spark, tmp_path):
     p.write_bytes(
         write_fits_image(img, bscale=2.0, bzero=10.0, extname="X", blank=-99)
     )
-    rows = {(r.x, r.y): r.val for r in read_fits_image(spark, str(p), hdu="X").collect()}
+    rows = {(r.x, r.y): r.val for r in read_fits(spark, str(p), hdu="X").collect()}
     assert rows[(0, 1)] is None, "BLANK pixel must decode to NULL"
     assert rows[(0, 0)] == 12.0 and rows[(1, 1)] == 18.0
     with pytest.raises(FitsFormatError, match="BLANK"):
@@ -178,7 +178,7 @@ def test_image_blank_masks_before_scaling(spark, tmp_path):
 def test_cube_blank_masks_voxels(spark, tmp_path):
     import numpy as np
 
-    from fits2db_spark.sources.fits import read_fits_cube, write_fits_image
+    from fits2db_spark.sources.fits import read_fits, write_fits_image
 
     cube = np.arange(2 * 2 * 3, dtype="i4").reshape(2, 2, 3)
     cube[1, 0, 2] = -7
@@ -186,7 +186,7 @@ def test_cube_blank_masks_voxels(spark, tmp_path):
     p.write_bytes(write_fits_image(cube, bscale=2.0, extname="C", blank=-7))
     rows = {
         (r.x, r.y, r.z): r.val
-        for r in read_fits_cube(spark, str(p), hdu="C").collect()
+        for r in read_fits(spark, str(p), hdu="C").collect()
     }
     assert rows[(2, 0, 1)] is None
     assert rows[(0, 0, 0)] == 0.0 and rows[(2, 1, 1)] == 22.0
