@@ -23,7 +23,9 @@ Differences from the reference, by design (Spark-first): the "chunked row
 loop" is Spark's per-file parallel decode (one task per FITS file); CSV
 output is a partitioned directory unless --single-file; the JDBC load runs
 one connection per partition (--num-partitions caps it to the database's
-ingest capacity, not the cluster's core count). The reference writes its
+ingest capacity, not the cluster's core count), except that an embedded
+Derby database (jdbc:derby: without //) always loads through one
+connection, in one transaction. The reference writes its
 outputs one after another; here every requested row sink (parquet, CSV,
 VOTable, JDBC) reads one shared frame, decoded once per load and
 repartitioned once for --num-partitions, and the sinks run as concurrent
@@ -43,7 +45,9 @@ Failure semantics of a load with several row sinks:
 * A failure of the shared decode itself (a corrupt tile, a --verify-checksum
   mismatch) fails every sink that reads the frame.
 * A JDBC sink commits per partition, so a JDBC write that fails part-way
-  leaves the partitions it already committed.
+  leaves the partitions it already committed. Embedded Derby is the
+  exception: it loads through one connection, so a failed append leaves
+  the table as it was.
 """
 
 from __future__ import annotations
@@ -145,7 +149,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--num-partitions",
         type=_positive_int,
-        help="cap concurrent JDBC connections / CSV part files",
+        help="cap concurrent JDBC connections / CSV part files (an embedded "
+        "Derby URL always loads through one connection)",
     )
     return p
 

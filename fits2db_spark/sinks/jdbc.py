@@ -3,9 +3,18 @@ load path (create / append / drop / truncate semantics, chunked bulk writes)
 as a thin policy layer over ``df.write.jdbc``.
 
 Scale notes: ``batchsize`` controls rows per JDBC batch INSERT (the COPY-
-bulk-load analogue); ``numPartitions`` caps concurrent connections — at
-cluster scale every partition opens its own connection, so repartition the
-DataFrame to the DB's ingest capacity, not the cluster's core count.
+bulk-load analogue). Every partition writes through its own connection and
+commits its own transaction. ``num_partitions`` caps the connections with
+Spark's JDBC ``numPartitions`` write option, which coalesces the frame
+without a shuffle: size it to the database's ingest capacity, not the
+cluster's core count. An embedded Derby database (``jdbc:derby:`` but not
+``jdbc:derby://``) always loads through one connection: its engine and log
+live in this JVM, so more connections only contend (60k rows from a
+persisted frame, 4 cores, medians of 10 laps: 0.56 s over one connection,
+0.74 s over four). One connection is one transaction, so an embedded
+append that fails leaves the table as it was. A server database still
+commits per partition, so a write that fails part-way leaves the
+partitions already committed.
 Tested against Derby (the only JDBC driver shipped with Spark); the API is
 driver-agnostic.
 """
@@ -42,17 +51,24 @@ def write_jdbc(
     database-native strings like ``double precision`` are a parse error by
     design (that mapping belongs to ddl.create_table_ddl, the explicit-DDL
     path). ``dialect`` is kept for the explicit-DDL emit path signature
-    parity."""
+    parity.
+
+    ``num_partitions`` caps the concurrent connections (Spark's
+    ``numPartitions``: a coalesce, no shuffle); an embedded Derby URL
+    always gets one, which makes its row inserts one transaction."""
     if mode not in MODES:
         raise ValueError(f"mode must be one of {MODES}")
-    if num_partitions:
-        df = df.repartition(num_partitions)
+    lowered = url.lower()
+    if lowered.startswith("jdbc:derby:") and not lowered.startswith("jdbc:derby://"):
+        num_partitions = 1  # embedded: the database runs in this JVM
     w = (
         df.write.format("jdbc")
         .option("url", url)
         .option("dbtable", table)
         .option("batchsize", str(batchsize))
     )
+    if num_partitions:
+        w = w.option("numPartitions", str(num_partitions))
     if driver:
         w = w.option("driver", driver)
     if column_types:

@@ -480,12 +480,28 @@ def _decode_bintable_hdu(b: _Blocks, h: Hdu, row_start: int = 0, row_count: int 
             f"row width mismatch: dtype {dtype.itemsize} vs NAXIS1 {rowbytes}"
         )
     raw = np.frombuffer(b.read(h.data_off + start * rowbytes, cnt * rowbytes), dtype=dtype, count=cnt)
-    heap = b""
-    if any(c["letter"] in ("P", "Q") for c in cols):
-        # the heap spans [data_off + THEAP, data_off + NAXIS1*NAXIS2 + PCOUNT)
+    # read only the heap span that the selected rows' P/Q descriptors
+    # address, so a row range costs heap I/O in proportion to its rows
+    spans = []
+    for c in cols:
+        if c["letter"] in ("P", "Q"):
+            desc = raw[c["name"]].astype("i8")  # (rows, 2): count, offset
+            used = desc[desc[:, 0] > 0]
+            if len(used):
+                ends = used[:, 1] + used[:, 0] * np.dtype(c["vla_np"]).itemsize
+                spans.append((int(used[:, 1].min()), int(ends.max())))
+    heap, lo = b"", 0
+    if spans:
+        # the heap starts at data_off + THEAP (default: after the rows)
         theap = int(cards.get("THEAP", rowbytes * nrows))
-        heap = b.read(h.data_off + theap, h.data_size - theap)
-    return fits_spark_schema(cols), _decode_columns(cols, raw, heap)
+        lo, hi = min(s[0] for s in spans), max(s[1] for s in spans)
+        if lo < 0 or hi > h.data_size - theap:
+            raise FitsFormatError(
+                f"variable-length array descriptor addresses heap bytes [{lo}, {hi}) "
+                f"outside the {h.data_size - theap}-byte heap"
+            )
+        heap = b.read(h.data_off + theap + lo, hi - lo)
+    return fits_spark_schema(cols), _decode_columns(cols, raw, heap, lo)
 
 
 def _bintable_schema(cards: dict) -> StructType:
@@ -498,10 +514,10 @@ def _bintable_schema(cards: dict) -> StructType:
     return fits_spark_schema(_parse_columns(cards))
 
 
-def _decode_columns(cols: list[dict], raw: np.ndarray, heap_buf) -> list:
+def _decode_columns(cols: list[dict], raw: np.ndarray, heap_buf, heap_base: int = 0) -> list:
     """Shared fixed-row decode: ``raw`` is the structured row array, and
-    ``heap_buf`` the heap region (offsets in P/Q descriptors are relative
-    to its start)."""
+    ``heap_buf`` the heap from byte ``heap_base`` on (offsets in P/Q
+    descriptors are relative to the heap's start)."""
     out = []
     for c in cols:
         a = raw[c["name"]]
@@ -511,7 +527,8 @@ def _decode_columns(cols: list[dict], raw: np.ndarray, heap_buf) -> list:
             elem_dt = np.dtype(c["vla_np"])
             rows = []
             for cnt, o in desc:
-                v = np.frombuffer(heap_buf, dtype=elem_dt, count=int(cnt), offset=int(o))
+                at = int(o) - heap_base if cnt else 0  # an empty array may point anywhere
+                v = np.frombuffer(heap_buf, dtype=elem_dt, count=int(cnt), offset=at)
                 if elem == "L":
                     v = v == b"T"
                 elif elem == "B":

@@ -45,11 +45,17 @@ from .fits import (
 )
 
 
+def _whole_tiles(rows: int, tile_len: int) -> int:
+    """``rows`` rounded down to whole tiles, at least one tile."""
+    return max(tile_len, rows - rows % tile_len)
+
+
 class FitsInputPartition(InputPartition):
-    def __init__(self, path: str, row_start: int, row_count: int):
+    def __init__(self, path: str, row_start: int, row_count: int, batch_rows: int):
         self.path = path
         self.row_start = row_start
         self.row_count = row_count
+        self.batch_rows = batch_rows
 
 
 class FitsBaseReader(DataSourceReader):
@@ -57,7 +63,11 @@ class FitsBaseReader(DataSourceReader):
     per file): a single multi-GB BINTABLE reads in parallel because rows are
     fixed width, so each task seeks straight to its byte range. Planning
     is :func:`plan_fits`: a header-only probe and schema check per file
-    (O(header blocks) I/O, no data).
+    (O(header blocks) I/O, no data). A task decodes its row range in slices
+    of at most ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows (read
+    on the driver by :func:`register`; rounded to whole tiles for a
+    tile-compressed table), one Arrow batch each, so a partition holds one
+    slice at a time and a ``limit`` stops after the slices it needs.
 
     This base class deliberately does NOT implement pushFilters: Spark 4.1
     refuses to run a pushFilters-implementing reader unless
@@ -66,8 +76,10 @@ class FitsBaseReader(DataSourceReader):
     Pushdown is opt-in via ``.option("pushdown", "true")`` (see
     FitsDataSourceReader / FitsDataSource.reader)."""
 
-    def __init__(self, options, schema):
+    def __init__(self, options, schema, max_records_per_batch: int = 0):
+        """``max_records_per_batch`` <= 0 yields each partition as one batch."""
         self._path = options.get("path")
+        self._max_records = max_records_per_batch
         self._hdu = options.get("hdu", 1)
         self._schema = schema
         self._chunk_bytes = int(float(options.get("chunk_mb", 64)) * 1024 * 1024)
@@ -114,32 +126,37 @@ class FitsBaseReader(DataSourceReader):
             if cards.get("ZTABLE", "").strip() == "T":
                 # tile-compressed table: the container's NAXIS2 counts TILES,
                 # but decode_bintable_range addresses ORIGINAL rows — plan in
-                # original-row space (ZNAXIS1/ZNAXIS2) and align chunks to
-                # tile boundaries so no tile decompresses in two tasks
+                # original-row space (ZNAXIS1/ZNAXIS2)
                 nrows = _header_int(cards, "ZNAXIS2")
                 rowbytes = _header_int(cards, "ZNAXIS1")
                 tile_len = _header_int(cards, "ZTILELEN")
-                rows_per_chunk = max(1, self._chunk_bytes // max(rowbytes, 1))
-                rows_per_chunk = max(
-                    tile_len, rows_per_chunk - rows_per_chunk % tile_len
-                )
             else:
                 nrows = _header_int(cards, "NAXIS2")
                 rowbytes = _header_int(cards, "NAXIS1")
-                rows_per_chunk = max(1, self._chunk_bytes // max(rowbytes, 1))
+                tile_len = 1
+            # chunks and slices hold whole tiles, so no tile decompresses
+            # in two tasks or in two slices
+            rows_per_chunk = _whole_tiles(self._chunk_bytes // max(rowbytes, 1), tile_len)
+            batch_rows = rows_per_chunk
+            if 0 < self._max_records < rows_per_chunk:
+                batch_rows = _whole_tiles(self._max_records, tile_len)
             start = 0
             while start < max(nrows, 1):
-                parts.append(FitsInputPartition(p, start, min(rows_per_chunk, nrows - start)))
+                parts.append(
+                    FitsInputPartition(p, start, min(rows_per_chunk, nrows - start), batch_rows)
+                )
                 start += rows_per_chunk
                 if nrows == 0:
                     break
         return parts
 
     def read(self, partition):
-        decoded = decode_bintable_range(
-            partition.path, self._hdu, partition.row_start, partition.row_count
-        )
-        yield self._apply_pushed(to_batch(self._schema, decoded, partition.path))
+        end = partition.row_start + partition.row_count
+        for start in range(partition.row_start, end, partition.batch_rows):
+            decoded = decode_bintable_range(
+                partition.path, self._hdu, start, min(partition.batch_rows, end - start)
+            )
+            yield self._apply_pushed(to_batch(self._schema, decoded, partition.path))
 
 
 class FitsDataSourceReader(FitsBaseReader):
@@ -187,6 +204,10 @@ class FitsDataSourceReader(FitsBaseReader):
 
 
 class FitsDataSource(DataSource):
+    # rows per Arrow batch a reader yields; register() sets it from the
+    # registering session's spark.sql.execution.arrow.maxRecordsPerBatch
+    max_records_per_batch = 10_000
+
     @classmethod
     def name(cls) -> str:
         return "fits"
@@ -213,8 +234,8 @@ class FitsDataSource(DataSource):
 
     def reader(self, schema):
         if str(self.options.get("pushdown", "")).lower() in ("1", "true", "yes"):
-            return FitsDataSourceReader(self.options, schema)
-        return FitsBaseReader(self.options, schema)
+            return FitsDataSourceReader(self.options, schema, self.max_records_per_batch)
+        return FitsBaseReader(self.options, schema, self.max_records_per_batch)
 
     def simpleStreamReader(self, schema):
         return FitsSimpleStreamReader(self.options, schema)
@@ -231,7 +252,10 @@ def register(spark) -> None:
     (caught by the foreign-cwd driver sim, r12). register_pickle_by_value
     on the two self-contained source modules makes every pickle of the
     class carry its code, so no runner-side import is needed. The parser
-    modules depend only on stdlib/numpy/pyspark."""
+    modules depend only on stdlib/numpy/pyspark. The session's
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` is read here, on the
+    driver, and travels in that pickle as the readers' batch size: the
+    planning runner that builds a reader has no session to ask."""
     from pyspark import cloudpickle
 
     from ..session import ensure_runtime_confs
@@ -242,6 +266,9 @@ def register(spark) -> None:
     cloudpickle.register_pickle_by_value(fits)
     cloudpickle.register_pickle_by_value(fits_compress)
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    FitsDataSource.max_records_per_batch = int(
+        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    )
     spark.dataSource.register(FitsDataSource)
 
 

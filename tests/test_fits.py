@@ -318,6 +318,50 @@ def test_datasource_row_range_partitions(spark, tmp_path):
     assert [list(v) for v in cols[2]] == [[float(j) for j in range(i % 4)] for i in range(10, 15)]
 
 
+def test_row_range_reads_only_its_rows_heap_span(tmp_path, monkeypatch):
+    """A row range of a table with a variable-length column reads the heap
+    bytes its rows' descriptors address, not the whole heap, so slicing a
+    partition into batches does not re-read the heap once per slice."""
+    from fits2db_spark.sources import fits
+    from fits2db_spark.sources.fits import decode_bintable_range
+
+    n = 1000
+    path = tmp_path / "vla.fits"
+    path.write_bytes(
+        write_fits_bintable(
+            [("id", "J", list(range(n))), ("trace", "PE", [[float(i)] * (i % 3) * 50 for i in range(n)])]
+        )
+    )
+    read_bytes = []
+    real = fits._Blocks
+
+    def counting(read, size):
+        return real(lambda off, k: read_bytes.append(k) or read(off, k), size)
+
+    monkeypatch.setattr(fits, "_Blocks", counting)
+    _, cols = decode_bintable_range(str(path), 1, 500, 6)
+    assert list(cols[0]) == list(range(500, 506))
+    assert [list(v) for v in cols[1]] == [[float(i)] * (i % 3) * 50 for i in range(500, 506)]
+    heap_bytes = sum(4 * (i % 3) * 50 for i in range(n))  # ~200 KB
+    assert sum(read_bytes) < 4 * 2880 + 6 * 4 * 100 < heap_bytes / 10
+
+
+def test_descriptor_outside_the_heap_is_rejected(tmp_path):
+    """A P descriptor that points past the heap names the problem instead
+    of decoding bytes of whatever follows the heap."""
+    from fits2db_spark.sources.fits import decode_bintable_range, parse_bintable_header
+
+    blob = bytearray(write_fits_bintable([("id", "J", [1, 2]), ("v", "PJ", [[1, 2], [3]])]))
+    _, _, data_off = parse_bintable_header(bytes(blob), 1)
+    # row 1's descriptor (count, offset) sits after its 4-byte id; the heap holds 12 bytes
+    blob[data_off + 12 + 8 : data_off + 12 + 12] = (12).to_bytes(4, "big")
+    (tmp_path / "bad.fits").write_bytes(bytes(blob))
+    for rows in ((0, None), (1, 1)):
+        with pytest.raises(FitsFormatError, match="outside the 12-byte heap"):
+            decode_bintable_range(str(tmp_path / "bad.fits"), 1, *rows)
+    assert [list(v) for v in decode_bintable_range(str(tmp_path / "bad.fits"), 1, 0, 1)[1][1]] == [[1, 2]]
+
+
 def test_header_only_probe_matches_full_parse(spark, tmp_path):
     """parse_bintable_header on a path (seek-based, header-only I/O) must
     agree with it on the file's bytes for a multi-HDU file, selected by

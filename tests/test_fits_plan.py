@@ -256,6 +256,43 @@ def test_append_rejects_a_file_over_the_binaryfile_limit(derby, spark, tmp_path)
     assert rows() == before
 
 
+def test_embedded_append_is_all_or_nothing(spark, tmp_path):
+    """An embedded Derby append loads through one connection, so one
+    transaction: when its last tile repeats a primary key, the load fails
+    and the table keeps exactly the rows it had, with no --num-partitions
+    asking for it."""
+    url = f"jdbc:derby:{tmp_path}/pk_db;create=true"
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        conn.createStatement().execute(
+            'CREATE TABLE t ("id" BIGINT PRIMARY KEY, "ra" DOUBLE, "dec" DOUBLE)'
+        )
+    finally:
+        conn.close()
+
+    def load(paths):
+        return run([*paths, "--table", "t", "--jdbc-url", url, "--mode", "append"], spark=spark)
+
+    def count_and_id_sum():
+        got = (
+            spark.read.format("jdbc").option("url", url)
+            .option("query", 'SELECT COUNT(*) AS n, SUM("id") AS s FROM t').load().collect()[0]
+        )
+        return int(got[0]), int(got[1])
+
+    assert load([_good(tmp_path / "seed.fits", list(range(1, 51)))]) == 0
+    before = count_and_id_sum()
+    assert before == (50, sum(range(1, 51)))
+    tiles = tmp_path / "tiles"
+    tiles.mkdir()
+    for i, name in enumerate("abc"):
+        _good(tiles / f"{name}.fits", list(range(100 * (i + 1), 100 * (i + 1) + 100)))
+    _good(tiles / "z.fits", [500, 501, 25])  # 25 is already in the table
+    with pytest.raises(ExceptionGroup, match="failed: jdbc"):
+        load([str(tiles / "*.fits")])
+    assert count_and_id_sum() == before
+
+
 def test_datasource_reads_a_file_over_the_binaryfile_limit(spark, tmp_path):
     """The alternative the size-limit error names: format("fits") splits
     the same 2.4 GB table into 64 MB row ranges."""
@@ -265,3 +302,35 @@ def test_datasource_reads_a_file_over_the_binaryfile_limit(spark, tmp_path):
     df = spark.read.format("fits").load(_sparse_big(tmp_path / "big.fits"))
     assert df.rdd.getNumPartitions() == 36
     assert tuple(df.limit(1).collect()[0]) == (1, 10.0, 1.0)
+
+
+def test_datasource_yields_batches_of_max_records_per_batch(spark, tmp_path):
+    """A partition decodes its row range in slices of
+    spark.sql.execution.arrow.maxRecordsPerBatch rows (whole tiles for a
+    tile-compressed table) and yields them as separate batches holding the
+    same rows as one whole-range decode."""
+    from fits2db_spark.sources.fits_compress import write_fits_bintable_compressed
+    from fits2db_spark.sources.fits_datasource import FitsDataSource, register
+
+    ids = list(range(2500))
+    columns = [("id", "K", ids), ("ra", "D", [10.0 * i for i in ids]), ("dec", "D", [1.0 * i for i in ids])]
+    plain = _tile(tmp_path / "plain.fits", columns)
+    packed = tmp_path / "packed.fits"
+    packed.write_bytes(write_fits_bintable_compressed(columns, tile_len=300))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    try:
+        register(spark)
+        for path, sizes in ((plain, [1000, 1000, 500]), (str(packed), [900, 900, 700])):
+            source = FitsDataSource({"path": path})
+            reader = source.reader(source.schema())
+            [part] = reader.partitions()
+            batches = list(reader.read(part))
+            assert [b.num_rows for b in batches] == sizes
+            assert [v for b in batches for v in b.column("id").to_pylist()] == ids
+            df = spark.read.format("fits").load(path)
+            assert sorted(tuple(r) for r in df.collect()) == [(i, 10.0 * i, 1.0 * i) for i in ids]
+    finally:
+        spark.conf.set(key, old)
+        register(spark)
