@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import memo
 from ..tables import SCHEMAS, load, stage
 
 
@@ -1205,10 +1204,10 @@ def fits_datasource_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the REGISTERED ``fits`` format (Spark 4 Python DataSource
     API, ``sources/fits_datasource.py``): ``spark.read.format("fits")
     .load(path)`` — schema from a header-only probe, row-range input
-    partitions planned BY THE ENGINE (~chunk_mb of fixed-width rows per
-    task, tile-aligned for ZTABLE), Arrow RecordBatch transfer from the
-    Python decoder. The decode machinery is shared byte-for-byte with
-    the mapInArrow path (sources/fits.py), so the two ingestion routes
+    partitions planned BY THE ENGINE (``spark.sql.files.maxPartitionBytes``
+    of fixed-width rows per task, tile-aligned for ZTABLE), Arrow
+    RecordBatch transfer from the Python decoder. The decode machinery is
+    shared byte-for-byte with the mapInArrow path (sources/fits.py), so the two ingestion routes
     cannot drift — and this oracle proves it: identical SQL to
     fits_ingest's. (The module itself predates this key — pytest-only
     until round 11; this entry makes the format a driver-checked,
@@ -1235,10 +1234,10 @@ def fits_datasource_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fits_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter pushdown through the registered ``fits`` format (Spark 4.1
     ``DataSourceReader.pushFilters``, gated by
-    ``spark.sql.python.filterPushdown.enabled``): the EqualTo and
-    GreaterThan predicates reach the Python reader, which applies them on
-    the decoded Arrow batch BEFORE rows cross the Python->JVM Arrow
-    channel — the expensive edge of any Python data source. Catalyst
+    ``spark.sql.python.filterPushdown.enabled``, which registering the
+    format turns on): the EqualTo and GreaterThan predicates reach the
+    Python reader, which applies them on the decoded Arrow batch BEFORE
+    rows cross the Python->JVM Arrow channel — the expensive edge of any Python data source. Catalyst
     drops its own re-evaluation of fully-pushed filters, so the scan
     output IS the filtered set (this oracle proves the semantics; the
     reader-level unit test in tests/test_fits.py proves the filters were
@@ -1252,36 +1251,11 @@ def fits_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.fits_datasource import register as register_fits
 
     path = _stage_nation_fits(spark, sf_dir)
-
-    def build() -> DataFrame:
-        # The pushdown conf is consulted when the scan is PLANNED (action
-        # time), so restore-after-return would silently disable it — and
-        # leaving it set would change scan behavior for every later fits
-        # read in the session. Materialize eagerly while the conf is on,
-        # then restore (ADVICE r11).
-        conf_key = "spark.sql.python.filterPushdown.enabled"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "true")
-        try:
-            register_fits(spark)
-            df = (
-                spark.read.format("fits")
-                .option("hdu", "1")
-                .option("pushdown", "true")
-                .load(path)
-            )
-            return df.filter(
-                (F.col("n_regionkey") == 2) & (F.col("n_nationkey") > 5)
-            ).select("n_nationkey", "n_name").localCheckpoint(eager=True)
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
-
-    # The result must outlive the call, so it is a session memo rather
-    # than a checkpoint freed before returning.
-    return memo(spark, sf_dir, "fits_pushdown", build)
+    register_fits(spark)  # idempotent; also turns filter pushdown on
+    df = spark.read.format("fits").option("hdu", "1").load(path)
+    return df.filter((F.col("n_regionkey") == 2) & (F.col("n_nationkey") > 5)).select(
+        "n_nationkey", "n_name"
+    )
 
 
 @register(

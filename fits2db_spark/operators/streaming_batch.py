@@ -906,7 +906,7 @@ def _staged_customer_fits_dir(spark: SparkSession, sf_dir: str) -> str:
 def stream_live_fits_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE streaming ingest from a watched FITS archive directory —
     ``readStream.format("fits")`` (sources/fits_datasource.py's
-    SimpleDataSourceStreamReader) over the customer table staged as 3
+    DataSourceStreamReader) over the customer table staged as 3
     BINTABLE files, filtered and projected in-stream, drained to a
     memory sink under ``trigger(availableNow=True)``. This is the
     continuous version of the reference pipeline's archive loader: FITS
@@ -917,12 +917,10 @@ def stream_live_fits_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior across restarts is pinned separately in
     tests/test_streaming_live.py::test_fits_streaming_source.
 
-    Scale: the simple-stream reader decodes on the driver — the
-    prototype contract for low-rate archive watching (files/minute, the
-    real FITS-archive cadence). A bulk backfill uses the SAME format's
-    batch path (partition-planned, executor-side decode,
-    `fits_datasource_v2`); the streaming value here is the offset
-    bookkeeping and sink integration, not decode bandwidth."""
+    Scale: each micro-batch plans one partition per new file and decodes
+    on executors through the same ``to_batch`` as the batch path
+    (`fits_datasource_v2`), which also splits one large file into row
+    ranges; a stream task reads its whole file."""
     from ..sources.fits_datasource import register as register_fits
 
     def drain() -> DataFrame:

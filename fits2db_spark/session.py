@@ -40,6 +40,9 @@ _RUNTIME_CONFS: dict[str, str] = {
     # AQE: runtime re-planning, partition coalescing, skew-join handling.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # format("fits")'s reader pushes filters; Spark refuses to run such a
+    # reader while this is off.
+    "spark.sql.python.filterPushdown.enabled": "true",
 }
 
 

@@ -1,7 +1,8 @@
 """DDL generation — StructType -> CREATE TABLE, per dialect (SURVEY.md §2.A
 ddl_gen). The reference emits CREATE TABLE from the FITS header's declared
-types; here the DataFrame schema plays the header's role. The same map feeds
-``createTableColumnTypes`` for the JDBC sink.
+types; here the DataFrame schema plays the header's role. The map emits
+database-native types (postgres ``double precision``), so it is for the
+emitted DDL only: the JDBC sink lets Spark's JdbcDialect type its columns.
 """
 
 from __future__ import annotations
@@ -59,14 +60,7 @@ def quote_ident(name: str, dialect: str = "postgres") -> str:
     return f"{q}{name}{q}"
 
 
-def create_table_ddl(
-    schema: StructType,
-    table: str,
-    dialect: str = "postgres",
-    *,
-    if_not_exists: bool = False,
-    primary_key: str | None = None,
-) -> str:
+def create_table_ddl(schema: StructType, table: str, dialect: str = "postgres") -> str:
     """Emit CREATE TABLE DDL for a DataFrame schema."""
     if dialect not in _DIALECTS:
         raise ValueError(f"dialect must be one of {_DIALECTS}")
@@ -75,12 +69,9 @@ def create_table_ddl(
         line = f"    {quote_ident(f.name, dialect)} {sql_type(f.dataType, dialect)}"
         if not f.nullable:
             line += " NOT NULL"
-        if primary_key == f.name:
-            line += " PRIMARY KEY"
         cols.append(line)
-    ine = "IF NOT EXISTS " if if_not_exists else ""
     body = ",\n".join(cols)
-    return f"CREATE TABLE {ine}{quote_ident(table, dialect)} (\n{body}\n);"
+    return f"CREATE TABLE {quote_ident(table, dialect)} (\n{body}\n);"
 
 
 def drop_table_ddl(table: str, dialect: str = "postgres") -> str:
@@ -91,8 +82,3 @@ def truncate_table_ddl(table: str, dialect: str = "postgres") -> str:
     if dialect == "sqlite":  # sqlite has no TRUNCATE
         return f"DELETE FROM {quote_ident(table, dialect)};"
     return f"TRUNCATE TABLE {quote_ident(table, dialect)};"
-
-
-def jdbc_column_types(schema: StructType, dialect: str = "postgres") -> str:
-    """The createTableColumnTypes option string for df.write.jdbc."""
-    return ", ".join(f"{f.name} {sql_type(f.dataType, dialect)}" for f in schema.fields)

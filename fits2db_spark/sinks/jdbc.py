@@ -37,7 +37,6 @@ def write_jdbc(
     batchsize: int = 10_000,
     num_partitions: int | None = None,
     driver: str | None = None,
-    column_types: str | None = None,
 ) -> None:
     """Load a DataFrame into a SQL table.
 
@@ -45,13 +44,8 @@ def write_jdbc(
     'truncate' (overwrite keeping the existing table's DDL in place).
 
     Column DDL on create: Spark's JdbcDialect maps the DataFrame schema to
-    the target database's types automatically. ``column_types`` overrides
-    per-column types — its value must be SPARK SQL type syntax (e.g.
-    ``"name VARCHAR(16), flux DOUBLE"``), which Spark parses and re-maps;
-    database-native strings like ``double precision`` are a parse error by
-    design (that mapping belongs to ddl.create_table_ddl, the explicit-DDL
-    path). ``dialect`` is kept for the explicit-DDL emit path signature
-    parity.
+    the target database's types. ``dialect`` is ignored; it is kept for
+    signature parity with the explicit-DDL emit path.
 
     ``num_partitions`` caps the concurrent connections (Spark's
     ``numPartitions``: a coalesce, no shuffle); an embedded Derby URL
@@ -71,8 +65,6 @@ def write_jdbc(
         w = w.option("numPartitions", str(num_partitions))
     if driver:
         w = w.option("driver", driver)
-    if column_types:
-        w = w.option("createTableColumnTypes", column_types)
     if mode == "create":
         w.mode("errorifexists").save()
     elif mode == "append":

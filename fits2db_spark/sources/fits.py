@@ -18,8 +18,11 @@ The selected HDU's header picks the decoder (:func:`_kind`): a BINTABLE
 row per pixel or voxel. No caller names the kind; a read whose files
 select different kinds fails in the plan. Two transports carry the core:
 ``binaryFile`` + ``mapInArrow`` (:func:`read_fits` and the CLI, one task
-per file, every kind) and the Python DataSource (``format("fits")``,
-BINTABLEs only: row-range splits, pushdown, streaming).
+per file, every kind; faster at tile-sized files) and the Python
+DataSource (``format("fits")``, a thin adapter in ``fits_datasource.py``,
+BINTABLEs only: row-range splits, filter pushdown, streaming). Both decode
+on executors, which import this module from the package zip that
+``session.ensure_runtime_confs`` ships.
 BINTABLE type map per SURVEY.md §1.2:
 
     L -> boolean   X -> binary(bitfield)  B -> short (unsigned byte)
@@ -38,7 +41,6 @@ touch only overlapped tiles. Row decode is vectorized numpy
 from __future__ import annotations
 
 import contextlib
-import glob
 import io
 import math
 import os
@@ -62,6 +64,10 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+# path expansion lives in the DataSource adapter, the one module the
+# streaming planning runner can run (see fits_datasource's docstring)
+from .fits_datasource import resolve_paths
 
 BLOCK = 2880
 CARD = 80
@@ -605,18 +611,6 @@ def to_arrow_columns(schema: StructType, out: list):
 # ---------------------------------------------------------------------------
 # The read plan (driver) and the decode to Arrow (executors)
 # ---------------------------------------------------------------------------
-
-def resolve_paths(path: str | None) -> list[str]:
-    """Expand one path — a file, a directory or a glob — on the driver into
-    the sorted FITS files it names. A directory's hidden (``.``/``_``)
-    files are skipped, as Spark's file sources skip them."""
-    if not path:
-        raise ValueError("a FITS read requires a path")
-    path = path.removeprefix("file:")
-    if os.path.isdir(path):
-        path = os.path.join(path, "[!_.]*")
-    return sorted(p for p in glob.glob(path) if os.path.isfile(p))
-
 
 def header_schema(path: str, hdu: int | str = 1) -> StructType:
     """The schema one file's BINTABLE header declares, from its header

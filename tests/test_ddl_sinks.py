@@ -23,7 +23,6 @@ from fits2db_spark.sinks.csv_sink import write_csv
 from fits2db_spark.sinks.ddl import (
     create_table_ddl,
     drop_table_ddl,
-    jdbc_column_types,
     sql_type,
     truncate_table_ddl,
 )
@@ -40,8 +39,8 @@ SCHEMA = StructType(
 
 
 def test_create_table_postgres():
-    ddl = create_table_ddl(SCHEMA, "mytab", "postgres", primary_key="id")
-    assert '"id" bigint NOT NULL PRIMARY KEY' in ddl
+    ddl = create_table_ddl(SCHEMA, "mytab", "postgres")
+    assert '"id" bigint NOT NULL,' in ddl
     assert '"vec" real[]' in ddl
     assert ddl.startswith('CREATE TABLE "mytab"')
 
@@ -53,11 +52,6 @@ def test_create_table_dialects():
     assert "DROP TABLE IF EXISTS" in drop_table_ddl("t")
     assert truncate_table_ddl("t", "sqlite").startswith("DELETE FROM")
     assert truncate_table_ddl("t", "postgres").startswith("TRUNCATE")
-
-
-def test_jdbc_column_types_string():
-    s = jdbc_column_types(SCHEMA, "postgres")
-    assert "id bigint" in s and "score double precision" in s
 
 
 def test_csv_sink_roundtrip(spark, tmp_path):
@@ -94,7 +88,7 @@ def test_jdbc_sink_derby(spark, tmp_path):
 
 
 def test_jdbc_create_overwrite_values(spark, tmp_path):
-    # create (errorifexists) with explicit column types, then overwrite —
+    # create (errorifexists), then overwrite —
     # and compare VALUES, not just counts, on the read-back
     from pyspark.sql.utils import AnalysisException
 
@@ -103,7 +97,7 @@ def test_jdbc_create_overwrite_values(spark, tmp_path):
 
     url = f"jdbc:derby:{tmp_path}/db2;create=true"
     df = load(spark, "/root/testdata/sf0.001", "region")
-    write_jdbc(df, url, "region_c", mode="create", column_types="r_name VARCHAR(32)")
+    write_jdbc(df, url, "region_c", mode="create")
     with pytest.raises(AnalysisException):
         write_jdbc(df, url, "region_c", mode="create")  # already exists
     # deterministic 2-row subset: LIMIT without ORDER BY may pick different

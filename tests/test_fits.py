@@ -13,6 +13,24 @@ from fits2db_spark.sources.fits import (
 )
 
 
+@pytest.fixture
+def max_partition_bytes(spark):
+    """Set spark.sql.files.maxPartitionBytes for format("fits") reads
+    (register() reads it), restoring the session's value afterwards."""
+    from fits2db_spark.sources.fits_datasource import register
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+
+    def set_to(n: int) -> None:
+        spark.conf.set(key, str(n))
+        register(spark)
+
+    yield set_to
+    spark.conf.set(key, old)
+    register(spark)
+
+
 def _roundtrip(columns):
     blob = write_fits_bintable(columns)
     schema, decoded = decode_bintable(blob)
@@ -285,12 +303,12 @@ def test_datasource_hdu_by_name(spark, tmp_path):
     assert sorted(r.b for r in df.collect()) == [5, 6]
 
 
-def test_datasource_row_range_partitions(spark, tmp_path):
+def test_datasource_row_range_partitions(spark, tmp_path, max_partition_bytes):
     """One large BINTABLE must split into multiple row-range partitions
-    (chunk_mb option) and decode identically to the whole-file read —
-    including a variable-length (P) column whose heap offsets are global."""
+    (spark.sql.files.maxPartitionBytes) and decode identically to the
+    whole-file read — including a variable-length (P) column whose heap
+    offsets are global."""
     from fits2db_spark.sources.fits import decode_bintable_range
-    from fits2db_spark.sources.fits_datasource import register
 
     n = 1000
     blob = write_fits_bintable(
@@ -302,15 +320,15 @@ def test_datasource_row_range_partitions(spark, tmp_path):
     )
     path = tmp_path / "big.fits"
     path.write_bytes(blob)
-    register(spark)
-    # ~12 bytes/fixed row -> chunk of ~4000 bytes = several hundred rows
-    df = spark.read.format("fits").option("chunk_mb", 0.004).load(str(path))
-    assert df.rdd.getNumPartitions() > 1, "large table must split into row ranges"
-    rows = {r.id: (r.flux, list(r.trace)) for r in df.collect()}
-    assert len(rows) == n
     whole = spark.read.format("fits").load(str(path))
     assert whole.rdd.getNumPartitions() == 1
     expect = {r.id: (r.flux, list(r.trace)) for r in whole.collect()}
+    # 16 bytes per fixed row -> 4096-byte partitions of 256 rows
+    max_partition_bytes(4096)
+    df = spark.read.format("fits").load(str(path))
+    assert df.rdd.getNumPartitions() > 1, "large table must split into row ranges"
+    rows = {r.id: (r.flux, list(r.trace)) for r in df.collect()}
+    assert len(rows) == n
     assert rows == expect
     # direct range decode: middle slice only
     _, cols = decode_bintable_range(str(path), 1, 10, 5)
@@ -708,26 +726,22 @@ def test_gzip2_byte_shuffle_roundtrip_and_wins_on_floats():
     assert list(out[0]) == cols[0][2]
 
 
-def test_ztable_datasource_partitioned_read(spark, tmp_path):
+def test_ztable_datasource_partitioned_read(spark, tmp_path, max_partition_bytes):
     """format('fits') on a tile-compressed table must plan partitions in
     ORIGINAL-row space (container NAXIS2 counts tiles) and align them to
-    tile boundaries — a tiny chunk_mb forces multiple partitions and the
-    union must still be exactly the source rows."""
+    tile boundaries — a tiny spark.sql.files.maxPartitionBytes forces
+    multiple partitions and the union must still be exactly the source
+    rows."""
     from fits2db_spark.sources.fits_compress import write_fits_bintable_compressed
-    from fits2db_spark.sources.fits_datasource import register
 
-    register(spark)
     n = 1000
     cols = [("ID", "J", list(range(n))), ("V", "D", [i / 4.0 for i in range(n)])]
     p = tmp_path / "part_comp.fits"
     write_fits_bintable_compressed(cols, tile_len=100, out=open(p, "wb"))
-    df = (
-        spark.read.format("fits")
-        # ~4KB chunks vs 12-byte original rows -> hundreds of original rows
-        # per chunk, tile-aligned, several partitions
-        .option("chunk_mb", str(4096 / 1024 / 1024))
-        .load(str(p))
-    )
+    # 4 KB partitions vs 12-byte original rows -> hundreds of original rows
+    # per partition, tile-aligned, several partitions
+    max_partition_bytes(4096)
+    df = spark.read.format("fits").load(str(p))
     assert df.rdd.getNumPartitions() > 1
     got = sorted((r.ID, r.V) for r in df.collect())
     assert got == [(i, i / 4.0) for i in range(n)]
@@ -922,7 +936,7 @@ def test_datasource_pushfilters_accepts_and_applies(tmp_path):
     )
 
     from fits2db_spark.sources.fits import write_fits_bintable
-    from fits2db_spark.sources.fits_datasource import FitsDataSourceReader
+    from fits2db_spark.sources.fits_datasource import FitsDataSource
 
     n = 50
     p = tmp_path / "push.fits"
@@ -936,7 +950,7 @@ def test_datasource_pushfilters_accepts_and_applies(tmp_path):
     schema = StructType(
         [StructField("ID", LongType()), StructField("NAME", StringType())]
     )
-    reader = FitsDataSourceReader({"path": str(p), "hdu": "1"}, schema)
+    reader = FitsDataSource({"path": str(p), "hdu": "1"}).reader(schema)
     flt = [
         GreaterThan(("ID",), 9),
         LessThan(("ID",), 20),
@@ -951,10 +965,9 @@ def test_datasource_pushfilters_accepts_and_applies(tmp_path):
 
 
 def test_datasource_pushdown_end_to_end(spark, tmp_path):
-    """With spark.sql.python.filterPushdown.enabled the full plan must
-    return exactly the predicate's rows (Catalyst drops its re-filter for
-    fully-pushed predicates, so any pushdown bug becomes a wrong RESULT,
-    not just a slow plan)."""
+    """The full plan must return exactly the predicate's rows (Catalyst
+    drops its re-filter for fully-pushed predicates, so any pushdown bug
+    becomes a wrong RESULT, not just a slow plan)."""
     from fits2db_spark.sources.fits import write_fits_bintable
     from fits2db_spark.sources.fits_datasource import register
 
@@ -967,20 +980,12 @@ def test_datasource_pushdown_end_to_end(spark, tmp_path):
     )
     from pyspark.sql import functions as F
 
-    old = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        register(spark)
-        df = (
-            spark.read.format("fits").option("pushdown", "true").load(str(p))
-        )
-        got = sorted(
-            (r.ID, r.V)
-            for r in df.filter((F.col("ID") > 150) & (F.col("V") < 88.0)).collect()
-        )
-        assert got == [(i, i / 2.0) for i in range(151, 176)]
-    finally:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", old)
+    register(spark)
+    df = spark.read.format("fits").load(str(p)).filter((F.col("ID") > 150) & (F.col("V") < 88.0))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # both comparisons were pushed: Spark's filter keeps only the null checks
+    assert "BatchScan fits" in plan and " > 150" not in plan and " < 88.0" not in plan, plan
+    assert sorted((r.ID, r.V) for r in df.collect()) == [(i, i / 2.0) for i in range(151, 176)]
 
 
 def test_datasource_pushdown_nan_matches_spark_semantics(spark, tmp_path):
@@ -988,11 +993,9 @@ def test_datasource_pushdown_nan_matches_spark_semantics(spark, tmp_path):
     IEEE kernels compare NaN false to everything.  Since Catalyst drops its
     re-evaluation of fully-pushed predicates, the pushed mask must
     reproduce Spark's ordering — on a double column containing NaN (the
-    standard FITS float null), pushdown-on must return EXACTLY the rows a
-    native Spark evaluation of the same data returns (ADVICE r11,
-    fits_datasource.py).  (A pushdown-off control leg is impossible: Spark
-    refuses to run a reader implementing pushFilters with the conf off, so
-    the control is the same predicate over createDataFrame.)"""
+    standard FITS float null), the pushed filter must return EXACTLY the
+    rows a native Spark evaluation of the same data returns: the same
+    predicate over createDataFrame."""
     from fits2db_spark.sources.fits import write_fits_bintable
     from fits2db_spark.sources.fits_datasource import register
 
@@ -1006,8 +1009,6 @@ def test_datasource_pushdown_nan_matches_spark_semantics(spark, tmp_path):
     )
     from pyspark.sql import functions as F
 
-    conf_key = "spark.sql.python.filterPushdown.enabled"
-    old = spark.conf.get(conf_key, "false")
     register(spark)
     control = spark.createDataFrame(
         list(zip(range(len(vals)), vals)), "ID bigint, V double"
@@ -1016,26 +1017,20 @@ def test_datasource_pushdown_nan_matches_spark_semantics(spark, tmp_path):
     def ids(df, predicate) -> list[int]:
         return sorted(r.ID for r in df.filter(predicate).collect())
 
-    spark.conf.set(conf_key, "true")
-    try:
-        fits_df = (
-            spark.read.format("fits").option("pushdown", "true").load(str(p))
-        )
-        # NaN > 4.0 is TRUE in Spark (NaN sorts above every numeric)
-        gt = F.col("V") > 4.0
-        assert ids(fits_df, gt) == ids(control, gt) == [1, 2, 3, 4, 5]
-        # NaN < 100.0 is FALSE in Spark (and in IEEE — stays false pushed)
-        lt = F.col("V") < 100.0
-        assert ids(fits_df, lt) == ids(control, lt) == [0, 1, 3, 5]
-        # V = finite never matches NaN rows in either engine
-        eq = F.col("V") == 5.0
-        assert ids(fits_df, eq) == ids(control, eq) == [1]
-        # NaN literal: pushFilters yields it back; Spark's post-scan
-        # filter evaluates NaN = NaN as true
-        eq_nan = F.col("V") == F.lit(nan)
-        assert ids(fits_df, eq_nan) == ids(control, eq_nan) == [2, 4]
-    finally:
-        spark.conf.set(conf_key, old)
+    fits_df = spark.read.format("fits").load(str(p))
+    # NaN > 4.0 is TRUE in Spark (NaN sorts above every numeric)
+    gt = F.col("V") > 4.0
+    assert ids(fits_df, gt) == ids(control, gt) == [1, 2, 3, 4, 5]
+    # NaN < 100.0 is FALSE in Spark (and in IEEE — stays false pushed)
+    lt = F.col("V") < 100.0
+    assert ids(fits_df, lt) == ids(control, lt) == [0, 1, 3, 5]
+    # V = finite never matches NaN rows in either engine
+    eq = F.col("V") == 5.0
+    assert ids(fits_df, eq) == ids(control, eq) == [1]
+    # NaN literal: pushFilters yields it back; Spark's post-scan
+    # filter evaluates NaN = NaN as true
+    eq_nan = F.col("V") == F.lit(nan)
+    assert ids(fits_df, eq_nan) == ids(control, eq_nan) == [2, 4]
 
 
 def test_datasource_pushfilters_yields_back_nan_literal(tmp_path):
@@ -1045,13 +1040,13 @@ def test_datasource_pushfilters_yields_back_nan_literal(tmp_path):
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from fits2db_spark.sources.fits import write_fits_bintable
-    from fits2db_spark.sources.fits_datasource import FitsDataSourceReader
+    from fits2db_spark.sources.fits_datasource import FitsDataSource
 
     nan = float("nan")
     p = tmp_path / "nanlit.fits"
     p.write_bytes(write_fits_bintable([("V", "D", [1.0, nan])]))
     schema = StructType([StructField("V", DoubleType())])
-    reader = FitsDataSourceReader({"path": str(p), "hdu": "1"}, schema)
+    reader = FitsDataSource({"path": str(p), "hdu": "1"}).reader(schema)
     flt = [EqualTo(("V",), nan), GreaterThan(("V",), nan), GreaterThan(("V",), 0.5)]
     leftover = list(reader.pushFilters(flt))
     assert leftover == flt[:2], "NaN literals return to Spark; finite pushes"

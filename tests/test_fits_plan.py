@@ -295,12 +295,13 @@ def test_embedded_append_is_all_or_nothing(spark, tmp_path):
 
 def test_datasource_reads_a_file_over_the_binaryfile_limit(spark, tmp_path):
     """The alternative the size-limit error names: format("fits") splits
-    the same 2.4 GB table into 64 MB row ranges."""
+    the same 2.4 GB table into row ranges of spark.sql.files.maxPartitionBytes
+    (128 MiB by default)."""
     from fits2db_spark.sources.fits_datasource import register
 
     register(spark)
     df = spark.read.format("fits").load(_sparse_big(tmp_path / "big.fits"))
-    assert df.rdd.getNumPartitions() == 36
+    assert df.rdd.getNumPartitions() == 18
     assert tuple(df.limit(1).collect()[0]) == (1, 10.0, 1.0)
 
 

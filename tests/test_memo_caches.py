@@ -45,8 +45,8 @@ def test_free_memo_checkpoints_empties_caches_and_storage(spark):
     base = _storage_count(spark)
     qs = all_queries()
     qs["join_xmatch_nearest"](spark, SF_A).count()
-    scans.fits_datasource_pushdown(spark, SF_A).count()
-    assert _memo_keys("xmatch_") and _memo_keys("fits_pushdown")
+    scans.fits_ingest(spark, SF_A).count()
+    assert _memo_keys("xmatch_") and _memo_keys("staged:nation_fits")
     assert _storage_count(spark) > base
     free_memo_checkpoints()
     assert not session._MEMO
@@ -89,7 +89,7 @@ def test_new_sf_dir_displaces_old_checkpoints(spark):
     assert os.stat(os.path.join(staged, "nation.fits")).st_mtime_ns > staged_mtime
     scans.fits_datasource_pushdown(spark, SF_A).count()
     scans.fits_datasource_pushdown(spark, SF_B).count()
-    assert {k[1] for k in _memo_keys("fits_pushdown")} == {SF_B}
+    assert {k[1] for k in _memo_keys("staged:nation_fits")} == {SF_B}
     free_memo_checkpoints()
 
 

@@ -1,16 +1,11 @@
-"""Round-13 regression tests: the two r12 ADVICE code fixes.
+"""Round-13 regression tests.
 
 * ``_spark_round`` must pass non-finite values through unchanged (Spark's
   ROUND returns nan/inf as-is; ``Decimal('Infinity').quantize`` raises
   ``decimal.InvalidOperation`` and would kill the whole Arrow task).
-* ``fits_datasource_pushdown`` must reuse ONE localCheckpoint per
-  (session, sf_dir) instead of accumulating a new checkpointed RDD in the
-  block manager on every invocation (bench runs call it repeatedly).
 """
 
 import math
-
-from tests.conftest import SF_SMOKE
 
 
 def test_spark_round_passes_non_finite_through():
@@ -36,19 +31,6 @@ def test_spark_round_matches_spark_on_halfway_reprs(spark):
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     got = [r[0] for r in df.select(F.round("x", 2)).collect()]
     assert got == list(_spark_round(vals, 2))
-
-
-def test_fits_datasource_pushdown_checkpoint_is_memoized(spark):
-    from fits2db_spark import session
-    from fits2db_spark.operators import scans
-
-    session.free_memo_checkpoints()
-    a = scans.fits_datasource_pushdown(spark, SF_SMOKE)
-    b = scans.fits_datasource_pushdown(spark, SF_SMOKE)
-    assert a is b, "repeated invocations must reuse the cached checkpoint"
-    # the staged FITS input is a memo entry too, written once
-    assert [k[2] for k in session._MEMO] == ["staged:nation_fits", "fits_pushdown"]
-    assert a.count() == b.count()
 
 
 def test_write_fits_dataset_roundtrip_nulls_scale_multifile(spark, tmp_path):

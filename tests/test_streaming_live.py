@@ -469,27 +469,99 @@ def test_stream_live_fits_ingest_matches_batch_filter(spark):
     ) == got
 
 
-def test_datasource_schema_is_metadata_free(spark, tmp_path):
-    """Spark 4.1 upstream bug: a SimpleDataSourceStreamReader whose
-    declared schema carries ANY StructField metadata dies in the
-    streaming runner's Arrow assertion (INTERNAL_ERROR at
-    PythonStreamingSourceRunner.readArrowRecordBatches; verified with a
-    minimal two-line reader — plain schema streams, one metadata key
-    fails). The fits DataSource therefore strips TUNIT/TDISP metadata at
-    its schema() boundary; the conventions stay on the read_fits path."""
-    from fits2db_spark.sources.fits import write_fits_bintable
-    from fits2db_spark.sources.fits_datasource import FitsDataSource
+def test_datasource_schema_matches_read_fits(spark, tmp_path):
+    """Batch and stream format("fits") reads declare the schema plan_fits
+    and read_fits declare, TUNIT/TDISP column metadata included, and a
+    stream carrying that metadata runs."""
+    from fits2db_spark.sources.fits import plan_fits, read_fits, write_fits_bintable
+    from fits2db_spark.sources.fits_datasource import register as register_fits
 
-    p = tmp_path / "m.fits"
-    p.write_bytes(
+    watch = tmp_path / "in"
+    watch.mkdir()
+    (watch / "m.fits").write_bytes(
         write_fits_bintable(
-            [("x", "D", [1.0])],
-            extra_cards=[("TUNIT1", "deg"), ("TDISP1", "F8.2")],
+            [("id", "J", [1, 2]), ("x", "D", [1.0, 2.5])],
+            extra_cards=[("TUNIT2", "deg"), ("TDISP2", "F8.2")],
         )
     )
-    ds = FitsDataSource({"path": str(p)})
-    schema = ds.schema()
-    assert all(not f.metadata for f in schema.fields), schema
+    register_fits(spark)
+    declared = plan_fits(str(watch)).schema
+    assert declared["x"].metadata == {"fits.tunit": "deg", "fits.tdisp": "F8.2"}
+    stream = spark.readStream.format("fits").load(str(watch))
+    for schema in (
+        read_fits(spark, str(watch)).schema,
+        spark.read.format("fits").load(str(watch)).schema,
+        stream.schema,
+    ):
+        assert schema == declared
+        assert [f.metadata for f in schema.fields] == [f.metadata for f in declared.fields]
+    q = run_stream_to_memory(stream, "t_fits_metadata")
+    q.awaitTermination(120)
+    assert sorted(tuple(r) for r in spark.table("t_fits_metadata").collect()) == [(1, 1.0), (2, 2.5)]
+
+
+_FOREIGN_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark import cloudpickle
+from pyspark.sql import SparkSession
+from fits2db_spark.sources.fits import write_fits_bintable
+from fits2db_spark.sources.fits_datasource import register
+
+spark = SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+watch, sink, chk = sys.argv[2:5]
+register(spark)
+print("BY_VALUE", sorted(cloudpickle.list_registry_pickle_by_value()))
+print("BATCH", sorted(r.id for r in spark.read.format("fits").load(watch).collect()))
+
+def drain():
+    q = (
+        spark.readStream.format("fits").load(watch).writeStream.format("parquet")
+        .option("path", sink).option("checkpointLocation", chk)
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    return sorted(r.id for r in spark.read.parquet(sink).collect())
+
+print("STREAM", drain())
+with open(watch + "/f9.fits", "wb") as f:
+    f.write(write_fits_bintable([("id", "J", [99])]))
+print("RESUMED", drain())
+spark.stop()
+"""
+
+
+def test_fits_format_reads_and_streams_from_a_foreign_cwd(tmp_path):
+    """A driver whose cwd cannot import fits2db_spark (as an external
+    harness runs it) reads format("fits") in batch and as an availableNow
+    stream that resumes from its checkpoint after a new file lands, with
+    only the DataSource adapter pickled by value: Spark's streaming
+    planning runner cannot import the package, executors import it from
+    the shipped zip."""
+    import os
+    import subprocess
+    import sys
+
+    from fits2db_spark.sources.fits import write_fits_bintable
+    from tests.conftest import REPO
+
+    watch = tmp_path / "incoming"
+    watch.mkdir()
+    for i in range(2):
+        (watch / f"f{i}.fits").write_bytes(write_fits_bintable([("id", "J", [i * 10, i * 10 + 1])]))
+    cwd = tmp_path / "elsewhere"
+    cwd.mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_CWD_SCRIPT, REPO, str(watch), str(tmp_path / "sink"), str(tmp_path / "chk")],
+        cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    lines = dict(line.split(" ", 1) for line in out.stdout.splitlines() if " " in line)
+    assert lines["BY_VALUE"] == "['fits2db_spark.sources.fits_datasource']"
+    assert lines["BATCH"] == "[0, 1, 10, 11]"
+    assert lines["STREAM"] == "[0, 1, 10, 11]"
+    assert lines["RESUMED"] == "[0, 1, 10, 11, 99]"
 
 
 def test_state_shards_scale_with_staged_volume(spark):
