@@ -28,8 +28,9 @@ Derby database (jdbc:derby: without //) always loads through one
 connection, in one transaction. The reference writes its
 outputs one after another; here every requested row sink (parquet, CSV,
 VOTable, JDBC) reads one shared frame, decoded once per load and
-repartitioned once for --num-partitions, and the sinks run as concurrent
-Spark jobs.
+repartitioned once for --num-partitions when a file sink reads it, and the
+sinks run as concurrent Spark jobs. A load whose only row sink is JDBC is
+not repartitioned: the JDBC writer caps its connections with a coalesce.
 
 Failure semantics of a load with several row sinks:
 
@@ -203,7 +204,7 @@ def run(argv: list[str], spark: SparkSession | None = None) -> int:
             for f in df.schema.fields:
                 print(f"  {f.name}: {f.dataType.simpleString()}")
         return 0
-    if args.num_partitions:
+    if args.num_partitions and any(name != "jdbc" for name, _ in sinks):
         df = df.repartition(args.num_partitions)
     if len(sinks) > 1:
         df = df.persist()
@@ -220,8 +221,10 @@ Sink = tuple[str, Callable[[DataFrame], None]]
 def _row_sinks(args: argparse.Namespace) -> list[Sink]:
     """The requested row sinks as (name, write) pairs, JDBC first: it is
     the longest job, and Spark's FIFO scheduler gives freed task slots to
-    the earliest-submitted job. ``run`` has already repartitioned the
-    frame for --num-partitions, so no sink repartitions it again."""
+    the earliest-submitted job. ``run`` repartitions the frame for
+    --num-partitions when a file sink reads it; ``write_jdbc`` gets the
+    same cap as Spark's ``numPartitions``, a coalesce that is a no-op on
+    a frame already repartitioned to it."""
     sinks = []
     if args.jdbc_url:
         from .sinks.jdbc import write_jdbc
@@ -232,9 +235,8 @@ def _row_sinks(args: argparse.Namespace) -> list[Sink]:
                 args.jdbc_url,
                 args.table,
                 mode=args.mode,
-                dialect=args.dialect,
                 batchsize=args.batchsize,
-                num_partitions=None,
+                num_partitions=args.num_partitions,
                 driver=args.jdbc_driver,
             ))
         )

@@ -293,6 +293,92 @@ def test_embedded_append_is_all_or_nothing(spark, tmp_path):
     assert count_and_id_sum() == before
 
 
+def _count_and_id_sum(spark, url):
+    got = (
+        spark.read.format("jdbc").option("url", url)
+        .option("query", 'SELECT COUNT(*) AS n, SUM("id") AS s FROM t').load().collect()[0]
+    )
+    return int(got[0]), int(got[1])
+
+
+def test_derby_only_load_coalesces_without_a_shuffle(spark, tmp_path):
+    """With JDBC as the only row sink, --num-partitions reaches the JDBC
+    writer as a coalesce: the load runs no shuffle, so every Spark job it
+    starts is a single stage, and Derby gets every row."""
+    tiles = tmp_path / "tiles"
+    tiles.mkdir()
+    ids = []
+    for i in range(6):
+        tile_ids = list(range(100 * i, 100 * i + 50))
+        _good(tiles / f"t{i}.fits", tile_ids)
+        ids += tile_ids
+    url = f"jdbc:derby:{tmp_path}/np_db;create=true"
+    jobs = _jobs_in_group(spark, "derby-only-num-partitions", lambda: run(
+        [str(tiles / "*.fits"), "--table", "t", "--jdbc-url", url, "--num-partitions", "4"],
+        spark=spark,
+    ))
+    tracker = spark.sparkContext.statusTracker()
+    stages = [len(tracker.getJobInfo(j).stageIds) for j in jobs]
+    assert stages and stages == [1] * len(stages)
+    assert _count_and_id_sum(spark, url) == (len(ids), sum(ids))
+
+
+@pytest.fixture()
+def log_buffer_property(spark):
+    """The JVM's ``derby.storage.logBufferSize`` cleared for the test and
+    restored to its prior value (or cleared) afterwards."""
+    from fits2db_spark.sinks.jdbc import DERBY_LOG_BUFFER
+
+    system = spark._jvm.java.lang.System
+    prior = system.getProperty(DERBY_LOG_BUFFER)
+    system.clearProperty(DERBY_LOG_BUFFER)
+    try:
+        yield system
+    finally:
+        if prior is None:
+            system.clearProperty(DERBY_LOG_BUFFER)
+        else:
+            system.setProperty(DERBY_LOG_BUFFER, prior)
+
+
+def test_embedded_append_sizes_the_log_buffer_and_survives_a_reboot(
+    spark, tmp_path, log_buffer_property
+):
+    """An embedded load sets Derby's log buffer to 4 MiB before the
+    database boots; commit still forces the log, so after a clean shutdown
+    (SQLState 08006) and a reboot the table holds every appended row."""
+    from py4j.protocol import Py4JJavaError
+
+    from fits2db_spark.sinks.jdbc import DERBY_LOG_BUFFER
+
+    db = f"{tmp_path}/log_db"
+
+    def load(path, mode):
+        return run([path, "--table", "t", "--jdbc-url", f"jdbc:derby:{db};create=true",
+                    "--mode", mode], spark=spark)
+
+    assert load(_good(tmp_path / "a.fits", list(range(1, 3001))), "create") == 0
+    assert load(_good(tmp_path / "b.fits", list(range(3001, 6001))), "append") == 0
+    assert log_buffer_property.getProperty(DERBY_LOG_BUFFER) == "4194304"
+    with pytest.raises(Py4JJavaError) as shutdown:
+        spark._jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{db};shutdown=true")
+    assert shutdown.value.java_exception.getSQLState() == "08006"
+    assert _count_and_id_sum(spark, f"jdbc:derby:{db}") == (6000, sum(range(1, 6001)))
+
+
+def test_embedded_append_keeps_a_log_buffer_size_set_beforehand(
+    spark, tmp_path, log_buffer_property
+):
+    from fits2db_spark.sinks.jdbc import DERBY_LOG_BUFFER
+
+    log_buffer_property.setProperty(DERBY_LOG_BUFFER, "65536")
+    url = f"jdbc:derby:{tmp_path}/kept_db;create=true"
+    assert run([_good(tmp_path / "a.fits", [1, 2, 3]), "--table", "t", "--jdbc-url", url],
+               spark=spark) == 0
+    assert log_buffer_property.getProperty(DERBY_LOG_BUFFER) == "65536"
+    assert _count_and_id_sum(spark, url) == (3, 6)
+
+
 def test_datasource_reads_a_file_over_the_binaryfile_limit(spark, tmp_path):
     """The alternative the size-limit error names: format("fits") splits
     the same 2.4 GB table into row ranges of spark.sql.files.maxPartitionBytes
