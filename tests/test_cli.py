@@ -2,6 +2,8 @@
 tool — argv -> DDL emission / CSV / JDBC load. Runs the real `run()` with a
 shared session (spawning a JVM per test would dominate)."""
 
+import contextlib
+
 import pytest
 
 from fits2db_spark.cli import run
@@ -342,22 +344,28 @@ def test_cli_num_partitions_shapes_every_sink(fits_file, tmp_path, spark):
     assert _derby_rows(spark, url, "stars") == ROWS
 
 
+@contextlib.contextmanager
+def _job_group(sc, group):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+
+
 def test_cli_sink_jobs_keep_the_callers_job_group(fits_file, tmp_path, spark):
     """The sinks run in threads; each sink's jobs must still belong to the
     job group the caller set, or a caller could neither cancel nor count
     them."""
     sc = spark.sparkContext
     group = "cli-sinks-job-group"
-    sc.setJobGroup(group, group)
-    try:
+    with _job_group(sc, group):
         rc = run(
             [fits_file, "--table", "stars", "--csv-out", str(tmp_path / "csv"),
              "--jdbc-url", f"jdbc:derby:{tmp_path}/jg_db;create=true"],
             spark=spark,
         )
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
     assert rc == 0
     tracker = sc.statusTracker()
     stage_names = {
@@ -404,3 +412,62 @@ def test_cli_releases_the_shared_frame(fits_file, tmp_path, spark):
              "--votable-limit", "1"], spark=spark)
     assert _cached_rdd_ids(spark) == before
     assert len(_derby_rows(spark, url, "stars")) == 6
+
+
+def _first_job_with_stage(tracker, job_ids, prefix):
+    return min(
+        j for j in job_ids
+        if any(
+            (info := tracker.getStageInfo(s)) is not None and info.name.startswith(prefix)
+            for s in tracker.getJobInfo(j).stageIds
+        )
+    )
+
+
+def test_cli_jdbc_job_is_submitted_before_the_file_sinks(tmp_path, spark):
+    """A running task is never preempted, so the sink whose job is
+    submitted first holds the task slots it gets. The JDBC job (one task
+    that sets the load's length) must be submitted before the CSV job in
+    every load, also under a caller's job group."""
+    for i in range(4):
+        blob = write_fits_bintable([("id", "K", list(range(i * 50, i * 50 + 50)))])
+        (tmp_path / f"tile{i}.fits").write_bytes(blob)
+    url = f"jdbc:derby:{tmp_path}/order_db;create=true"
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for load in range(3):
+        group = f"cli-sink-order-{load}"
+        with _job_group(sc, group):
+            rc = run(
+                [str(tmp_path / "tile*.fits"), "--table", "tiles",
+                 "--csv-out", str(tmp_path / "csv"), "--jdbc-url", url, "--mode", "append"],
+                spark=spark,
+            )
+        assert rc == 0
+        jobs = tracker.getJobIdsForGroup(group)
+        save = _first_job_with_stage(tracker, jobs, "save at")
+        csv = _first_job_with_stage(tracker, jobs, "csv at")
+        assert save < csv, (load, save, csv)
+    back = spark.read.format("jdbc").option("url", url).option("dbtable", "tiles").load()
+    assert back.count() == 3 * 200
+
+
+def test_cli_jdbc_failing_before_its_job_does_not_hold_back_the_file_sinks(
+    fits_file, tmp_path, spark
+):
+    """The file sinks wait for the JDBC sink's job only while its thread
+    lives: a JDBC sink that fails before submitting any job (--mode create
+    on an existing table) lets the CSV sink load every row. The job tag the
+    wait uses stays in the JDBC sink's thread, not the caller's."""
+    url = f"jdbc:derby:{tmp_path}/exists_db;create=true"
+    assert run([fits_file, "--table", "stars", "--jdbc-url", url, "--mode", "create"],
+               spark=spark) == 0
+    csv_dir = str(tmp_path / "csv")
+    sc = spark.sparkContext
+    tags = sc.getJobTags()
+    with pytest.raises(ExceptionGroup, match="failed: jdbc; completed: csv"):
+        run([fits_file, "--table", "stars", "--csv-out", csv_dir,
+             "--jdbc-url", url, "--mode", "create"], spark=spark)
+    assert sc.getJobTags() == tags
+    assert _csv_rows(csv_dir) == CSV_ROWS
+    assert _derby_rows(spark, url, "stars") == ROWS
