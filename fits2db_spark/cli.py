@@ -42,10 +42,11 @@ Failure semantics of a load with several row sinks:
   2 GiB by default) before any sink writes; a bad input fails the load
   with no sink written.
 * Every sink is attempted, and none is cancelled once running: a failing
-  sink (say a VOTable over its --votable-limit) does not stop the others,
-  and cancelling a JDBC append would leave its already-committed
+  sink (say a VOTable whose directory does not exist) does not stop the
+  others, and cancelling a JDBC append would leave its already-committed
   partitions behind. After all sinks end, the load raises one error that
-  names each failed sink and each sink that completed.
+  names each failed sink and each sink that completed. A failed VOTable
+  sink leaves no file at --votable-out.
 * A failure of the shared decode itself (a corrupt tile, a --verify-checksum
   mismatch) fails every sink that reads the frame.
 * A JDBC sink commits per partition, so a JDBC write that fails part-way
@@ -122,22 +123,7 @@ def build_parser() -> argparse.ArgumentParser:
     # VOTable sink (IVOA XML — the astronomy service response format)
     p.add_argument(
         "--votable-out",
-        help="write rows as a VOTable 1.4 document (file path; "
-        "distributed fragment layout with --votable-fragments)",
-    )
-    p.add_argument(
-        "--votable-fragments",
-        action="store_true",
-        help="emit header/footer + one XML fragment per partition instead "
-        "of collecting a single document",
-    )
-    p.add_argument(
-        "--votable-limit",
-        type=_positive_int,
-        default=10_000,
-        help="row bound for the single-document VOTable path; exceeding it "
-        "is an error (never a silent truncation) — use --votable-fragments "
-        "for complete large exports (default 10000)",
+        help="write rows as one VOTable 1.4 document to this file",
     )
     # JDBC sink
     p.add_argument("--jdbc-url", help="load rows into this JDBC database")
@@ -267,19 +253,11 @@ def _row_sinks(args: argparse.Namespace) -> list[Sink]:
             ))
         )
     if args.votable_out:
-        from .sinks.votable import votable_string, write_votable_fragments
+        from .sinks.votable import write_votable
 
-        def write_votable(df: DataFrame) -> None:
-            if args.votable_fragments:
-                write_votable_fragments(df, args.votable_out, table_name=args.table)
-                return
-            # raises (never silently truncates) when the result exceeds
-            # --votable-limit; the error points at --votable-fragments
-            doc = votable_string(df, table_name=args.table, limit=args.votable_limit)
-            with open(args.votable_out, "w") as f:
-                f.write(doc)
-
-        sinks.append(("votable", write_votable))
+        sinks.append(
+            ("votable", lambda df: write_votable(df, args.votable_out, table_name=args.table))
+        )
     return sinks
 
 

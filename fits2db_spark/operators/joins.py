@@ -18,6 +18,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from ..registry import register
 from ..session import memo, release
@@ -198,6 +199,40 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("band", "p_partkey", "p_size")
 
 
+def _asof_union(
+    spark: SparkSession, sf_dir: str, carry_t: bool
+) -> tuple[DataFrame, WindowSpec]:
+    """The as-of family's one input: events (``kind`` 1) and orders
+    (``kind`` 0) unioned on (``k`` = user, ``t`` = time), and the window
+    order over it, without a frame. Orders sort before events at equal
+    times, and ties among orders go by orderkey.
+
+    The carried order columns ride the shuffle as ONE nullable struct
+    ``ov``: the union is 5 columns wide instead of 6 and a window computes
+    a single last/first(ignorenulls) instead of two; the struct also holds
+    the tie sort key (orderkey). ``carry_t`` adds the order's time to it as
+    ``ov.o_t``, for the keys that compare it with the event's; only they
+    pay for the wider struct."""
+    t_field = ",o_t:timestamp" if carry_t else ""
+    t_col = [F.col("o_orderdate").alias("o_t")] if carry_t else []
+    ev = load(spark, sf_dir, "events").select(
+        F.col("user_id").alias("k"),
+        F.col("ts").alias("t"),
+        F.lit(1).alias("kind"),
+        "event_id",
+        F.lit(None).cast(f"struct<o_orderkey:bigint,o_totalprice:double{t_field}>").alias("ov"),
+    )
+    od = load(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("k"),
+        F.col("o_orderdate").alias("t"),
+        F.lit(0).alias("kind"),
+        F.lit(None).cast("long").alias("event_id"),
+        F.struct("o_orderkey", "o_totalprice", *t_col).alias("ov"),
+    )
+    w = Window.partitionBy("k").orderBy("t", "kind", F.col("ov.o_orderkey").asc_nulls_last())
+    return ev.unionByName(od), w
+
+
 @register(
     "join_asof",
     oracle="""
@@ -224,30 +259,8 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ties on o_orderdate resolve to the highest o_orderkey (orders sort before
     events at identical timestamps via the kind column).
     """
-    # Carried order columns ride the shuffle as ONE nullable struct: the
-    # union is 5 columns wide instead of 6 and the window computes a single
-    # last(ignorenulls) instead of two. The struct's field order also makes
-    # the tie sort key (orderkey) available without an extra column.
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").alias("k"),
-        F.col("ts").alias("t"),
-        F.lit(1).alias("kind"),
-        "event_id",
-        F.lit(None).cast("struct<o_orderkey:bigint,o_totalprice:double>").alias("ov"),
-    )
-    od = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("k"),
-        F.col("o_orderdate").alias("t"),
-        F.lit(0).alias("kind"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.struct("o_orderkey", "o_totalprice").alias("ov"),
-    )
-    w = (
-        Window.partitionBy("k")
-        .orderBy("t", "kind", F.col("ov.o_orderkey").asc_nulls_last())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    u = ev.unionByName(od)
+    u, w = _asof_union(spark, sf_dir, carry_t=False)
+    w = w.rowsBetween(Window.unboundedPreceding, 0)
     return (
         u.withColumn("asof", F.last("ov", ignorenulls=True).over(w))
         .filter(F.col("kind") == 1)
@@ -376,30 +389,8 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     union-tag + window plan as :func:`join_asof`, with the matched order's
     timestamp carried through the window so the tolerance is one filter on
     top; no extra shuffle, no candidate blow-up."""
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").alias("k"),
-        F.col("ts").alias("t"),
-        F.lit(1).alias("kind"),
-        "event_id",
-        F.lit(None)
-        .cast("struct<o_orderkey:bigint,o_totalprice:double,o_t:timestamp>")
-        .alias("ov"),
-    )
-    od = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("k"),
-        F.col("o_orderdate").alias("t"),
-        F.lit(0).alias("kind"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.struct(
-            "o_orderkey", "o_totalprice", F.col("o_orderdate").alias("o_t")
-        ).alias("ov"),
-    )
-    w = (
-        Window.partitionBy("k")
-        .orderBy("t", "kind", F.col("ov.o_orderkey").asc_nulls_last())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    u = ev.unionByName(od)
+    u, w = _asof_union(spark, sf_dir, carry_t=True)
+    w = w.rowsBetween(Window.unboundedPreceding, 0)
     within = F.col("asof.o_t").isNotNull() & (
         F.col("asof.o_t") >= F.col("t") - F.expr("INTERVAL 90 DAYS")
     )
@@ -985,43 +976,16 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     each direction. The kind column orders same-timestamp orders before
     events, so an order at exactly ts is a backward match at distance 0.
     """
-    ev = load(spark, sf_dir, "events").select(
-        F.col("user_id").alias("k"),
-        F.col("ts").alias("t"),
-        F.lit(1).alias("kind"),
-        "event_id",
-        F.lit(None)
-        .cast("struct<o_orderkey:bigint,o_totalprice:double,ot:timestamp>")
-        .alias("ov"),
-    )
-    od = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("k"),
-        F.col("o_orderdate").alias("t"),
-        F.lit(0).alias("kind"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.struct(
-            "o_orderkey", "o_totalprice", F.col("o_orderdate").alias("ot")
-        ).alias("ov"),
-    )
-    order_cols = ("t", "kind", F.col("ov.o_orderkey").asc_nulls_last())
-    wb = (
-        Window.partitionBy("k")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy("k")
-        .orderBy(*order_cols)
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
-    u = ev.unionByName(od)
+    u, w = _asof_union(spark, sf_dir, carry_t=True)
+    wb = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    wf = w.rowsBetween(1, Window.unboundedFollowing)
     cand = (
         u.withColumn("bwd", F.last("ov", ignorenulls=True).over(wb))
         .withColumn("fwd", F.first("ov", ignorenulls=True).over(wf))
         .filter(F.col("kind") == 1)
     )
-    db = F.unix_micros(F.col("t")) - F.unix_micros(F.col("bwd.ot"))
-    df_ = F.unix_micros(F.col("fwd.ot")) - F.unix_micros(F.col("t"))
+    db = F.unix_micros(F.col("t")) - F.unix_micros(F.col("bwd.o_t"))
+    df_ = F.unix_micros(F.col("fwd.o_t")) - F.unix_micros(F.col("t"))
     chosen = (
         F.when(F.col("bwd").isNull(), F.col("fwd"))
         .when(F.col("fwd").isNull(), F.col("bwd"))
@@ -1034,7 +998,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         chosen.getField("o_orderkey").alias("near_orderkey"),
         F.round(chosen.getField("o_totalprice"), 2).alias("near_totalprice"),
         F.round(
-            (F.unix_micros(chosen.getField("ot")) - F.unix_micros(F.col("t")))
+            (F.unix_micros(chosen.getField("o_t")) - F.unix_micros(F.col("t")))
             / 1_000_000.0,
             6,
         ).alias("near_dt_s"),

@@ -1419,20 +1419,19 @@ def fits_image_blank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def votable_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The VOTable sink under the driver gate: customer (with a NULL-bearing
-    column) -> ``write_votable_fragments`` (distributed: one <TR>-stream
-    fragment per partition, rendered where the rows live) ->
-    ``read_votable_tabledata`` (Catalyst regexp parse of the row stream)
-    -> exact value-hash vs the source table. Pins the sink's null
-    convention (empty TD <-> SQL NULL), XML escaping round trip, and
-    float round trip (the writer emits Python's shortest repr; the
-    string->double cast parses it back to the identical bits, and the
-    oracle reads the source column directly).
+    column) -> ``write_votable`` (rows rendered on executors, one document
+    streamed together on the driver) -> ``read_votable_tabledata``
+    (Catalyst regexp parse of the document's <TR> lines) -> exact
+    value-hash vs the source table. Pins the sink's null convention (empty
+    TD <-> SQL NULL), XML escaping round trip, and float round trip (the
+    writer emits Python's shortest repr; the string->double cast parses it
+    back to the identical bits, and the oracle reads the source column
+    directly).
 
-    Scale: write is fragment-per-partition with a tiny driver-side
-    header/footer (concatenate in object storage for the document — the
-    TAP streaming shape); read back is a splittable line scan, linear,
-    zero Python."""
-    from ..sinks.votable import read_votable_tabledata, write_votable_fragments
+    Scale: the write collects no rows (the driver copies the partitions'
+    files into the document); read back is a line scan, linear, zero
+    Python."""
+    from ..sinks.votable import read_votable_tabledata, write_votable
 
     staged = load(spark, sf_dir, "customer").select(
         "c_custkey",
@@ -1443,19 +1442,11 @@ def votable_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_acctbal",
     ).repartition(4)
 
-    def write(out_dir: str) -> None:
-        # a previous PROCESS may have left the fragment dir behind, and
-        # saveAsTextFile refuses to overwrite — clear before re-staging
-        import shutil
-
-        shutil.rmtree(out_dir, ignore_errors=True)
-        write_votable_fragments(staged, out_dir, table_name="customer")
-
-    path = stage(spark, sf_dir, "customer_votable", write)
-    back = read_votable_tabledata(
-        spark, os.path.join(path, "rows", "part-*"),
-        ["c_custkey", "c_name", "seg", "c_acctbal"],
+    path = stage(
+        spark, sf_dir, "customer_vot",
+        lambda out: write_votable(staged, out, table_name="customer"),
     )
+    back = read_votable_tabledata(spark, path, ["c_custkey", "c_name", "seg", "c_acctbal"])
     return back.select(
         F.col("c_custkey").cast("long").alias("c_custkey"),
         "c_name",

@@ -123,7 +123,6 @@ def get_spark(app_name: str = "fits2db_spark", shuffle_partitions: int | None = 
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -5,13 +5,11 @@ FIELD declarations derived from the Spark schema (never inferred from row
 data — same declared-schema philosophy as the FITS ingest), TABLEDATA rows,
 and standard null handling (empty TD for SQL NULL).
 
-Spark-first shape: the per-partition body rows render DISTRIBUTED via
-``df.rdd.mapPartitions`` into XML fragments written as one text file per
-partition, with the header/footer documents tiny and driver-side; the
-single-document convenience path collects only when the caller asks for
-one file (bounded exports — a service response, not a bulk dump). At
-archive scale the fragment-per-partition layout concatenates in object
-storage, which is how TAP services stream large result sets.
+Spark-first shape, one writer (:func:`write_votable`): the body rows
+render on executors (``df.rdd.mapPartitions``), one text file of ``<TR>``
+lines per partition; the driver renders only the header and footer and
+streams the parts between them into one document, so no row is collected
+and any row count fits.
 
 Type map (Spark -> VOTable datatype):
   boolean->boolean  short->short  int->int  long->long
@@ -21,6 +19,10 @@ Type map (Spark -> VOTable datatype):
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
+import uuid
 from xml.sax.saxutils import escape, quoteattr
 
 from pyspark.sql import DataFrame
@@ -89,93 +91,64 @@ def votable_header(df: DataFrame, table_name: str = "results") -> str:
 VOTABLE_FOOTER = "      </TABLEDATA></DATA>\n    </TABLE>\n  </RESOURCE>\n</VOTABLE>\n"
 
 
-def write_votable_fragments(df: DataFrame, path: str, table_name: str = "results") -> None:
-    """Distributed export: one XML fragment file of <TR> rows per
-    partition under ``path/`` plus ``_header.xml`` / ``_footer.xml`` —
-    concatenate header + sorted fragments + footer for the document.
-    This is the 100 TB shape: no driver collect, rows render where they
-    live."""
-    import os
+def write_votable(df: DataFrame, path: str, table_name: str = "results") -> None:
+    """Write ``df`` as one complete VOTable document at ``path``.
 
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "_header.xml"), "w") as f:
-        f.write(votable_header(df, table_name))
-    with open(os.path.join(path, "_footer.xml"), "w") as f:
-        f.write(VOTABLE_FOOTER)
-    df.rdd.mapPartitions(lambda rows: ("\n".join(_row_xml(r) for r in rows),)).filter(
+    Executors render each partition's ``<TR>`` rows into a hidden
+    directory beside ``path`` on the driver's local filesystem; the driver
+    then streams the header, the ``part-*`` files in partition order and
+    the footer into a hidden file in the same directory and renames it
+    onto ``path``. The driver holds no rows, so its memory does not grow
+    with the row count. A column without a VOTable mapping raises
+    :class:`ValueError`, and a directory of ``path`` that does not exist
+    raises :class:`FileNotFoundError`, before any Spark job. A failed
+    render or write leaves no file at ``path`` (an existing one is
+    replaced only by a complete document) and no temporary file or
+    directory behind; a part file the driver cannot see (executors on
+    other hosts) fails the write instead of dropping its rows."""
+    header = votable_header(df, table_name).encode()
+    parent, name = os.path.split(os.path.abspath(path))
+    if not os.path.isdir(parent):
+        raise FileNotFoundError(f"no directory {parent!r} for the VOTable document")
+    stem = os.path.join(parent, f".{name}.{uuid.uuid4().hex}")
+    parts, tmp = stem + ".parts", stem + ".tmp"
+    rows = df.rdd.mapPartitions(lambda it: ("\n".join(_row_xml(r) for r in it),)).filter(
         lambda s: s
-    ).saveAsTextFile(os.path.join(path, "rows"))
-
-
-def votable_string(
-    df: DataFrame,
-    table_name: str = "results",
-    limit: int | None = 10_000,
-    unbounded: bool = False,
-    truncate: bool = False,
-) -> str:
-    """Single-document convenience (service responses): collects the rows,
-    so the result is BOUNDED by default (``limit=10_000``). A service
-    wrapper that forgets to pass a limit must not be able to OOM the
-    driver: ``limit=None`` raises unless the caller states
-    ``unbounded=True`` explicitly.
-
-    Overflow is NEVER silent (r6 advice: the CLI single-document path was
-    truncating >10k-row exports to the first 10,000 rows with no error):
-    ``limit + 1`` rows are collected, and if the input exceeds the bound
-    the call raises unless ``truncate=True`` opts in — in which case the
-    document carries an ``<INFO name="QUERY_STATUS" value="OVERFLOW"/>``
-    marker, the standard VOTable/TAP overflow signal. Bulk exports belong
-    to :func:`write_votable_fragments` (distributed, no collect)."""
-    if limit is None and not unbounded:
-        raise ValueError(
-            "votable_string(limit=None) collects the whole DataFrame on the"
-            " driver; pass unbounded=True to confirm, or use"
-            " write_votable_fragments() for bulk export"
-        )
-    if limit is not None and limit < 1:
-        # limit=0 would collect limit+1=1 row and then report a misleading
-        # "exceeds limit=0" overflow for ANY non-empty input; negative values
-        # would surface as an opaque AnalysisException from df.limit().
-        raise ValueError(f"votable_string: limit must be >= 1, got {limit}")
-    overflow = False
-    if limit is not None:
-        rows = df.limit(limit + 1).collect()
-        if len(rows) > limit:
-            if not truncate:
-                raise ValueError(
-                    f"votable_string: result exceeds limit={limit} rows;"
-                    " raise the limit, pass truncate=True to emit the first"
-                    f" {limit} rows with a VOTable OVERFLOW marker, or use"
-                    " write_votable_fragments() for a complete distributed"
-                    " export"
-                )
-            overflow = True
-            rows = rows[:limit]
-    else:
-        rows = df.collect()
-    body = "\n".join(_row_xml(r) for r in rows)
-    doc = votable_header(df, table_name) + body + ("\n" if body else "") + VOTABLE_FOOTER
-    if overflow:
-        doc = doc.replace(
-            "  <RESOURCE>\n",
-            '  <RESOURCE>\n    <INFO name="QUERY_STATUS" value="OVERFLOW"/>\n',
-            1,
-        )
-    return doc
+    )
+    try:
+        rows.saveAsTextFile("file:" + parts)
+        # one part per partition, an empty one included; part-00000 ...
+        # part-99999, then part-100000: shorter names first
+        names = sorted((n for n in os.listdir(parts) if n.startswith("part-")),
+                       key=lambda n: (len(n), n))
+        if len(names) != rows.getNumPartitions():
+            raise OSError(f"{parts}: {len(names)} part files for "
+                          f"{rows.getNumPartitions()} partitions")
+        with open(tmp, "xb") as out:
+            out.write(header)
+            for n in names:
+                with open(os.path.join(parts, n), "rb") as f:
+                    shutil.copyfileobj(f, out)
+            out.write(VOTABLE_FOOTER.encode())
+        os.replace(tmp, path)
+    finally:
+        shutil.rmtree(parts, ignore_errors=True)
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
 
 
 def read_votable_tabledata(spark, path: str, names: list[str]):
-    """Read back the TABLEDATA row stream :func:`write_votable_fragments`
-    emits: one ``<TR><TD>..</TD>..</TR>`` per line, parsed entirely with
+    """Read back the rows of a document :func:`write_votable` wrote: it
+    puts one ``<TR><TD>..</TD>..</TR>`` per line, and only those lines
+    hold ``<TR>``, so the header and footer drop out. Parsed entirely with
     Catalyst expressions (``spark.read.text`` + ``regexp_extract_all``) —
     splittable, linear, no Python on the data path. Cells come back as
     strings in FIELD order under the given ``names``; an empty TD (the
     VOTable null convention) becomes SQL NULL; the five XML entities the
     writer escapes are unescaped. Callers cast columns to their declared
-    FIELD types. This is the fragment/concatenated-document fast path —
-    fully general VOTable documents (BINARY2 serialization, nested
-    RESOURCEs) belong to Spark's xml datasource."""
+    FIELD types. Fully general VOTable documents (BINARY2 serialization,
+    nested RESOURCEs, rows across lines) belong to Spark's xml
+    datasource."""
     from pyspark.sql import functions as F
 
     lines = spark.read.text(path).filter(F.col("value").contains("<TR>"))

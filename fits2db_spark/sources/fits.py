@@ -723,7 +723,6 @@ def read_fits(
     spark: SparkSession,
     path: str | list[str],
     hdu: int | str = 1,
-    schema: StructType | None = None,
     verify_checksum: bool = False,
 ) -> DataFrame:
     """Read one HDU of each FITS file — a file, directory or glob, or a
@@ -735,18 +734,17 @@ def read_fits(
     loads its rows; a 2-D or 3-D IMAGE loads one (x, y[, z], val) row per
     pixel or voxel with BSCALE/BZERO applied and BLANK pixels null.
     :func:`plan_fits` reads every file's header on the driver, requires one
-    HDU kind across the files and declares the schema (``schema`` if given,
-    else the first file's header; never inferred from row data); columns
-    bind by name. A file over Spark's ``binaryFile`` length limit is
-    rejected in the plan, before any Spark job. ``verify_checksum=True``
-    validates the public CHECKSUM/DATASUM convention on every HDU of every
-    file, executor-side before decode, and fails the job on the first
-    corrupt HDU (files without the keywords pass — unprotected is not
-    corrupt).
+    HDU kind across the files and declares the schema from the first
+    file's header (never inferred from row data); columns bind by name. A
+    file over Spark's ``binaryFile`` length limit is rejected in the plan,
+    before any Spark job. ``verify_checksum=True`` validates the public
+    CHECKSUM/DATASUM convention on every HDU of every file, executor-side
+    before decode, and fails the job on the first corrupt HDU (files
+    without the keywords pass — unprotected is not corrupt).
     """
     from ..session import ensure_runtime_confs
 
-    plan = plan_fits(path, hdu, schema)
+    plan = plan_fits(path, hdu)
     schema, kind = plan.schema, plan.kind
     limit = int(spark.conf.get(_BINARY_FILE_MAX_LENGTH))
     for p, _ in plan.files:
@@ -1286,8 +1284,11 @@ def verify_checksums(blob: bytes) -> list[dict]:
         cards = h.cards
         data = blob[h.data_off : h.end]
         entry: dict = {"hdu": h.index, "extname": cards.get("EXTNAME")}
+        datasum = cards.get("DATASUM")
         entry["datasum_ok"] = (
-            int(cards["DATASUM"]) == _sum32(data) if "DATASUM" in cards else None
+            None if datasum is None
+            # a DATASUM value that is no longer a number was damaged
+            else str(datasum).strip().isdigit() and int(datasum) == _sum32(data)
         )
         if "CHECKSUM" in cards:
             entry["checksum_ok"] = _sum32(blob[h.header_off : h.end]) == 0xFFFFFFFF

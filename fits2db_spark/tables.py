@@ -135,7 +135,9 @@ _CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def warm_cache(spark: SparkSession, sf_dir: str, partitions: int | None = None) -> None:
-    """Cache all fixture tables, repartitioned for CPU parallelism.
+    """Cache all fixture tables, repartitioned for CPU parallelism: into
+    ``partitions``, by default the session's ``defaultParallelism`` (its
+    core count) capped at 32.
 
     The single-file fixtures have ONE parquet row group each (verified), so
     file-split tuning cannot parallelize the scan — an explicit repartition
@@ -143,7 +145,7 @@ def warm_cache(spark: SparkSession, sf_dir: str, partitions: int | None = None) 
     row-group layout (any production table) this is unnecessary: scan
     parallelism comes from splits, and this function is simply not called.
     """
-    n_parts = partitions or min(int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8), 32)
+    n_parts = partitions or min(spark.sparkContext.defaultParallelism, 32)
     # Fact tables are repartitioned BY KEY, not round-robin: the cached
     # InMemoryRelation then reports hashpartitioning on the table's primary
     # join/group key, and Catalyst elides the exchange in key-aligned joins

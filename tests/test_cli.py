@@ -222,17 +222,21 @@ def test_cli_votable_out(fits_file, tmp_path, spark):
     assert len(root.findall(".//vo:TR", ns)) == 3
 
 
-def test_cli_rejects_nonpositive_votable_limit(capsys):
-    """r8 ADVICE: --votable-limit must be >= 1 (argparse-level rejection)."""
-    import pytest
+def test_cli_votable_out_writes_every_row_of_a_large_input(tmp_path, spark):
+    """No row bound: an input over 10,000 rows (the old single-document
+    cap) writes one document holding every row, in input order."""
+    import xml.etree.ElementTree as ET
 
-    from fits2db_spark.cli import build_parser
-
-    p = build_parser()
-    for bad in ("0", "-3"):
-        with pytest.raises(SystemExit):
-            p.parse_args(["x.fits", "--table", "t", "--votable-limit", bad])
-    assert "must be >= 1" in capsys.readouterr().err
+    n = 12_345
+    blob = write_fits_bintable([("id", "K", list(range(n)))])
+    (tmp_path / "big.fits").write_bytes(blob)
+    out = tmp_path / "big.vot"
+    rc = run([str(tmp_path / "big.fits"), "--table", "big", "--votable-out", str(out)],
+             spark=spark)
+    assert rc == 0
+    ns = {"vo": "http://www.ivoa.net/xml/VOTable/v1.3"}
+    trs = ET.parse(out).getroot().findall(".//vo:TR", ns)
+    assert [int(tr[0].text) for tr in trs] == list(range(n))
 
 
 def test_cli_rejects_nonpositive_jdbc_numbers_before_any_sink(tmp_path, spark, capsys):
@@ -379,20 +383,22 @@ def test_cli_sink_jobs_keep_the_callers_job_group(fits_file, tmp_path, spark):
 
 
 def test_cli_failed_sink_does_not_stop_the_others(fits_file, tmp_path, spark):
-    """A VOTable over its --votable-limit fails; the CSV and Derby sinks
-    still load every row, and the error names the failed and the completed
-    sinks."""
+    """A VOTable sink whose target lies under a regular file fails; the
+    CSV and Derby sinks still load every row, and the error names the
+    failed and the completed sinks."""
     url = f"jdbc:derby:{tmp_path}/fail_db;create=true"
     csv_dir = str(tmp_path / "csv")
+    (tmp_path / "plain").write_text("")
+    target = tmp_path / "plain" / "t.vot"
     with pytest.raises(ExceptionGroup, match="failed: votable; completed: jdbc, csv") as exc:
         run(
-            [fits_file, "--table", "stars", "--votable-out", str(tmp_path / "t.vot"),
-             "--votable-limit", "1", "--csv-out", csv_dir, "--jdbc-url", url],
+            [fits_file, "--table", "stars", "--votable-out", str(target),
+             "--csv-out", csv_dir, "--jdbc-url", url],
             spark=spark,
         )
     [err] = exc.value.exceptions
-    assert isinstance(err, ValueError) and "exceeds limit=1" in str(err)
-    assert not (tmp_path / "t.vot").exists()
+    assert "no directory" in str(err)
+    assert not target.exists()
     assert _csv_rows(csv_dir) == CSV_ROWS
     assert _derby_rows(spark, url, "stars") == ROWS
 
@@ -407,9 +413,10 @@ def test_cli_releases_the_shared_frame(fits_file, tmp_path, spark):
             "--jdbc-url", url]
     assert run([*argv, "--mode", "create"], spark=spark) == 0
     assert _cached_rdd_ids(spark) == before
+    (tmp_path / "plain").write_text("")
     with pytest.raises(ExceptionGroup, match="failed: votable"):
-        run([*argv, "--mode", "append", "--votable-out", str(tmp_path / "t.vot"),
-             "--votable-limit", "1"], spark=spark)
+        run([*argv, "--mode", "append", "--votable-out", str(tmp_path / "plain" / "t.vot")],
+            spark=spark)
     assert _cached_rdd_ids(spark) == before
     assert len(_derby_rows(spark, url, "stars")) == 6
 

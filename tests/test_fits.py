@@ -1093,7 +1093,7 @@ def test_format_tdisp_renders_display_formats(spark):
 
 
 def test_votable_field_carries_fits_unit(spark, tmp_path):
-    from fits2db_spark.sinks.votable import votable_string
+    from fits2db_spark.sinks.votable import write_votable
     from fits2db_spark.sources.fits import read_fits, write_fits_bintable
 
     blob = write_fits_bintable(
@@ -1101,5 +1101,6 @@ def test_votable_field_carries_fits_unit(spark, tmp_path):
     )
     (tmp_path / "v.fits").write_bytes(blob)
     df = read_fits(spark, str(tmp_path / "v.fits"))
-    xml = votable_string(df)
+    write_votable(df, str(tmp_path / "v.vot"))
+    xml = (tmp_path / "v.vot").read_text()
     assert 'unit="erg/s/cm^2"' in xml and 'name="flux"' in xml

@@ -12,6 +12,7 @@ from fits2db_spark.sources.fits import (
     FitsFormatError,
     decode_hdu,
     parse_bintable_header,
+    plan_fits,
     read_fits,
     write_fits_asciitable,
     write_fits_bintable,
@@ -156,7 +157,7 @@ def test_declared_schema_may_widen_and_reorder(spark, tmp_path):
     # a caller-declared schema may widen, never narrow
     narrow = StructType([StructField("ID", IntegerType()), StructField("V", IntegerType())])
     with pytest.raises(FitsFormatError, match="'V' is float, declared int"):
-        read_fits(spark, str(tmp_path / "w.fits"), schema=narrow)
+        plan_fits(str(tmp_path / "w.fits"), schema=narrow)
 
 
 def test_image_blank_in_a_later_file_makes_val_nullable(spark, tmp_path):

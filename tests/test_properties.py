@@ -3,7 +3,7 @@ algebraic laws the engine must preserve regardless of data."""
 
 import numpy as np
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -214,6 +214,8 @@ def test_wav_roundtrip_property(samples, rate):
     ),
     flip=st.integers(min_value=0, max_value=10**9),
 )
+# the flip lands in the second HDU's DATASUM value, which stops being a number
+@example(hdus=[[0]], flip=3690)
 @settings(deadline=None, max_examples=30)
 def test_checksum_stamp_verify_tamper_property(hdus, flip):
     from fits2db_spark.sources.fits import (

@@ -199,20 +199,15 @@ def test_global_shuffle_is_deterministic_and_balanced(spark):
 def test_votable_tabledata_reader_escaping_and_nulls(spark, tmp_path):
     """read_votable_tabledata inverts the writer's escaping and the
     empty-TD null convention, including XML-special characters."""
-    from fits2db_spark.sinks.votable import (
-        read_votable_tabledata,
-        write_votable_fragments,
-    )
+    from fits2db_spark.sinks.votable import read_votable_tabledata, write_votable
 
     df = spark.createDataFrame(
         [(1, "a<b&c>d", "x"), (2, 'q"u\'o', None), (3, "", "y")],
         "k int, s string, maybe string",
     ).coalesce(1)
-    out = str(tmp_path / "vot")
-    write_votable_fragments(df, out)
-    back = read_votable_tabledata(
-        spark, f"{out}/rows/part-*", ["k", "s", "maybe"]
-    )
+    out = str(tmp_path / "t.vot")
+    write_votable(df, out)
+    back = read_votable_tabledata(spark, out, ["k", "s", "maybe"])
     rows = {int(r.k): r for r in back.collect()}
     assert rows[1].s == "a<b&c>d" and rows[1].maybe == "x"
     assert rows[2].s == 'q"u\'o' and rows[2].maybe is None
